@@ -116,24 +116,32 @@ object Bench {
     // polish stops). Both caps are disclosed in the JSON line.
     val rerunCap = 15
     val skipped = scala.collection.mutable.ArrayBuffer[String]()
+    // a query that throws is never timed: it is listed under "failed" with
+    // its error class and kept out of "queries" and the total. NonFatal
+    // only, as in timeOnce.
+    val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
     val sweep = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1)))
       .sortBy(_._1)
     val results = sweep.flatMap { case (name, fn) =>
       if (budgetOn && elapsedSec > budgetSec) { skipped += name; None }
       else {
-        def once(): Double = {
+        def once(): Either[Throwable, Double] = {
           val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-          (System.nanoTime() - t0) / 1e9
+          try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+          catch { case scala.util.control.NonFatal(e) => Left(e) }
         }
-        val t1 = once()
-        val mayRerun = reruns < rerunCap &&
-          !(budgetOn && elapsedSec > 0.6 * budgetSec)
-        val t = if (t1 > retryThreshold(name) && mayRerun) {
-          reruns += 1; math.min(t1, once())
-        } else t1
-        Some(name -> t)
+        once() match {
+          case Left(e) =>
+            failed += name -> e.getClass.getName; None
+          case Right(t1) =>
+            val mayRerun = reruns < rerunCap &&
+              !(budgetOn && elapsedSec > 0.6 * budgetSec)
+            val t = if (t1 > retryThreshold(name) && mayRerun) {
+              reruns += 1; once().fold(_ => t1, math.min(t1, _))
+            } else t1
+            Some(name -> t)
+        }
       }
     }
     val canaryLast = SparkEntry.queries.get(canaryKey).map(timeOnce)
@@ -164,7 +172,11 @@ object Bench {
       s""","budget_sec":$budgetSec,"n_skipped":${skipped.size},"skipped":${
         skipped.map("\"" + _ + "\"").mkString("[", ",", "]")}"""
     else ""
-    println(s"""{"metric":"total","value":$total,"unit":"sec","rerun":$reruns$canary,"io_rows":$warm$partial$skipJson,"queries":$qs,"sf":"$sfDir"}""")
+    val failJson = if (failed.nonEmpty)
+      s""","n_failed":${failed.size},"failed":${failed.map { case (k, c) =>
+        "\"" + k + "\":\"" + c + "\"" }.mkString("{", ",", "}")}"""
+    else ""
+    println(s"""{"metric":"total","value":$total,"unit":"sec","rerun":$reruns$canary,"io_rows":$warm$partial$skipJson$failJson,"queries":$qs,"sf":"$sfDir"}""")
     // The harness keeps only the last ~2KB of output; the full per-query line
     // above (~4KB at 116 queries) gets truncated mid-JSON there. Emit a second,
     // compact summary line (total + 10 slowest queries, well under 1KB) LAST so
@@ -174,7 +186,7 @@ object Bench {
       .mkString("{", ",", "}")
     val fTotal = f"$total%.2f"
     val skipN = if (skipped.nonEmpty) s""","n_skipped":${skipped.size}""" else ""
-    println(s"""{"metric":"total","value":$fTotal,"unit":"sec","n":${results.size},"rerun":$reruns$canary,"n_io_rows":${ioRows.size}$partial$skipN,"slowest":$slowest,"sf":"$sfDir"}""")
+    println(s"""{"metric":"total","value":$fTotal,"unit":"sec","n":${results.size},"rerun":$reruns$canary,"n_io_rows":${ioRows.size}$partial$skipN$failJson,"slowest":$slowest,"sf":"$sfDir"}""")
     spark.stop()
   }
 }

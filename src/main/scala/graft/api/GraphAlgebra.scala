@@ -1164,32 +1164,16 @@ object GraphAlgebra {
 
   /** Transitive closure of a seed set along directed (from, to) flow rows:
     * returns the ids reachable from ANY seed, INCLUDING the seeds
-    * themselves. Plain frontier expansion — per hop one join of the
-    * frontier into the checkpointed flow, anti-joined against the visited
-    * set so each vertex is expanded exactly once; the frontier side is
-    * broadcast-GATED on its (already-counted) row count. Total work =
-    * O(|reached edges|) across all hops — the same shape as [[bfsHops]]
-    * but set-seeded and distance-free.
+    * themselves. Every seed shares lane 0 of [[frontierHops]], so the loop
+    * expands each vertex exactly once and runs until the frontier empties
+    * (no hop cap). Total work = O(|reached edges|) across all hops.
     */
   def reachClosure(seeds: DataFrame, flow: DataFrame,
                    broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val fl = Ckpt.cpByKey(flow.select(col("from"), col("to")), col("from"))
-    var visited = seeds.select(col("id")).distinct().cp()
-    var frontier = visited
-    var frontierRows = frontier.count()
-    while (frontierRows > 0) {
-      val next = fl.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("from") === col("id"))
-        .select(col("to").as("id")).distinct()
-        .join(visited, Seq("id"), "left_anti")
-        .cp()
-      frontierRows = next.count()
-      if (frontierRows > 0) {
-        visited = visited.unionAll(next).cp()
-        frontier = next
-      }
-    }
-    visited
+    val adj = flow.select(col("from").as("a"), col("to").as("b")).cp()
+    val seed = seeds.select(col("id"), lit(1L).as("mask")).distinct().cp()
+    frontierHops(adj, seed, seed.count(), Int.MaxValue, broadcastMaxRows)
+      ._1.select(col("id"))
   }
 
   /** Longest-path levels of a DAG given as (src, dst) rows: level(v) = 0
@@ -1231,153 +1215,105 @@ object GraphAlgebra {
     levels
   }
 
-  /** Bounded BFS WITHOUT GraphX: frontier expansion in pure DataFrames —
-    * per hop one broadcast join of the (small) frontier into the
-    * checkpointed adjacency, anti-join against the visited set, stop early
-    * when the frontier empties. Output (id, dist) for reachable vertices,
-    * dist = minimum hop count (identical to GraphX ShortestPaths and the
-    * recursive BFS oracle).
-    *
-    * Scale shape: the frontier broadcast is GATED per hop on the frontier
-    * row count — which is free, because the loop already counts the
-    * checkpointed frontier to detect termination. A small-world frontier
-    * that balloons toward |V| automatically degrades to a shuffle join
+  /** The one frontier loop behind [[bfsHops]], [[multiBfsHops]] and
+    * [[reachClosure]]: MS-BFS over up to 64 bit lanes (Then et al., "The
+    * More the Merrier: Efficient Multi-Source BFS", VLDB 2015). State is
+    * keyed by VERTEX with one BIGINT whose bit i records "lane i has
+    * reached this vertex". Per hop: one join of the frontier into the
+    * checkpointed (a, b) adjacency, a bit_or of the reaching lanes per
+    * neighbor (the mask aggregate folds map-side), and the first-reach
+    * bits `contrib & ~visited` — so per (lane, vertex) exactly one hop
+    * emits the bit. The frontier and visited sides are broadcast-GATED on
+    * their row counts, which the loop pays anyway to detect termination;
+    * a frontier that balloons toward |V| degrades to a shuffle join
     * instead of OOMing on the hint.
-    */
-  /** MULTI-source BFS hop distances: [[bfsHops]] generalized to a frame of
-    * source vertices — one frontier loop computes distances from EVERY
-    * source simultaneously (the landmark pattern: k-source BFS costs one
-    * traversal, not k). `sources` must expose a `src` column.
     *
-    * With ≤ [[MsBfsMaxSources]] sources (the landmark ops pass 8), the
-    * traversal runs the MS-BFS BITMASK formulation (Then et al., "The
-    * More the Merrier: Efficient Multi-Source BFS", VLDB 2015): state is
-    * keyed by VERTEX with one BIGINT whose bit i records "source i has
-    * reached this vertex", instead of one (src, id) row per pair. The
-    * per-hop expansion then joins one row per frontier VERTEX (not per
-    * reached pair — up to k× fewer rows once the sources' frontiers
-    * overlap, which on a small-world graph is every hop past the first),
-    * the dedup/agg keys on the vertex id alone, and the visited state is
-    * ≤ |V| rows instead of ≤ k·|V|. First-reach bits are
-    * `contrib & ~visited`, so per (source, vertex) exactly one hop emits
-    * the bit — the exploded (src, id, dist) output is row-identical to
-    * the pair-keyed spelling (ApiSpec pins it). Above the source cap (or
-    * with duplicate source rows) the pair-keyed loop below runs unchanged.
+    * `seed` is the checkpointed hop-0 (id, mask) frame with `seedRows`
+    * rows. Returns the final visited (id, mask) frame and the per-hop
+    * first-reach frames (id, dist, mask), hop 1 first. Stops after
+    * `maxHops` hops or when the frontier empties.
     */
-  val MsBfsMaxSources: Int = 60
-
-  def multiBfsHops(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
-                   broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    // probe the source list: landmark frames are tiny by construction
-    // (orderBy+limit), so the ≤(cap+1)-row collect is bounded driver
-    // state — the same accepted posture as the landmark limit itself
-    val probe = sources.select(col("src")).limit(MsBfsMaxSources + 1)
-      .collect().map(_.getLong(0)).toSeq
-    val ids = probe.distinct.sorted
-    if (probe.size > MsBfsMaxSources || ids.size != probe.size)
-      multiBfsHopsPairs(edgesBoth, sources, maxHops, broadcastMaxRows)
-    else {
-      val sess = edgesBoth.sparkSession
-      import sess.implicits._
-      val adj = edgesBoth.select(col("a"), col("b")).cp()
-      // bit i = the i-th source in sorted id order (any fixed order works;
-      // sorted makes the mapping deterministic and debuggable)
-      val bitsDf = ids.zipWithIndex.toDF("bsrc", "bit")
-      var visited = ids.zipWithIndex
-        .map { case (s, i) => (s, 1L << i) }.toDF("id", "mask").cp()
-      var frontier = visited
-      var frontierRows = ids.size.toLong
-      var visitedRows = frontierRows // upper bound is enough for the gate
-      var h = 1L
-      var levels = Seq.empty[DataFrame] // (id, dist, mask) first-reach rows
-      var done = frontierRows == 0
-      while (h <= maxHops && !done) {
-        // expansion: one row per (frontier vertex, neighbor); bit_or folds
-        // the reaching-source sets map-side (the mask aggregate is the
-        // partial-agg-friendly analogue of the pair spelling's distinct)
-        val contrib = adj
-          .join(hinted(frontier, frontierRows, broadcastMaxRows),
-            col("a") === col("id"))
-          .groupBy(col("b").as("nid"))
-          .agg(expr("bit_or(mask)").as("cmask"))
-        val fresh = contrib
-          .join(hinted(visited, visitedRows, broadcastMaxRows),
-            col("nid") === col("id"), "left")
-          .select(col("nid").as("id"),
-            col("cmask").bitwiseAND(
-              coalesce(col("mask"), lit(0L)).bitwiseXOR(lit(-1L)))
-              .as("mask"))
-          .filter(col("mask") =!= 0L)
-          .cp()
-        frontierRows = fresh.count()
-        if (frontierRows == 0) done = true
-        else {
-          levels = levels :+ fresh.select(col("id"),
-            lit(h).as("dist"), col("mask"))
-          visited = visited.unionAll(fresh).groupBy(col("id"))
-            .agg(expr("bit_or(mask)").as("mask")).cp()
-          visitedRows += frontierRows
-          frontier = fresh
-          h += 1
-        }
-      }
-      // explode masks back to (src, id, dist): ≤ k tiny bit rows against
-      // the first-reach frames — linear, map-side, once at the END (never
-      // inside the hop loop). The hop-0 self rows come from the RAW probe
-      // list, preserving the pair spelling's duplicate-source behavior.
-      val zero = probe.map(s => (s, s, 0L)).toDF("src", "id", "dist")
-      if (levels.isEmpty) zero
-      else {
-        val expl = levels.reduce(_ unionAll _)
-          .join(broadcast(bitsDf),
-            expr("(mask & shiftleft(cast(1 as bigint), bit)) != 0"))
-          .select(col("bsrc").as("src"), col("id"), col("dist"))
-        zero.unionAll(expl)
-      }
-    }
-  }
-
-  /** The pair-keyed [[multiBfsHops]] spelling — state is one (src, id)
-    * row per reached pair; the per-hop expansion, first-visit anti-join
-    * and broadcast gating are bfsHops' unchanged (the frontier row budget
-    * counts (src, id) pairs, which is exactly what the broadcast would
-    * ship). Kept as the fallback for > [[MsBfsMaxSources]] or duplicate
-    * sources, where the bitmask packing does not apply.
-    */
-  private[graft] def multiBfsHopsPairs(edgesBoth: DataFrame, sources: DataFrame,
-                                       maxHops: Int,
-                                       broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val adj = edgesBoth.select(col("a"), col("b")).cp()
-    var dist = sources.select(col("src"), col("src").as("id"),
-      lit(0L).as("dist")).cp()
-    var frontier = dist.select(col("src"), col("id"))
-    var frontierRows = frontier.count()
+  private def frontierHops(adj: DataFrame, seed: DataFrame, seedRows: Long,
+                           maxHops: Int, broadcastMaxRows: Long)
+      : (DataFrame, Seq[DataFrame]) = {
+    var visited = seed
+    var frontier = seed
+    var frontierRows = seedRows
+    var visitedRows = seedRows // upper bound is enough for the gate
     var h = 1L
-    var done = frontierRows == 0
-    while (h <= maxHops && !done) {
-      // NOTE (r15): distinct-FIRST is deliberate — the partial aggregate
-      // collapses the Σdeg expansion map-side before any join, and an
-      // A/B of the anti-before-distinct spelling (broadcast visited set)
-      // measured consistently SLOWER here (the per-hop broadcast build of
-      // the growing visited frame cost more than the smaller dedup saved;
-      // the σ-folding sibling multiBfsSigma is where that reorder wins)
-      val next = adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
-        .select(col("src"), col("b").as("id")).distinct()
-        .join(dist.select(col("src"), col("id")), Seq("src", "id"),
-          "left_anti")
-        .cp()
-      frontierRows = next.count()
-      if (frontierRows == 0) done = true
-      else {
-        dist = dist
-          .unionAll(next.select(col("src"), col("id"), lit(h).as("dist")))
-          .cp()
-        frontier = next.select(col("src"), col("id"))
+    var levels = Seq.empty[DataFrame]
+    while (h <= maxHops && frontierRows > 0) {
+      val fresh = frontierHop(adj, frontier, frontierRows, visited,
+        visitedRows, broadcastMaxRows).cp()
+      frontierRows = fresh.count()
+      if (frontierRows > 0) {
+        levels = levels :+ fresh.select(col("id"), lit(h).as("dist"),
+          col("mask"))
+        visited = visited.unionAll(fresh).groupBy(col("id"))
+          .agg(expr("bit_or(mask)").as("mask")).cp()
+        visitedRows += frontierRows
+        frontier = fresh
         h += 1
       }
     }
-    dist
+    (visited, levels)
+  }
+
+  /** One hop of [[frontierHops]]: the (id, mask) rows whose mask holds
+    * the lanes that reach `id` for the first time. Its own function so
+    * `tools.DumpHopPlan` explains the exact plan the loop runs.
+    */
+  private[graft] def frontierHop(adj: DataFrame, frontier: DataFrame,
+                                 frontierRows: Long, visited: DataFrame,
+                                 visitedRows: Long,
+                                 broadcastMaxRows: Long): DataFrame =
+    adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
+        col("a") === col("id"))
+      .groupBy(col("b").as("nid"))
+      .agg(expr("bit_or(mask)").as("cmask"))
+      .join(hinted(visited, visitedRows, broadcastMaxRows),
+        col("nid") === col("id"), "left")
+      .select(col("nid").as("id"),
+        col("cmask").bitwiseAND(
+          coalesce(col("mask"), lit(0L)).bitwiseXOR(lit(-1L)))
+          .as("mask"))
+      .filter(col("mask") =!= 0L)
+
+  /** MULTI-source BFS hop distances: [[bfsHops]] generalized to a frame of
+    * source vertices — the landmark pattern, where k-source BFS costs one
+    * traversal, not k. `sources` must expose a `src` column. Output
+    * (src, id, dist) for every (source, reachable vertex) pair.
+    *
+    * The source ids are collected to the driver (landmark frames are tiny
+    * by construction: orderBy + limit). The distinct ids, in sorted order,
+    * are dealt into 64-lane passes of [[frontierHops]] over the one
+    * checkpointed adjacency: ⌈|S|/64⌉ sequential passes, one lane per
+    * source, so the landmark ops' 8 sources run in one pass. Each pass's
+    * first-reach masks are exploded back to (src, id, dist) once at the
+    * END, never inside the hop loop. The hop-0 self rows come from the raw
+    * source list, so a duplicated source row yields a duplicated dist-0
+    * row and nothing else.
+    */
+  def multiBfsHops(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
+                   broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+    val sess = edgesBoth.sparkSession
+    import sess.implicits._
+    val raw = sources.select(col("src")).collect().map(_.getLong(0)).toSeq
+    val adj = edgesBoth.select(col("a"), col("b")).cp()
+    val passes = raw.distinct.sorted.grouped(64).toList.flatMap { ids =>
+      val lanes = ids.zipWithIndex
+      val seed = lanes.map { case (s, i) => (s, 1L << i) }
+        .toDF("id", "mask").cp()
+      val (_, levels) =
+        frontierHops(adj, seed, ids.size, maxHops, broadcastMaxRows)
+      levels.reduceOption(_ unionAll _).map { reached =>
+        reached.join(broadcast(lanes.toDF("bsrc", "bit")),
+            expr("(mask & shiftleft(cast(1 as bigint), bit)) != 0"))
+          .select(col("bsrc").as("src"), col("id"), col("dist"))
+      }
+    }
+    val zero = raw.map(s => (s, s, 0L)).toDF("src", "id", "dist")
+    (zero +: passes).reduce(_ unionAll _)
   }
 
   /** [[multiBfsHops]] carrying Brandes path counts: per (src, id) the hop
@@ -1697,31 +1633,20 @@ object GraphAlgebra {
           .cast("long").as("c"))
   }
 
+  /** Bounded BFS WITHOUT GraphX: a single source on lane 0 of
+    * [[frontierHops]]. Output (id, dist) for reachable vertices, dist =
+    * minimum hop count (identical to GraphX ShortestPaths and the
+    * recursive BFS oracle).
+    */
   def bfsHops(edgesBoth: DataFrame, src: Long, maxHops: Int,
               broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     val s = edgesBoth.sparkSession
     import s.implicits._
     val adj = edgesBoth.select(col("a"), col("b")).cp()
-    var dist = Seq((src, 0L)).toDF("id", "dist").cp()
-    var frontier = dist.select(col("id"))
-    var frontierRows = 1L
-    var h = 1L
-    var done = false
-    while (h <= maxHops && !done) {
-      val next = adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
-        .select(col("b").as("id")).distinct()
-        .join(dist.select(col("id")), Seq("id"), "left_anti")
-        .cp()
-      frontierRows = next.count() // doubles as the termination check
-      if (frontierRows == 0) done = true
-      else {
-        dist = dist.unionAll(next.select(col("id"), lit(h).as("dist"))).cp()
-        frontier = next
-        h += 1
-      }
-    }
-    dist
+    val seed = Seq((src, 1L)).toDF("id", "mask").cp()
+    val (_, levels) = frontierHops(adj, seed, 1L, maxHops, broadcastMaxRows)
+    (Seq((src, 0L)).toDF("id", "dist") +:
+      levels.map(_.select(col("id"), col("dist")))).reduce(_ unionAll _)
   }
 
   /** Time-decayed popularity: score = Σ value · exp((day − max_day)/τ days),

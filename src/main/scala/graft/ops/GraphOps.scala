@@ -657,7 +657,8 @@ object GraphOps {
     * related-nodes scoring with set semantics).
     *
     * EXACT formulation — measured to be the exact lower bound at sf0.1
-    * (tools/ProfileJac.scala), but the pair join is deg² per customer, so a
+    * (`perfbench.Main --keys graph_jaccard_nodes --trace 1` re-measures
+    * it), but the pair join is deg² per customer, so a
     * 100× hub contributes 10,000× the pairs: at cluster scale use
     * [[graphJaccardApprox]], whose capped sampling bounds the per-customer
     * blow-up.

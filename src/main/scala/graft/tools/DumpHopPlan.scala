@@ -1,17 +1,22 @@
 package graft.tools
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Dev utility (r16): explain ONE multiBfsHops bitmask hop — the loop's
-  * per-hop subplan is hidden behind checkpoint leaves in the final query
-  * plan, so this dumps the expansion + first-reach step in isolation
-  * (feeds plans/r16/multibfs_hop_after.txt; the judge can check the
-  * vertex-keyed bit_or aggregate + mask projection claims against it).
+import graft.api.GraphAlgebra
+
+/** Dev utility: explain ONE hop of the shared frontier loop
+  * (`GraphAlgebra.frontierHop`, behind bfsHops, multiBfsHops and
+  * reachClosure). The loop's per-hop subplan is hidden behind checkpoint
+  * leaves in the final query plan, so this dumps the first hop of the
+  * 8-landmark pass in isolation: the vertex-keyed bit_or aggregate and the
+  * first-reach mask projection.
+  *
+  * Run: `sbt 'runMain graft.tools.DumpHopPlan <sf-dir>'`.
   */
 object DumpHopPlan {
   def main(args: Array[String]): Unit = {
-    val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
+    val sfDir = args.headOption
+      .getOrElse(sys.error("usage: DumpHopPlan <sf-dir>"))
     val spark = SparkSession.builder().master("local[4]")
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false")
@@ -24,19 +29,12 @@ object DumpHopPlan {
     val lm = graft.Tables.part(spark, sfDir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
       .collect().map(_.getLong(0)).toSeq
-    val frontier = lm.zipWithIndex.map { case (s, i) => (s, 1L << i) }
+    // hop 0 of a pass: frontier and visited are the same seed frame
+    val seed = lm.zipWithIndex.map { case (s, i) => (s, 1L << i) }
       .toDF("id", "mask").cp()
-    val visited = lm.zipWithIndex.map { case (s, i) => (s, 1L << i) }
-      .toDF("vid", "vmask").cp()
-    println("===== one multiBfsHops bitmask hop (expansion + first-reach) =====")
-    adj.join(broadcast(frontier), $"a" === $"id")
-      .groupBy($"b".as("nid")).agg(expr("bit_or(mask)").as("cmask"))
-      .join(broadcast(visited), $"nid" === $"vid", "left")
-      .select($"nid".as("oid"),
-        $"cmask".bitwiseAND(coalesce($"vmask", lit(0L))
-          .bitwiseXOR(lit(-1L))).as("newmask"))
-      .filter($"newmask" =!= 0L)
-      .explain("formatted")
+    println("===== one frontier hop (expansion + first-reach) =====")
+    GraphAlgebra.frontierHop(adj, seed, lm.size, seed, lm.size,
+      GraphAlgebra.BroadcastMaxRows).explain("formatted")
     spark.stop()
   }
 }

@@ -19,6 +19,20 @@ class GraphSpec extends SparkSpec {
   private val fixtureV = Seq(1L, 2L, 3L, 5L, 6L, 9L)
   private val fixtureE = Seq((1L, 2L), (2L, 3L), (5L, 6L))
 
+  /** The co-purchase graph as directed (a, b) rows, both directions. */
+  private def cpBoth: DataFrame = {
+    import spark.implicits._
+    val cp = GraphOps.copurchase(spark, sf).select($"a", $"b")
+    cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
+  }
+
+  /** The landmark frame the registry ops build: the n smallest part ids. */
+  private def landmarks(n: Int): DataFrame = {
+    import spark.implicits._
+    Tables.part(spark, sf).orderBy($"p_partkey").limit(n)
+      .select($"p_partkey".as("src"))
+  }
+
   test("GraphBridge.connectedComponents: min-label components on fixture") {
     import spark.implicits._
     val v = fixtureV.toDF("id")
@@ -339,19 +353,25 @@ class GraphSpec extends SparkSpec {
     assert(cp.filter(e => e._1 == 1L || e._2 == 1L).toSet.subsetOf(rows))
   }
 
-  test("graph_eccentricity: max-fold over the same landmark distances as closeness") {
+  /** GraphX ShortestPaths from one source over the co-purchase graph:
+    * (src, id, dist) for every part within `maxHops`, the source at 0.
+    * The witness for the landmark ops, independent of GraphAlgebra's
+    * frontier loop.
+    */
+  private def graphxHops(src: Long, maxHops: Int): Seq[(Long, Long, Long)] = {
     import spark.implicits._
+    GraphBridge.shortestHops(spark, Tables.part(spark, sf).select($"p_partkey"),
+        cpBoth, src, maxHops)
+      .collect().map(r => (src, r.getLong(0), r.getLong(1))).toSeq
+  }
+
+  test("graph_eccentricity: max-fold over the same landmark distances as closeness") {
     val ecc = q("graph_eccentricity").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(ecc.nonEmpty)
     val lm = Tables.part(spark, sf).select("p_partkey").collect()
       .map(_.getLong(0)).sorted.take(8)
-    val cpDf = graft.ops.GraphOps.copurchase(spark, sf).select($"a", $"b")
-    val both = cpDf.unionAll(cpDf.select($"b".as("a"), $"a".as("b")))
-    val perSource = lm.flatMap { src =>
-      graft.api.GraphAlgebra.bfsHops(both, src, 6).collect()
-        .map(r => (src, r.getLong(0), r.getLong(1)))
-    }
+    val perSource = lm.flatMap(src => graphxHops(src, 6))
     val exp = perSource.groupBy(_._2).map { case (id, xs) =>
       id -> (xs.length.toLong, xs.map(_._3).max)
     }
@@ -361,20 +381,14 @@ class GraphSpec extends SparkSpec {
   }
 
   test("graph_closeness: one multi-source pass equals 8 single-source BFS runs") {
-    import spark.implicits._
     val got = q("graph_closeness").collect()
       .map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(got.nonEmpty)
     // landmark set = 8 smallest part ids
     val lm = Tables.part(spark, sf).select("p_partkey").collect()
       .map(_.getLong(0)).sorted.take(8)
-    // per-landmark single-source BFS through the already-proven bfsHops
-    val cpDf = graft.ops.GraphOps.copurchase(spark, sf).select($"a", $"b")
-    val both = cpDf.unionAll(cpDf.select($"b".as("a"), $"a".as("b")))
-    val perSource = lm.flatMap { src =>
-      graft.api.GraphAlgebra.bfsHops(both, src, 6).collect()
-        .map(r => (src, r.getLong(0), r.getLong(1)))
-    }
+    // per-landmark single-source BFS through GraphX ShortestPaths
+    val perSource = lm.flatMap(src => graphxHops(src, 6))
     val exp = perSource.filter(_._3 > 0).groupBy(_._2).map { case (id, xs) =>
       id -> (xs.length.toLong,
         xs.map(x => (2000000000L + x._3) / (2L * x._3)).sum)
@@ -752,5 +766,149 @@ class GraphSpec extends SparkSpec {
     val op = q("graph_betweenness").collect()
     assert(op.nonEmpty)
     assert(op.forall(_.getLong(2) >= 0L), "negative betweenness credit")
+  }
+
+  /** JVM replay of multi-source BFS over the collected co-purchase edge
+    * list: the expected multiBfsHops rows, sorted. One (s, s, 0) row per
+    * RAW source row, then every (s, id, dist) with 0 < dist <= maxHops per
+    * distinct source.
+    */
+  private def jvmMultiBfs(raw: Seq[Long], maxHops: Int): Seq[(Long, Long, Long)] = {
+    val nbrs = cpBoth.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
+    val reached = raw.distinct.flatMap { s =>
+      val dist = scala.collection.mutable.Map(s -> 0L)
+      var frontier = Seq(s)
+      var h = 1L
+      while (h <= maxHops && frontier.nonEmpty) {
+        frontier = frontier.flatMap(nbrs.getOrElse(_, Nil)).distinct
+          .filterNot(dist.contains)
+        frontier.foreach(dist(_) = h)
+        h += 1
+      }
+      dist.collect { case (id, d) if d > 0 => (s, id, d) }
+    }
+    (raw.map(s => (s, s, 0L)) ++ reached).sorted
+  }
+
+  private def multiBfsRows(sources: DataFrame, maxHops: Int): Seq[(Long, Long, Long)] =
+    api.GraphAlgebra.multiBfsHops(cpBoth, sources, maxHops).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+
+  test("multiBfsHops: 8 landmarks (one pass) equal a JVM BFS replay") {
+    val lm = landmarks(8)
+    val got = multiBfsRows(lm, 6)
+    assert(got === jvmMultiBfs(lm.collect().map(_.getLong(0)).toSeq, 6))
+    assert(got.exists(_._3 > 0))
+  }
+
+  test("multiBfsHops: 70 sources (two 64-lane passes, sign-bit lane) equal a JVM BFS replay") {
+    import spark.implicits._
+    // the 70 smallest ids with an edge, so lane 63 (the sign bit) of the
+    // first pass and the second pass both have vertices to reach
+    val ids = cpBoth.select($"a").distinct().collect().map(_.getLong(0))
+      .sorted.take(70).toSeq
+    assert(ids.size === 70)
+    val got = multiBfsRows(ids.toDF("src"), 3)
+    assert(got === jvmMultiBfs(ids, 3))
+    assert(got.exists(r => r._1 == ids(63) && r._3 > 0), "lane 63 reached nothing")
+    assert(got.exists(r => r._1 == ids(64) && r._3 > 0), "second pass reached nothing")
+  }
+
+  test("multiBfsHops: a duplicated source row duplicates only its dist-0 row") {
+    import spark.implicits._
+    val lm = landmarks(8).collect().map(_.getLong(0)).toSeq
+    val raw = lm :+ lm(2)
+    val got = multiBfsRows(raw.toDF("src"), 6)
+    assert(got === jvmMultiBfs(raw, 6))
+    assert(got.count(_ == ((lm(2), lm(2), 0L))) === 2)
+  }
+
+  test("reachClosure equals a JVM closure on random digraphs with cycles and isolated seeds") {
+    import spark.implicits._
+    (1 to 5).foreach { seed =>
+      val rnd = new scala.util.Random(seed)
+      val n = 10 + rnd.nextInt(6)
+      // a random digraph plus one forced cycle 0 -> 1 -> 2 -> 0
+      val edges = (Seq((0L, 1L), (1L, 2L), (2L, 0L)) ++
+        Seq.fill(2 * n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))).distinct
+      // two vertex seeds (one repeated) and one id that appears in no edge
+      val s1 = rnd.nextInt(n).toLong
+      val seeds = Seq(s1, rnd.nextInt(n).toLong, s1, 1000L + seed)
+      val out = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      val exp = scala.collection.mutable.Set[Long]()
+      def dfs(v: Long): Unit = if (exp.add(v)) out.getOrElse(v, Nil).foreach(dfs)
+      seeds.foreach(dfs)
+      val got = api.GraphAlgebra.reachClosure(seeds.toDF("id"),
+          edges.toDF("from", "to"))
+        .collect().map(_.getLong(0)).toSeq.sorted
+      assert(got === exp.toSeq.sorted, s"random digraph seed $seed")
+    }
+  }
+
+  test("brandesBackward (shared-DAG) deltas equal brandesDeltasOn; DAG credits equal the 3-way join") {
+    import api.Ckpt._
+    val both = cpBoth.cp()
+    val sigma = api.GraphAlgebra.multiBfsSigmaOn(both, landmarks(8), maxHops = 6)
+    val (dagDeltas, dagE) = api.GraphAlgebra.brandesBackward(both, sigma)
+    val levDeltas = api.GraphAlgebra.brandesDeltasOn(both, sigma)
+    def dset(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+        r.getLong(4))).toSet
+    assert(dset(dagDeltas) === dset(levDeltas))
+    val viaDag = api.GraphAlgebra
+      .brandesEdgeCreditsDag(dagE, dagDeltas, sigma.count())
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    val viaJoin = api.GraphAlgebra
+      .brandesEdgeCreditsOn(both, sigma, levDeltas)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    assert(viaDag === viaJoin)
+    assert(viaDag.nonEmpty)
+  }
+
+  test("temporal_reach week-band pre-key is pair-lossless (matches the unbanded join)") {
+    import spark.implicits._
+    // the unbanded reference pair stream, folded to the op's output shape
+    val tx = Tables.events(spark, sf)
+      .select($"user_id".as("u"),
+        get_json_object($"props", "$.k").cast("long").as("item"),
+        unix_millis($"ts").as("ms"))
+      .filter($"item".isNotNull)
+      .groupBy($"item", $"u").agg(min($"ms").as("ms"))
+    val ref = tx.as("a")
+      .join(tx.as("b"), $"a.item" === $"b.item" &&
+        $"b.ms" > $"a.ms" && $"b.ms" <= $"a.ms" + 604800000L &&
+        $"a.u" =!= $"b.u")
+      .groupBy($"a.u".as("user_id"), $"b.u".as("bu"))
+      .agg(count(lit(1)).as("np"))
+      .groupBy($"user_id")
+      .agg(count(lit(1)).as("reach"), sum($"np").as("n_paths"))
+      .orderBy($"reach".desc, $"n_paths".desc, $"user_id")
+      .limit(20)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val got = SparkEntry.queries("graph_temporal_reach")(spark, sf)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got === ref)
+  }
+
+  test("pageRankBatch lazy anti-join teleport: batch slice still equals single-source PPR") {
+    import spark.implicits._
+    // re-pin the ApiSpec contract on the rewritten iteration: per source,
+    // the batch op's nonzero ranks are bit-identical to pageRankExact
+    val both = cpBoth
+    val verts = Tables.part(spark, sf).select($"p_partkey".as("part"))
+    val batch = api.GraphAlgebra.pageRankBatch(verts, both, Seq(3L), iters = 4)
+      .filter($"s" === 3L).select($"part", $"r")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    val single = api.GraphAlgebra
+      .pageRankExact(verts, both, iters = 4, personalized = Some(3L))
+      .filter($"r" =!= 0L)
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+    // batch state is support-sparse: compare on the nonzero support
+    single.foreach { case (p, r) =>
+      assert(batch.getOrElse(p, 0L) === r, s"part $p")
+    }
   }
 }
