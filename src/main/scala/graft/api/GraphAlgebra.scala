@@ -398,33 +398,8 @@ object GraphAlgebra {
     * |V| ≤ broadcastMaxRows like [[connectedComponentsDf]]'s.
     */
   def labelPropagation(vertices: DataFrame, pairs: DataFrame, rounds: Int,
-                       broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val cp = pairs.select(col("a"), col("b"))
-    // clustered on the vote GROUP key `b` — HashPartitioning(b) satisfies
-    // the (b, lbl) clustered distribution AND the row_number window's
-    // partitionBy(v), so each round is exchange-free past the label join
-    val both = Ckpt.cpByKey(
-      cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"))), col("b"))
-    var labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
-      .cp()
-    val nV = labels.count() // label frame stays exactly |V| rows every round
-    for (_ <- 1 to rounds) {
-      // tie-break (most frequent label, ties to the SMALLEST) as a hash
-      // aggregation — max(struct(c, −lbl)) ≡ the row_number(c desc, lbl
-      // asc) = 1 pick, but it stays in the HashPartitioning(b) chain the
-      // cpByKey hoisted (both groupBys cluster on v = b) instead of
-      // paying a per-round sort-window over the |E|-sized vote frame
-      val top = both.join(hinted(labels, nV, broadcastMaxRows), col("a") === col("id"))
-        .groupBy(col("b").as("v"), col("lbl")).agg(count(lit(1)).as("c"))
-        .groupBy(col("v"))
-        .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
-        .select(col("v"), (-col("m.neg")).as("nlbl"))
-      labels = labels.join(top, col("id") === col("v"), "left")
-        .select(col("id"), coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .cp()
-    }
-    labels.select(col("id"), col("lbl").as("community"))
-  }
+                       broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
+    lpaRounds(vertices, pairs, rounds, converge = false, broadcastMaxRows)
 
   /** [[labelPropagation]] iterated to CONVERGENCE: stops the round loop
     * when a sweep changes ZERO labels (the [[connectedComponentsDf]]
@@ -446,7 +421,20 @@ object GraphAlgebra {
                                 maxRounds: Int = 50,
                                 broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     require(maxRounds >= 1, s"labelPropagationConverged needs maxRounds >= 1 (got $maxRounds)")
+    lpaRounds(vertices, pairs, maxRounds, converge = true, broadcastMaxRows)
+  }
+
+  /** The synchronous LPA vote behind [[labelPropagation]] (`rounds` sweeps)
+    * and [[labelPropagationConverged]] (up to `rounds` sweeps, stopping at
+    * the first that changes no label). Only the converging form counts the
+    * changed labels, so the fixed-round form runs no per-round count.
+    */
+  private def lpaRounds(vertices: DataFrame, pairs: DataFrame, rounds: Int,
+                        converge: Boolean, broadcastMaxRows: Long): DataFrame = {
     val cp = pairs.select(col("a"), col("b"))
+    // clustered on the vote GROUP key `b` — HashPartitioning(b) satisfies
+    // the (b, lbl) clustered distribution AND the row_number window's
+    // partitionBy(v), so each round is exchange-free past the label join
     val both = Ckpt.cpByKey(
       cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"))), col("b"))
     var labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
@@ -454,21 +442,26 @@ object GraphAlgebra {
     val nV = labels.count() // label frame stays exactly |V| rows every round
     var changed = 1L
     var round = 0
-    while (changed > 0 && round < maxRounds) {
+    while (changed > 0 && round < rounds) {
       round += 1
-      // same hash-agg tie-break as [[labelPropagation]] (max(struct) ≡
-      // row_number pick, no per-round sort-window)
+      // tie-break (most frequent label, ties to the SMALLEST) as a hash
+      // aggregation — max(struct(c, −lbl)) ≡ the row_number(c desc, lbl
+      // asc) = 1 pick, but it stays in the HashPartitioning(b) chain the
+      // cpByKey hoisted (both groupBys cluster on v = b) instead of
+      // paying a per-round sort-window over the |E|-sized vote frame
       val top = both.join(hinted(labels, nV, broadcastMaxRows), col("a") === col("id"))
         .groupBy(col("b").as("v"), col("lbl")).agg(count(lit(1)).as("c"))
         .groupBy(col("v"))
         .agg(max(struct(col("c"), (-col("lbl")).as("neg"))).as("m"))
         .select(col("v"), (-col("m.neg")).as("nlbl"))
-      val upd = labels.join(top, col("id") === col("v"), "left")
+      val next = labels.join(top, col("id") === col("v"), "left")
         .select(col("id"), col("lbl").as("prev"),
           coalesce(col("nlbl"), col("lbl")).as("lbl"))
-        .cp()
-      changed = upd.filter(col("lbl") =!= col("prev")).count()
-      labels = upd.select(col("id"), col("lbl"))
+      if (converge) {
+        val upd = next.cp()
+        changed = upd.filter(col("lbl") =!= col("prev")).count()
+        labels = upd.select(col("id"), col("lbl"))
+      } else labels = next.select(col("id"), col("lbl")).cp()
     }
     labels.select(col("id"), col("lbl").as("community"))
   }
@@ -808,28 +801,21 @@ object GraphAlgebra {
   }
 
   /** Connected components WITHOUT GraphX: min-label propagation iterated to
-    * the fixpoint in pure DataFrames (labels lineage-truncated per round,
-    * convergence = zero changed labels). Labels = min vertex id per
-    * component — identical to GraphX ConnectedComponents and to the
-    * recursive min-label oracle. O(graph diameter) rounds.
+    * the fixpoint in pure DataFrames on [[minLabelFixpoint]] over the
+    * mirrored pairs (labels lineage-truncated per round, convergence = zero
+    * changed labels). Labels = min vertex id per component — identical to
+    * GraphX ConnectedComponents and to the recursive min-label oracle.
+    * O(graph diameter) rounds: a chain-shaped component whose minimum id
+    * sits at one end takes one round per hop. Adopting the label of the
+    * current label each round would cut that to O(log diameter), but it
+    * costs a second checkpointed join per round, which on the registry's
+    * co-purchase and near-dup graphs outweighs the about one round it
+    * saves. Only [[boruvkaForest]]'s contraction above its
+    * `localContractMax` bound (1M components) can hand this a long chain.
     *
-    * The label-frame broadcast is GATED on |V| ≤ `broadcastMaxRows` (|V|
-    * is one count on the checkpointed initial labels, invariant across
-    * rounds): past the ceiling both per-round joins run un-hinted.
-    *
-    * Rounds after the first propagate ONLY from the frontier — the rows
-    * whose label improved last round — not from the full label frame:
-    * labels are monotone, so a neighbor whose label did NOT change last
-    * round already had its current label min-folded into every adjacent
-    * vertex in the round it last improved (the same Bellman-Ford queue
-    * argument as [[graft.ops.GraphOps.graphWsssp]]'s relaxation). The
-    * convergence tail (changed = tens of rows for several rounds on a
-    * chain-heavy graph — the r9 sf0.1 probe measured rounds 4–7 changing
-    * 20/10/2/0 labels) then joins a frontier-sized broadcast against |E|
-    * instead of re-shuffling the full label frame: at 100 TB that turns
-    * the tail rounds from full-|E| exchanges into near-free map-side
-    * probes, and the frontier hint self-gates because its row count IS
-    * the convergence counter the loop already computes.
+    * The label-frame broadcast is GATED on |V| ≤ `broadcastMaxRows`, and
+    * rounds after the first propagate ONLY from the frontier — the rows
+    * whose label improved last round (see [[minLabelFixpoint]]).
     */
   def connectedComponentsDf(vertices: DataFrame, pairs: DataFrame,
                             broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
@@ -838,52 +824,11 @@ object GraphAlgebra {
     // cpByKey materialization (for graph_cc_df that is the whole
     // co-purchase self-join, twice — guide §2.4)
     val cp = pairs.select(col("a"), col("b")).cp()
-    // clustered on the propagation GROUP key `b`: each round's neighbor-min
-    // aggregation inherits it through the broadcast label join (VERDICT #6)
-    val both = Ckpt.cpByKey(
-      cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"))), col("b"))
-    var labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
-      .cp()
-    val nV = labels.count() // label frame stays exactly |V| rows every round
-    var frontier = labels // round 1 relaxes from everyone
-    var frontierRows = nV
-    var changed = 1L
-    while (changed > 0) {
-      val nbrMin = both.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
-        .groupBy(col("b").as("nid")).agg(min(col("lbl")).as("nmin"))
-      // checkpointed BEFORE the self-join below — both join sides read it,
-      // and an unmaterialized cand would re-execute the propagation join
-      // twice per round. `prev` (the pre-round label) rides along so the
-      // round's diff is a FILTER on the checkpointed frame instead of a
-      // third per-round join against the old labels (r15, guide §2.4).
-      val cand = labels.join(nbrMin, col("id") === col("nid"), "left")
-        .select(col("id"), col("lbl").as("prev"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
-        .cp()
-      // pointer jumping: also adopt the label OF the current label — takes
-      // round count from O(diameter) to O(log diameter); the invariant
-      // (label = id of a same-component vertex, monotonically decreasing)
-      // is preserved, so the fixpoint is the same min-id labeling
-      val next = cand.join(
-          hinted(cand.select(col("id").as("yid"), col("lbl").as("ylbl")),
-            nV, broadcastMaxRows),
-          col("lbl") === col("yid"), "left")
-        .select(col("id"), col("prev"),
-          least(col("lbl"), coalesce(col("ylbl"), col("lbl"))).as("lbl"))
-        .cp()
-      // the diff IS the next frontier (vertices whose label improved this
-      // round — via the edge join or via pointer jumping; either way their
-      // neighbors must observe the new label next round); labels are
-      // monotone non-increasing, so carried-prev ≠ new ⟺ improved
-      val diff = next.filter(col("lbl") =!= col("prev"))
-        .select(col("id"), col("lbl"))
-      changed = diff.count()
-      frontier = diff
-      frontierRows = changed
-      labels = next.select(col("id"), col("lbl"))
-    }
-    labels.select(col("id"), col("lbl").as("comp"))
+    val flow = cp.select(col("a").as("from"), col("b").as("to"))
+      .unionAll(cp.select(col("b").as("from"), col("a").as("to")))
+    minLabelFixpoint(vertices.select(col("part").as("id"), col("part").as("lbl")),
+        flow, 0, broadcastMaxRows)
+      .select(col("id"), col("lbl").as("comp"))
   }
 
   /** Borůvka minimum spanning forest over weighted undirected edges
@@ -914,14 +859,17 @@ object GraphAlgebra {
     * when that graph is at or under `localContractMax` rows it is a
     * driver-local union-find + one broadcast relabel join (the
     * documented ≤1M-row bounded-driver posture of the Louvain coarse
-    * levels — the picked pseudo-forest can be a long CHAIN, so even a
-    * pointer-jumping distributed fixpoint pays O(log diameter) full
-    * passes per outer round for a frame that fits in one task), and only
-    * above the bound does it fall back to the distributed
-    * [[connectedComponentsDf]] fixpoint — at 10⁹ vertices that fallback
-    * runs for the first ~⌈log₂(V/10⁶)⌉ rounds, after which halving pulls
-    * the component graph under the bound. `maxRounds` is a runaway
-    * backstop (48 covers 2⁴⁸ components), not a tuning knob.
+    * levels — the picked pseudo-forest can be a long CHAIN, and a
+    * distributed label fixpoint pays one full pass per chain hop for a
+    * frame that fits in one task), and only above the bound does it fall
+    * back to the distributed [[connectedComponentsDf]] fixpoint — at 10⁹
+    * vertices that fallback runs for the first ~⌈log₂(V/10⁶)⌉ rounds,
+    * after which halving pulls the component graph under the bound; on a
+    * chain-shaped picked graph each of those rounds costs O(chain length)
+    * CC rounds. The round-0 fast path and the endgame run one local
+    * Kruskal; it and the local contraction share one union-find.
+    * `maxRounds` is a runaway backstop (48 covers 2⁴⁸ components), not a
+    * tuning knob.
     */
   def boruvkaForest(edges: DataFrame, maxRounds: Int = 48,
                     localFinishMax: Long = 2000000L,
@@ -929,35 +877,47 @@ object GraphAlgebra {
                     broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     val spark = edges.sparkSession
     import spark.implicits._
+    // driver-local union-find with min-id roots (deterministic labels)
+    final class UnionFind {
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = {
+        val p = parent.getOrElse(x, x)
+        if (p == x) x else { val r = find(p); parent(x) = r; r }
+      }
+      /** Merges the sets of x and y; false when they were already one. */
+      def union(x: Long, y: Long): Boolean = {
+        val (rx, ry) = (find(x), find(y))
+        if (rx < ry) parent(ry) = rx else if (ry < rx) parent(rx) = ry
+        rx != ry
+      }
+    }
+    // ONE local Kruskal under the global (w, a, b) order over (w, a, b, ca,
+    // cb) rows: edge (a, b) enters the forest when it joins components ca
+    // and cb (the raw endpoints in round 0, parallel duplicates just fail
+    // their union). An edge has one (ca, cb) per round, so the whole-tuple
+    // order IS the (w, a, b) order, and sorting on the tuple itself builds
+    // no key tuple per comparison (that cost ~1 s of driver time on the
+    // sf0.1 co-purchase edges)
+    def kruskal(rows: DataFrame): DataFrame = {
+      val uf = new UnionFind
+      rows.select(col("w"), col("a"), col("b"), col("ca"), col("cb")).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
+          r.getLong(4)))
+        .sortBy(identity)
+        .filter { case (_, _, _, ca, cb) => uf.union(ca, cb) }
+        .map { case (w, a, b, _, _) => (a, b, w) }
+        .toSeq.toDF("a", "b", "w")
+    }
     val e = edges.select(col("a"), col("b"), col("w").cast("long").as("w"))
       .cp()
     // round-0 fast path: labels start as the identity, so the label joins
     // and the pair collapse are no-ops — if the raw edge list already fits
     // the local-finish bound (2M rows ≈ 80 MB of longs, the same
     // bounded-driver posture as the ≤1M-edge coarse Louvain levels), one
-    // local Kruskal IS the whole algorithm; parallel (a, b) duplicates
-    // just fail their union and drop out
-    val nE = e.count()
-    if (nE <= localFinishMax) {
-      val rows = e.collect()
-        .map(r => (r.getLong(2), r.getLong(0), r.getLong(1)))
-        .sortBy(identity)
-      val parent = scala.collection.mutable.Map[Long, Long]()
-      def find(x: Long): Long = {
-        val p = parent.getOrElse(x, x)
-        if (p == x) x else { val r = find(p); parent(x) = r; r }
-      }
-      val picked = rows.flatMap { case (w, a, b) =>
-        val (ra, rb) = (find(a), find(b))
-        if (ra == rb) None
-        else {
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
-          Some((a, b, w))
-        }
-      }
-      return picked.toSeq.toDF("a", "b", "w")
-        .select(col("a"), col("b"), col("w").cast("long").as("w"))
-    }
+    // local Kruskal IS the whole algorithm
+    if (e.count() <= localFinishMax)
+      return kruskal(e.select(col("w"), col("a"), col("b"),
+        col("a").as("ca"), col("b").as("cb")))
     var lab = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
       .distinct().select(col("v"), col("v").as("c")).cp()
     var forest: DataFrame = e.filter(lit(false))
@@ -989,35 +949,14 @@ object GraphAlgebra {
         // order finishes every remaining round (Kruskal on the contracted
         // min-per-pair graph is exactly the remaining MSF edges), instead
         // of paying per-round job latency down the long tail
-        val rows = pairMin.select(col("w"), col("a"), col("b"),
-            col("ca"), col("cb")).collect()
-          .map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-            r.getLong(3), r.getLong(4)))
-          .sortBy { case (w, a, b, _, _) => (w, a, b) }
-        val parent = scala.collection.mutable.Map[Long, Long]()
-        def find(x: Long): Long = {
-          val p = parent.getOrElse(x, x)
-          if (p == x) x else { val r = find(p); parent(x) = r; r }
-        }
-        val pickedLocal = rows.flatMap { case (w, a, b, ca, cb) =>
-          val (ra, rb) = (find(ca), find(cb))
-          if (ra == rb) None
-          else {
-            if (ra < rb) parent(rb) = ra else parent(ra) = rb
-            Some((a, b, w))
-          }
-        }
-        forest = forest.unionAll(
-          pickedLocal.toSeq.toDF("a", "b", "w")
-            .select(col("a"), col("b"), col("w").cast("long").as("w")))
+        forest = forest.unionAll(kruskal(pairMin))
         outgoing = 0L
       } else if (outgoing > 0) {
         // a full Borůvka round on the collapsed pair frame: each endpoint
         // component picks its min edge (the struct carries the component
         // ids along, so contraction needs no further edge-list join)
-        val kk = struct(col("w"), col("a"), col("b"), col("ca"), col("cb"))
-        val both = pairMin.select(col("ca").as("c"), kk.as("k"))
-          .unionAll(pairMin.select(col("cb").as("c"), kk.as("k")))
+        val both = pairMin.select(col("ca").as("c"), k.as("k"))
+          .unionAll(pairMin.select(col("cb").as("c"), k.as("k")))
         // distinct: the two endpoint components of an edge both pick it
         val picked = both.groupBy(col("c")).agg(min(col("k")).as("k"))
           .select(col("k.w").as("w"), col("k.a").as("a"), col("k.b").as("b"),
@@ -1025,23 +964,12 @@ object GraphAlgebra {
           .distinct().cp()
         forest = forest.unionAll(picked.select(col("a"), col("b"), col("w")))
         if (nComp <= localContractMax) {
-          // bounded-driver contraction: ≤ nComp picked pairs, union-find
-          // with min-id roots (deterministic labels), one broadcast
-          // relabel join — no inner fixpoint
-          val pairs = picked.select(col("ca"), col("cb")).collect()
-            .map(r => (r.getLong(0), r.getLong(1)))
-          val parent = scala.collection.mutable.Map[Long, Long]()
-          def find(x: Long): Long = {
-            val p = parent.getOrElse(x, x)
-            if (p == x) x else { val r = find(p); parent(x) = r; r }
-          }
-          pairs.foreach { case (x, y) =>
-            val (rx, ry) = (find(x), find(y))
-            if (rx != ry) {
-              if (rx < ry) parent(ry) = rx else parent(rx) = ry
-            }
-          }
-          val mapping = parent.keys.toSeq.map(cId => (cId, find(cId)))
+          // bounded-driver contraction: ≤ nComp picked pairs through the
+          // union-find, one broadcast relabel join — no inner fixpoint
+          val uf = new UnionFind
+          picked.select(col("ca"), col("cb")).collect()
+            .foreach(r => uf.union(r.getLong(0), r.getLong(1)))
+          val mapping = uf.parent.keys.toSeq.map(cId => (cId, uf.find(cId)))
             .filter { case (cId, r) => cId != r }
           nComp -= mapping.length
           val mapDf = mapping.toDF("c", "newc")
@@ -1063,30 +991,49 @@ object GraphAlgebra {
     forest.select(col("a"), col("b"), col("w"))
   }
 
-  /** Directed min-label reach fixpoint: labels flow `from` → `to` along
-    * `flow` rows until no label improves. With flow = reversed edges this
-    * computes fwd(v) = min id forward-REACHABLE from v; with flow = the
-    * edges themselves it computes bwd(v) = min id that REACHES v — the two
-    * halves of the SCC coloring below. Same frontier gating as
-    * [[connectedComponentsDf]] (labels are monotone non-increasing, so a
-    * vertex whose label did not change last round has already been
-    * min-folded into every flow successor), same broadcast row gate;
-    * pointer jumping is omitted because the backbone graphs this serves
-    * are diameter-bounded sketches (the CC variant keeps it because whole
-    * co-purchase components can be chain-shaped).
+  /** The one min-label loop behind [[connectedComponentsDf]], both
+    * colorings of [[stronglyConnectedComponents]] and [[dagLevels]] — a
+    * Pregel superstep (vertex ⋈ message, halt test in the same plan) as one
+    * DataFrame round. Labels flow `from` → `to` along `flow`, each hop adds
+    * `step`, and every vertex keeps the least label it has seen, until no
+    * label changes. `init` is the hop-0 (id, lbl) frame; the result is
+    * the fixpoint (id, lbl) over the same ids.
+    *
+    * The flow is checkpointed once, clustered on its group key `to`. Per
+    * round: the frontier — the rows whose label changed last round, every
+    * row in round 1 — joins the flow, broadcast-GATED on its row count; one
+    * min(lbl) + step aggregate per `to`; `least` against the current label;
+    * one checkpoint and one count of the changed rows, which is both the
+    * halt test and the next round's gate. Frontier gating is exact because
+    * labels only decrease: a vertex whose label did not change last round
+    * has already folded its current label into every flow successor (the
+    * Bellman-Ford queue argument), so every round's labels equal a
+    * full-frame relaxation's.
+    *
+    * With `step` = 0 a label settles once the least label reaching the
+    * vertex has arrived, so rounds ≤ the longest shortest flow path + 1.
+    * With `step` = −1 on a DAG the label is −(longest path into the
+    * vertex), so rounds ≤ depth + 1. Both are ≤ |V|, so the `|V| + 1`
+    * round guard never fires on valid input; a negative `step` around a
+    * cycle lowers labels forever and trips it.
     */
-  private def minReachLabels(vertices: DataFrame, flow: DataFrame,
-                             broadcastMaxRows: Long): DataFrame = {
+  private def minLabelFixpoint(init: DataFrame, flow: DataFrame, step: Int,
+                               broadcastMaxRows: Long): DataFrame = {
     val fl = Ckpt.cpByKey(flow.select(col("from"), col("to")), col("to"))
-    var labels = vertices.select(col("id"), col("id").as("lbl")).cp()
-    val nV = labels.count()
+    var labels = init.select(col("id"), col("lbl")).cp()
+    val nV = labels.count() // label frame stays exactly |V| rows every round
     var frontier = labels
     var frontierRows = nV
-    var changed = 1L
-    while (changed > 0) {
+    var round = 0L
+    while (frontierRows > 0) {
+      round += 1
+      require(round <= nV + 1,
+        s"min-label fixpoint did not converge in ${nV + 1} rounds — cycle in input?")
       val nbrMin = fl.join(hinted(frontier, frontierRows, broadcastMaxRows),
           col("from") === col("id"))
-        .groupBy(col("to").as("nid")).agg(min(col("lbl")).as("nmin"))
+        .groupBy(col("to").as("nid")).agg((min(col("lbl")) + step).as("nmin"))
+      // `prev` rides along so the round's diff is a FILTER on the
+      // checkpointed frame instead of a join against the old labels
       val next = labels.join(nbrMin, col("id") === col("nid"), "left")
         .select(col("id"), col("lbl").as("prev"),
           least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
@@ -1094,7 +1041,6 @@ object GraphAlgebra {
       frontier = next.filter(col("lbl") < col("prev"))
         .select(col("id"), col("lbl"))
       frontierRows = frontier.count()
-      changed = frontierRows
       labels = next.select(col("id"), col("lbl"))
     }
     labels
@@ -1102,46 +1048,46 @@ object GraphAlgebra {
 
   /** Strongly connected components of a DIRECTED (src, dst) edge frame —
     * iterated forward/backward min-label coloring. Each outer round runs
-    * two [[minReachLabels]] fixpoints over the still-unassigned subgraph:
-    * fwd(v) = min id v can reach, bwd(v) = min id that can reach v. A
-    * vertex with fwd(v) = bwd(v) = c both reaches c and is reached by c,
-    * so it sits in c's SCC and is labeled `scc = c` — and because every
-    * member of one SCC sees identical fwd/bwd over the same remaining
-    * graph, whole SCCs retire atomically with c = the SCC's minimum id
-    * (c is forward-reachable from all members, so c ≤ min; c is a member,
-    * so c = min). The remaining-graph minimum always satisfies the
-    * predicate, so ≥ 1 SCC retires per round — the round cap is a
+    * two [[minLabelFixpoint]] colorings (step 0) over the still-unassigned
+    * subgraph: fwd(v) = min id v can reach (labels flow along reversed
+    * edges), bwd(v) = min id that can reach v (labels flow along the
+    * edges). A vertex with fwd(v) = bwd(v) = c both reaches c and is
+    * reached by c, so it sits in c's SCC and is labeled `scc = c` — and
+    * because every member of one SCC sees identical fwd/bwd over the same
+    * remaining graph, whole SCCs retire atomically with c = the SCC's
+    * minimum id (c is forward-reachable from all members, so c ≤ min; c is
+    * a member, so c = min). The remaining-graph minimum always satisfies
+    * the predicate, so ≥ 1 SCC retires per round — the round cap is a
     * convergence assertion, not a semantics knob.
     *
     * Scale shape: every per-round frame is vertex- or edge-sized, the
     * label joins are broadcast-GATED on measured row counts, and the
     * subgraph restriction is two semi-joins on the retired set — nothing
     * materializes pairs. Worst-case outer rounds = the condensation's
-    * chain length (a long path of singleton SCCs) ≤ |V|, so the effective
-    * cap is derived from the input's vertex count (maxRounds is only a
-    * floor) — a valid input can exhaust patience, never trip a
-    * require(); the assertion fires solely on a genuine non-convergence
+    * chain length (a long path of singleton SCCs) ≤ |V|, so the cap is the
+    * input's vertex count — a valid input can exhaust patience, never trip
+    * a require(); the assertion fires solely on a genuine non-convergence
     * bug.
     */
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
-                                  broadcastMaxRows: Long = BroadcastMaxRows,
-                                  maxRounds: Int = 64): DataFrame = {
+                                  broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     var remV = vertices.select(col("id")).cp()
     var remE = edges.select(col("src"), col("dst")).cp()
     var out: DataFrame = null
     var nRem = remV.count()
     // ≥ 1 SCC retires per round ⇒ ≤ |V| rounds suffice for ANY input
-    val roundCap = math.max(maxRounds.toLong, nRem)
+    val roundCap = nRem
     var round = 0
     while (nRem > 0) {
       round += 1
       require(round <= roundCap,
         s"SCC coloring did not converge in $roundCap rounds")
-      val fwd = minReachLabels(remV,
-        remE.select(col("dst").as("from"), col("src").as("to")),
+      val own = remV.select(col("id"), col("id").as("lbl"))
+      val fwd = minLabelFixpoint(own,
+        remE.select(col("dst").as("from"), col("src").as("to")), 0,
         broadcastMaxRows)
-      val bwd = minReachLabels(remV,
-        remE.select(col("src").as("from"), col("dst").as("to")),
+      val bwd = minLabelFixpoint(own,
+        remE.select(col("src").as("from"), col("dst").as("to")), 0,
         broadcastMaxRows)
       val done = fwd.as("f").join(bwd.as("b"), col("f.id") === col("b.id"))
         .filter(col("f.lbl") === col("b.lbl"))
@@ -1178,42 +1124,21 @@ object GraphAlgebra {
 
   /** Longest-path levels of a DAG given as (src, dst) rows: level(v) = 0
     * for sources, else 1 + max level over predecessors — the topological
-    * depth used to schedule/stage a condensation. Iterative relaxation to
-    * fixpoint (levels are monotone non-decreasing and bounded by the DAG
-    * depth, so ≤ depth+1 rounds, and depth < |V|); each round is one join
-    * + max-agg on the edge frame, broadcast-gated like every other label
-    * loop here. The effective round cap is derived from the input's
-    * vertex count (maxRounds is only a floor), so a chain-shaped DAG of
-    * any length converges legitimately — the require() fires only on a
-    * true cycle, where levels keep rising past every possible DAG depth.
+    * depth used to schedule/stage a condensation. Runs on
+    * [[minLabelFixpoint]] with every label starting at 0 and step −1, so a
+    * label is −level: frontier-gated and broadcast-gated like every label
+    * loop here, and a DAG of depth d converges in d + 1 rounds. The round
+    * cap is derived from the input's vertex count (depth < |V|), so a
+    * chain-shaped DAG of any length converges legitimately — the require()
+    * fires only on a true cycle, where levels keep rising past every
+    * possible DAG depth.
     */
   def dagLevels(vertices: DataFrame, edges: DataFrame,
-                broadcastMaxRows: Long = BroadcastMaxRows,
-                maxRounds: Int = 256): DataFrame = {
-    val ed = Ckpt.cpByKey(edges.select(col("src"), col("dst")), col("src"))
-    var levels = vertices.select(col("id"), lit(0L).as("lvl")).cp()
-    val nV = levels.count()
-    // a DAG's depth < |V| ⇒ ≤ |V|+1 rounds reach fixpoint on ANY valid DAG
-    val roundCap = math.max(maxRounds.toLong, nV + 1L)
-    var changed = 1L
-    var round = 0
-    while (changed > 0) {
-      round += 1
-      require(round <= roundCap,
-        s"dagLevels did not converge in $roundCap rounds — cycle in input?")
-      val cand = ed.join(hinted(levels, nV, broadcastMaxRows),
-          col("src") === col("id"))
-        .groupBy(col("dst").as("nid"))
-        .agg((max(col("lvl")) + 1L).as("nlvl"))
-      val next = levels.join(cand, col("id") === col("nid"), "left")
-        .select(col("id"), col("lvl").as("prev"),
-          greatest(col("lvl"), coalesce(col("nlvl"), col("lvl"))).as("lvl"))
-        .cp()
-      changed = next.filter(col("lvl") > col("prev")).count()
-      levels = next.select(col("id"), col("lvl"))
-    }
-    levels
-  }
+                broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
+    minLabelFixpoint(vertices.select(col("id"), lit(0L).as("lbl")),
+        edges.select(col("src").as("from"), col("dst").as("to")), -1,
+        broadcastMaxRows)
+      .select(col("id"), (-col("lbl")).as("lvl"))
 
   /** The one frontier loop behind [[bfsHops]], [[multiBfsHops]] and
     * [[reachClosure]]: MS-BFS over up to 64 bit lanes (Then et al., "The

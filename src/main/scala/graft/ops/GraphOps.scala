@@ -2629,8 +2629,9 @@ object GraphOps {
     *
     * Scale shape: same one-fact-pass + sketch-sized-everything posture as
     * graph_scc; the condensation frames are ≤ |SCCs| ≤ 512 rows and the
-    * level loop is DAG-depth-bounded (cycle ⇒ the loop's round cap fires,
-    * which doubles as a correctness assertion on the SCC contraction).
+    * level loop is DAG-depth-bounded (its round cap is |SCCs| + 1, which
+    * only a cycle exceeds — so the cap doubles as a correctness assertion
+    * on the SCC contraction).
     */
   val graphCondensation: Q = (s, dir) => {
     import s.implicits._

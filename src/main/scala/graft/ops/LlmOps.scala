@@ -558,7 +558,7 @@ object LlmOps {
     * connected components over the near-dup pair graph, not pairwise
     * drops. Every document gets keep_id = min doc_id of its similarity
     * component (singletons keep themselves) via the pure-DataFrame
-    * pointer-jumping CC ([[graft.api.GraphAlgebra.connectedComponentsDf]]).
+    * min-label CC ([[graft.api.GraphAlgebra.connectedComponentsDf]]).
     * Edges come from the banded MinHash candidate stage (the
     * llm_dedup_minhash_idx machinery: signature band-join → pruned exact
     * verify ≥ 0.6) — collision-bounded work, the 100 TB shape, NOT the

@@ -4838,7 +4838,9 @@ object OracleSql {
     // ===== §2.1 scans =====
     "scan_project" ->
       """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice
-        |FROM lineitem ORDER BY l_orderkey, l_linenumber LIMIT 100""".stripMargin,
+        |FROM lineitem
+        |ORDER BY l_orderkey, l_linenumber, l_quantity, l_extendedprice
+        |LIMIT 100""".stripMargin,
 
     "scan_pruned" ->
       """SELECT l_orderkey, l_linenumber, CAST(l_shipdate AS DATE) AS ship_date

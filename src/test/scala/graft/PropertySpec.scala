@@ -127,7 +127,7 @@ object PropertySpec extends Properties("graft") {
         got == expected
     }
 
-  property("DataFrame CC (pointer jumping) equals GraphX CC on random graphs") =
+  property("DataFrame CC equals GraphX CC on random graphs") =
     forAll(Gen.chooseNum(2, 8), Gen.listOf(Gen.zip(Gen.chooseNum(0L, 7L), Gen.chooseNum(0L, 7L)))) {
       (n, edgesRaw) =>
         val vertices = (0L until n.toLong).toList

@@ -285,112 +285,6 @@ class Round11Spec extends SparkSpec {
     }
   }
 
-  /** JVM replay of the transition backbone + Kosaraju SCC, shared by the
-    * graph_scc / graph_bowtie / graph_condensation cross-checks:
-    * (edges, sorted vertex list, scc label per vertex with min-id labels).
-    */
-  private lazy val sccReplay: (Seq[(Long, Long)], Seq[Long], Map[Long, Long]) = {
-    import spark.implicits._
-    val lp = Tables.lineitem(spark, sf)
-      .select($"l_orderkey", $"l_linenumber", $"l_partkey" % 512)
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
-    val edges = lp.groupBy(_._1).values.flatMap { lines =>
-      val s = lines.sortBy(l => (l._2, l._3))
-      s.zip(s.tail).collect { case (a, b) if a._3 != b._3 => (a._3, b._3) }
-    }.toSeq.groupBy(identity).iterator // iterator: a Map.collect of pairs
-      .collect { case (e, os) if os.size >= 2 => e } // would dedup by src
-      .toSeq
-    val verts = edges.flatMap(e => Seq(e._1, e._2)).distinct.sorted
-    val fwd = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val rev = edges.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
-    // Kosaraju: forward finish order, then reverse-graph sweeps
-    val visited = scala.collection.mutable.Set[Long]()
-    val order = scala.collection.mutable.ArrayBuffer[Long]()
-    def dfs1(v: Long): Unit = if (visited.add(v)) {
-      fwd.getOrElse(v, Nil).foreach(dfs1); order += v
-    }
-    verts.foreach(dfs1)
-    val label = scala.collection.mutable.Map[Long, Long]()
-    def dfs2(v: Long, members: scala.collection.mutable.ArrayBuffer[Long]): Unit =
-      if (!label.contains(v)) {
-        label(v) = -1L; members += v
-        rev.getOrElse(v, Nil).foreach(dfs2(_, members))
-      }
-    order.reverseIterator.foreach { v =>
-      if (!label.contains(v)) {
-        val members = scala.collection.mutable.ArrayBuffer[Long]()
-        dfs2(v, members)
-        val m = members.min
-        members.foreach(label(_) = m)
-      }
-    }
-    (edges, verts, label.toMap)
-  }
-
-  test("graph_scc equals a JVM Kosaraju SCC over the collected backbone") {
-    val (_, verts, label) = sccReplay
-    val got = q("graph_scc").collect().map(r => r.getLong(0) -> r.getLong(1))
-    assert(got.map(_._1).toSeq === verts, "vertex set")
-    got.foreach { case (v, s) => assert(s === label(v), s"scc of $v") }
-  }
-
-  test("graph_bowtie classes match a JVM reachability replay") {
-    val (edges, verts, label) = sccReplay
-    val sizes = label.groupBy(_._2).map { case (l, m) => l -> m.size }
-    val coreLbl = sizes.toSeq.map { case (l, n) => (n, -l) }.max match {
-      case (_, negL) => -negL
-    }
-    val coreMembers = verts.filter(label(_) == coreLbl).toSet
-    def closure(seeds: Set[Long], adj: Map[Long, Seq[Long]]): Set[Long] = {
-      var vis = seeds; var frontier = seeds
-      while (frontier.nonEmpty) {
-        val next = frontier.flatMap(adj.getOrElse(_, Nil)) -- vis
-        vis ++= next; frontier = next
-      }
-      vis
-    }
-    val fwd = edges.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
-    val rev = edges.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
-    val reachesCore = closure(coreMembers, rev)
-    val fromCore = closure(coreMembers, fwd)
-    val expect = verts.map { v =>
-      if (label(v) == coreLbl) "core"
-      else if (reachesCore(v)) "in"
-      else if (fromCore(v)) "out"
-      else "other"
-    }.zip(verts).groupBy(_._1).map { case (c, vs) =>
-      c -> (vs.size.toLong, vs.map(_._2).min)
-    }
-    val got = q("graph_bowtie").collect()
-    assert(got.map(_.getString(0)).toSet === expect.keySet, "class set")
-    got.foreach { r =>
-      val (n, mn) = expect(r.getString(0))
-      assert(r.getLong(1) === n, s"n_cells of ${r.getString(0)}")
-      assert(r.getLong(2) === mn, s"min_cell of ${r.getString(0)}")
-    }
-  }
-
-  test("graph_condensation matches JVM longest-path levels on the SCC DAG") {
-    val (edges, verts, label) = sccReplay
-    val ce = edges.map { case (s, d) => (label(s), label(d)) }
-      .filter { case (a, b) => a != b }.distinct
-    val nodes = verts.map(label).distinct.sorted
-    val preds = ce.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
-    val memo = scala.collection.mutable.Map[Long, Long]()
-    def lvl(v: Long): Long = memo.getOrElseUpdate(v,
-      preds.get(v).map(_.map(lvl).max + 1L).getOrElse(0L))
-    val outDeg = ce.groupBy(_._1).map { case (k, v) => k -> v.size.toLong }
-    val members = verts.groupBy(label).map { case (l, vs) => l -> vs.size.toLong }
-    val got = q("graph_condensation").collect()
-    assert(got.map(_.getLong(0)).toSeq === nodes, "scc node set")
-    got.foreach { r =>
-      val n = r.getLong(0)
-      assert(r.getLong(1) === members(n), s"n_members of $n")
-      assert(r.getLong(2) === lvl(n), s"level of $n")
-      assert(r.getLong(3) === outDeg.getOrElse(n, 0L), s"n_succ of $n")
-    }
-  }
-
   test("agg_cuped equals the brute-force CUPED adjustment over collected events") {
     import spark.implicits._
     val ev = Tables.events(spark, sf)
@@ -711,7 +605,7 @@ class Round11Spec extends SparkSpec {
   }
 
   test("graph_motifs equals a brute-force triple census") {
-    val (edges, _, _) = sccReplay
+    val edges = GraphSpec.backboneEdges(spark, sf)
     val eset = edges.toSet
     val bySrc = edges.groupBy(_._1)
     val p2 = edges.flatMap { case (a, b) =>
@@ -1100,52 +994,6 @@ class Round11Spec extends SparkSpec {
       assert(got.getDouble(5) === p4(math.exp(math.log(or) - 1.96 * se)))
       assert(got.getDouble(6) === p4(math.exp(math.log(or) + 1.96 * se)))
     } else (4 to 6).foreach(i => assert(got.isNullAt(i)))
-  }
-
-  test("graph_attack_tolerance equals a plain-Scala hub-removal replay") {
-    import spark.implicits._
-    val li = Tables.lineitem(spark, sf)
-      .select($"l_orderkey", $"l_partkey").distinct().collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val und = li.groupBy(_._1).values.flatMap { rs =>
-      val ps = rs.map(_._2).distinct.sorted
-      for (i <- ps.indices; j <- (i + 1) until ps.length)
-        yield (ps(i), ps(j))
-    }.toSeq.groupBy(identity).iterator
-      .collect { case (e, os) if os.size >= 2 => e }.toSeq
-    val verts = und.flatMap(e => Seq(e._1, e._2)).distinct
-    val deg = und.flatMap(e => Seq(e._1, e._2)).groupBy(identity)
-      .map { case (v, os) => v -> os.size }
-    val hubs = deg.toSeq.sortBy { case (v, d) => (-d, v) }.take(8)
-      .map(_._1).toSet
-    def giant(vs: Seq[Long], es: Seq[(Long, Long)]): Long = {
-      val adj = (es ++ es.map(_.swap)).groupBy(_._1)
-        .map { case (k, v) => k -> v.map(_._2) }
-      val seen = scala.collection.mutable.Set[Long]()
-      var g = 0L
-      vs.foreach { v =>
-        if (!seen(v)) {
-          var frontier = Set(v); seen += v; var sz = 1L
-          while (frontier.nonEmpty) {
-            val nxt = frontier.flatMap(adj.getOrElse(_, Nil))
-              .filterNot(seen)
-            seen ++= nxt; sz += nxt.size; frontier = nxt
-          }
-          g = math.max(g, sz)
-        }
-      }
-      g
-    }
-    val gb = giant(verts, und)
-    val v2 = verts.filterNot(hubs)
-    val e2 = und.filterNot(e => hubs(e._1) || hubs(e._2))
-    val ga = giant(v2, e2)
-    val got = q("graph_attack_tolerance").collect().head
-    assert(got.getLong(0) === verts.length.toLong, "n_vertices")
-    assert(got.getLong(1) === und.length.toLong, "n_edges")
-    assert(got.getLong(2) === gb, "giant_before")
-    assert(got.getLong(3) === ga, "giant_after")
-    assert(got.getDouble(4) === p4(ga.toDouble / gb.toDouble), "share")
   }
 
   test("agg_nrr equals a plain-Scala cohort-revenue replay") {
