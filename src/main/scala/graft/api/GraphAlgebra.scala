@@ -322,9 +322,10 @@ object GraphAlgebra {
     * exists for). Each iteration shuffles on the (s, part) key; the
     * rank-side broadcast is gated on the STATIC |S|·|V| ceiling (both
     * factors already counted once), so the support-sparse loop pays no
-    * per-iteration count job — the ceiling only disables the hint for
-    * state sizes where the measured count could not have allowed it
-    * either at full spread.
+    * per-iteration count job. Regime limit: the hint is on only while
+    * |S|·|V| ≤ `broadcastMaxRows`. Above it every iteration's rank join
+    * is a shuffle join, even when the sparse state itself would fit a
+    * broadcast (mass spread to few vertices per source).
     */
   def pageRankBatch(vertices: DataFrame, edgesBoth: DataFrame,
                     sources: Seq[Long], iters: Int,
@@ -1245,29 +1246,26 @@ object GraphAlgebra {
     * distance AND σ = the exact BIGINT number of distinct shortest
     * src→id paths (each hop's σ is the sum of the predecessors' σ — the
     * level-synchronous forward pass of Brandes' betweenness algorithm).
-    * Same frontier/anti-join/broadcast-gating shape as multiBfsHops; the
-    * per-hop groupBy(src, b) both dedups the frontier and folds σ in one
-    * exchange. σ is exact while it fits BIGINT (levels are capped by
+    * Output (src, id, dist, sigma), one row per reached pair, hop-0 rows
+    * included. σ is exact while it fits BIGINT (levels are capped by
     * maxHops, so the combinatorial blowup of an unbounded small-world
     * expansion is bounded by construction).
     */
   def multiBfsSigma(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
                     broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
-    multiBfsSigmaOn(edgesBoth.select(col("a"), col("b")).cp(), sources,
-      maxHops, broadcastMaxRows)
+    sigmaForward(edgesBoth.select(col("a"), col("b")).cp(), sources,
+      maxHops, broadcastMaxRows)._1
 
-  /** [[multiBfsSigma]] over a PRE-CHECKPOINTED (a, b) adjacency — the
-    * Brandes pipeline shares ONE materialized edge frame across the
-    * forward σ pass, the backward δ pass and the edge-credit join
-    * (each public entry point otherwise re-derives AND re-checkpoints
-    * the caller's full edge lineage: for the betweenness ops that was
-    * the co-purchase self-join built 2-3× per query — guide §2.4).
-    * The returned state frame is checkpointed (per-round cp), so
-    * downstream passes can consume it without re-materializing.
+  /** The forward σ loop of [[multiBfsSigma]] and [[brandes]] over a
+    * checkpointed (a, b) adjacency. Per hop, the broadcast-gated frontier
+    * streams the adjacency, a first-visit anti-join drops (src, b) pairs
+    * already in the state, and one groupBy(src, b) both dedups the new
+    * frontier and sums σ in one exchange. Returns the checkpointed
+    * (src, id, dist, sigma) state, its exact row count and its deepest
+    * dist (0 when no source reaches anything).
     */
-  private[graft] def multiBfsSigmaOn(adj: DataFrame, sources: DataFrame,
-                                     maxHops: Int,
-                                     broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
+  private def sigmaForward(adj: DataFrame, sources: DataFrame, maxHops: Int,
+                           broadcastMaxRows: Long): (DataFrame, Long, Long) = {
     var state = sources.select(col("src"), col("src").as("id"),
       lit(0L).as("dist"), lit(1L).as("sigma")).cp()
     var frontier = state.select(col("src"), col("id"), col("sigma"))
@@ -1299,263 +1297,91 @@ object GraphAlgebra {
         h += 1
       }
     }
-    state
+    (state, stateRows, h - 1)
   }
 
-  /** Brandes backward pass over a [[multiBfsSigma]] frame: per-(src, id)
-    * dependency δ, MICRO-quantized (δ in units of 1e-6 path-credits) so
-    * the level sums accumulate in exact BIGINTs — each predecessor
-    * contribution is the fixed double tree
-    * `floor(σv/σw · (1e6 + δw) + 0.5)` evaluated on exact integer inputs
-    * (identical IEEE ops on identical operands on any engine — the
-    * agg_chisq determinism discipline), then summed order-independently.
-    * Levels are processed deepest-first; each step is one join of the
-    * level-h frame against the already-resolved level-(h+1) deltas.
-    * Returns (src, id, dist, delta_micro, sigma) for every NON-SOURCE visited
-    * node (dist ≥ 1); level-0 rows (the sources themselves) are excluded,
-    * as Brandes excludes δ(s,s).
+  /** Landmark Brandes over an undirected (a, b) edge frame (both
+    * directions present): the forward σ loop of [[multiBfsSigma]], then
+    * ONE backward loop that yields both betweenness ingredients. Returns
+    *   - δ: (src, id, dist, delta, sigma) for every non-source visited
+    *     vertex (dist ≥ 1; Brandes excludes δ(s,s));
+    *   - credits: (src, va, wb, c), one row per shortest-path-DAG edge
+    *     va→wb (dist_s(wb) = dist_s(va) + 1).
+    * Both are MICRO-quantized (units of 1e-6 path-credits) so sums stay
+    * exact BIGINTs: an edge's credit is the fixed double tree
+    * `floor(σv/σw · (1e6 + δw) + 0.5)` on exact integer inputs (identical
+    * IEEE ops on identical operands on any engine — the agg_chisq
+    * determinism discipline), and a vertex's δ is the sum of its
+    * out-edges' credits. Empty frames when no source reaches anything.
+    *
+    * The adjacency is checkpointed once and shared by both loops. The
+    * backward loop runs level h from maxDist − 1 down to 0: `credit_h`
+    * streams the adjacency through the broadcast-gated level-h σ frame
+    * and the level-(h+1) (δ, σ) frame; for h ≥ 1 its sum per (src, va)
+    * resolves the checkpointed level-h δ frame. `credit_h` itself is
+    * never checkpointed: the credits frame is the LAZY union of the
+    * per-level joins. The node op never evaluates it, so its plan is the
+    * per-level spelling alone; the edge op re-runs each level's join
+    * once, in its final query, instead of materializing a ≤ |S|·|E|-row
+    * shortest-path-DAG frame that every level filters. Measured at sf0.1
+    * on 4 cores (`perfbench.Main --keys graph_betweenness,
+    * graph_edge_betweenness --passes 2 --trace 1`, min of two runs
+    * alternating with the previous code, which materialized that DAG
+    * frame for the edge op and re-counted the σ state for both;
+    * traced/untraced, equal digests): edge betweenness 17.3/16.0 s,
+    * 53 jobs → 14.9/12.8 s, 51 jobs; node betweenness 10.6/12.3 s,
+    * 51 jobs → 10.4/11.8 s, 47 jobs.
     */
-  def brandesDeltas(edgesBoth: DataFrame, sigmaState: DataFrame): DataFrame =
-    // checkpoint the edge frame ONCE: every backward level joins it, and
-    // without this each of the ≤5 level joins re-derives the caller's
-    // edge lineage (a parquet scan + the co-purchase build, per level)
-    brandesDeltasOn(edgesBoth.select(col("a"), col("b")).cp(),
-      sigmaState.cp())
-
-  /** [[brandesDeltas]] over a PRE-CHECKPOINTED adjacency and σ state —
-    * see [[multiBfsSigmaOn]]: [[multiBfsSigma]]'s returned state is
-    * already checkpointed per round, so the public wrapper's `.cp()`
-    * re-materializes it for nothing when the two are piped directly.
-    */
-  private[graft] def brandesDeltasOn(adj: DataFrame, st: DataFrame,
-                                     broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    // NODE-betweenness path: per-level adjacency joins, NO materialized
-    // DAG frame. An r16 A/B moved this op onto [[brandesBackward]]'s
-    // shared DAG spelling and it measured ~30% SLOWER (min-of-5 12.98 s
-    // vs 9.82 s at sf0.1/32): with a single downstream consumer the
-    // ≤|sources|·|E|-row DAG materialization costs more than the ≤5
-    // per-level |E|-stream broadcast joins it replaces. The DAG pays off
-    // only when the edge-credit pass REUSES it (graphEdgeBetweenness,
-    // measured ~18% faster there) — so the two ops deliberately take
-    // different backward spellings.
-    val stRows = st.count()
-    val maxDist = st.agg(max(col("dist"))).head().getLong(0)
-    if (maxDist < 1) return st.filter(lit(false))
-      .select(col("src"), col("id"), col("dist"), lit(0L).as("delta"),
-        col("sigma"))
+  def brandes(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
+              broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) = {
+    val adj = edgesBoth.select(col("a"), col("b")).cp()
+    val (st, stRows, maxDist) =
+      sigmaForward(adj, sources, maxHops, broadcastMaxRows)
+    val none = st.filter(lit(false))
+    if (maxDist < 1) return (
+      none.select(col("src"), col("id"), col("dist"), lit(0L).as("delta"),
+        col("sigma")),
+      none.select(col("src"), col("id").as("va"), col("id").as("wb"),
+        lit(0L).as("c")))
     var deeper = st.filter(col("dist") === maxDist)
       .select(col("src"), col("id"), col("dist"), lit(0L).as("delta"),
         col("sigma")).cp()
-    // σ rides along in every per-level frame (r15, guide §2.4): the old
-    // w side re-joined the full σ state per level just to re-attach the
-    // sigma it had already carried at level resolution; the output is one
-    // LAZY union of the per-level checkpoints (the accumulation is never
-    // a join target inside the loop, so — unlike the BFS visited set —
-    // nothing re-materializes per level)
-    var out = Seq(deeper)
-    var h = maxDist - 1
-    while (h >= 1) {
-      // the w-side frame renames EVERY column (wsrc/wid/wsigma/wdelta):
-      // both frames descend from the same dataset `st`, and an unaliased
-      // vlev("src") === wlev("src") would resolve only through dataset-id
-      // metadata (warning spam + a latent ambiguity hazard); distinct
-      // names make the cross-source equality unambiguous by construction
+    var deltas = Seq(deeper)
+    var credits = Seq.empty[DataFrame]
+    for (h <- (maxDist - 1) to 0L by -1L) {
+      // the w side renames EVERY column: both frames descend from `st`,
+      // and an unaliased v("src") === w("src") would resolve only through
+      // dataset-id metadata (warning spam + a latent ambiguity hazard);
+      // distinct names make the cross-source equality unambiguous
       val vlev = st.filter(col("dist") === h)
         .select(col("src"), col("id"), col("sigma"))
       val wlev = deeper
         .select(col("src").as("wsrc"), col("id").as("wid"),
           col("sigma").as("wsigma"), col("delta").as("wdelta"))
-      // predecessor edges v→w (v at level h, w at level h+1): the fixed
-      // double tree below is the ONLY float in Brandes here, quantized
-      // per contribution then BIGINT-summed (order-independent)
-      val contribs = adj
-        .join(hinted(vlev, stRows, broadcastMaxRows),
-          adj("a") === vlev("id"))
+      // both sides are subsets of the σ state (≤ stRows rows): gated
+      // broadcasts keep the |E| adjacency streaming, never sort-merged
+      val credit = adj
+        .join(hinted(vlev, stRows, broadcastMaxRows), adj("a") === vlev("id"))
         .join(hinted(wlev, stRows, broadcastMaxRows),
-          col("b") === col("wid") &&
-          col("src") === col("wsrc"))
-        .select(col("src"), col("id"),
+          col("b") === col("wid") && col("src") === col("wsrc"))
+        .select(col("src"), col("id").as("va"), col("wid").as("wb"),
           floor(col("sigma").cast("double") /
             col("wsigma").cast("double") *
             (lit(1000000L) + col("wdelta")).cast("double") + lit(0.5))
             .cast("long").as("c"))
-        .groupBy(col("src"), col("id"))
-        .agg(sum(col("c")).as("delta"))
-      // contribs keys are the level's (src, id) set (≤ stRows too):
-      // broadcast keeps the per-level resolve map-side as well
-      val lev = vlev
-        .join(hinted(contribs, stRows, broadcastMaxRows),
-          Seq("src", "id"), "left")
-        .select(col("src"), col("id"), lit(h).as("dist"),
-          coalesce(col("delta"), lit(0L)).as("delta"), col("sigma")).cp()
-      out = out :+ lev
-      deeper = lev
-      h -= 1
+      credits = credits :+ credit
+      if (h >= 1) {
+        val contribs = credit.groupBy(col("src"), col("va").as("id"))
+          .agg(sum(col("c")).as("delta"))
+        deeper = vlev
+          .join(hinted(contribs, stRows, broadcastMaxRows),
+            Seq("src", "id"), "left")
+          .select(col("src"), col("id"), lit(h).as("dist"),
+            coalesce(col("delta"), lit(0L)).as("delta"), col("sigma")).cp()
+        deltas = deltas :+ deeper
+      }
     }
-    out.reduce(_ unionAll _)
-  }
-
-  /** Backward pass for the EDGE-betweenness pipeline: returns (δ frame,
-    * shortest-path-DAG edge frame). The DAG frame — one row per
-    * (src, v→w) edge with dist_s(w) = dist_s(v)+1, σ attached at both
-    * ends — is materialized ONCE and shared by every backward level AND
-    * by [[brandesEdgeCreditsDag]] (r16, guide §2.4): the old spelling
-    * re-joined the |E| adjacency against the σ state per backward level
-    * (≤5×) and then a sixth time for the edge credits — six |E|-stream
-    * joins collapse into one. The tradeoff is one landmark-scaled
-    * materialization (≤ |sources|·|E| rows); it pays ONLY because the
-    * edge-credit pass reuses the frame — [[brandesDeltasOn]] keeps the
-    * per-level spelling for the single-consumer node op (measured A/B in
-    * its docstring).
-    */
-  private[graft] def brandesBackward(adj: DataFrame, st: DataFrame,
-                                     broadcastMaxRows: Long = BroadcastMaxRows): (DataFrame, DataFrame) = {
-    // gates every broadcast below: v/w sides and contribs are all SUBSETS
-    // of the σ state (≤ stRows rows), and the state is cp'd so the count
-    // is one cheap job. Ungated, the cp'd state's unknown stats sent the
-    // DAG build through a sort-merge join — shuffling AND sorting the
-    // full |E| adjacency (guide §3.1: broadcast the side that fits,
-    // stream the big side).
-    val stRows = st.count()
-    val maxDist = st.agg(max(col("dist"))).head().getLong(0)
-    val empty = st.filter(lit(false))
-      .select(col("src"), col("id"), col("dist"), lit(0L).as("delta"),
-        col("sigma"))
-    if (maxDist < 1) return (empty, empty
-      .select(col("src"), col("id").as("vid"), col("id").as("wid"),
-        col("dist").as("vdist"), col("sigma").as("vsigma"),
-        col("sigma").as("wsigma")))
-    // the v/w sides rename EVERY column: both descend from the same
-    // dataset `st`, and an unaliased v("src") === w("src") would resolve
-    // only through dataset-id metadata (warning spam + a latent ambiguity
-    // hazard); distinct names make the cross-source equality unambiguous
-    // by construction
-    val v = st.select(col("src").as("vsrc"), col("id").as("vid"),
-      col("sigma").as("vsigma"), col("dist").as("vdist"))
-    val w = st.select(col("src").as("wsrc"), col("id").as("wid"),
-      col("sigma").as("wsigma"), col("dist").as("wdist"))
-    val dagE = adj
-      .join(hinted(v, stRows, broadcastMaxRows), adj("a") === col("vid"))
-      .join(hinted(w, stRows, broadcastMaxRows),
-        col("b") === col("wid") && col("vsrc") === col("wsrc") &&
-          col("wdist") === col("vdist") + lit(1L))
-      .select(col("vsrc").as("src"), col("vid"), col("wid"),
-        col("vdist"), col("vsigma"), col("wsigma"))
-      .cp()
-    var deeper = st.filter(col("dist") === maxDist)
-      .select(col("src"), col("id"), col("dist"), lit(0L).as("delta"),
-        col("sigma")).cp()
-    // σ rides along in every per-level frame (r15, guide §2.4): the old
-    // w side re-joined the full σ state per level just to re-attach the
-    // sigma it had already carried at level resolution; the output is one
-    // LAZY union of the per-level checkpoints (the accumulation is never
-    // a loop join target inside the loop, so — unlike the BFS visited set
-    // — nothing re-materializes per level)
-    var out = Seq(deeper)
-    var h = maxDist - 1
-    while (h >= 1) {
-      val wdelta = deeper
-        .select(col("src").as("wsrc"), col("id").as("dwid"),
-          col("delta").as("wdelta"))
-      // predecessor edges v→w (v at level h, w at level h+1) come from
-      // the shared DAG frame — a filter, not an |E| join; the fixed
-      // double tree below is the ONLY float in Brandes here, quantized
-      // per contribution then BIGINT-summed (order-independent)
-      val contribs = dagE.filter(col("vdist") === h)
-        .join(hinted(wdelta, stRows, broadcastMaxRows),
-          col("wid") === col("dwid") && col("src") === col("wsrc"))
-        .select(col("src"), col("vid").as("id"),
-          floor(col("vsigma").cast("double") /
-            col("wsigma").cast("double") *
-            (lit(1000000L) + col("wdelta")).cast("double") + lit(0.5))
-            .cast("long").as("c"))
-        .groupBy(col("src"), col("id"))
-        .agg(sum(col("c")).as("delta"))
-      // contribs keys are the level's (src, id) set (≤ stRows too):
-      // broadcast keeps the per-level resolve map-side as well
-      val lev = st.filter(col("dist") === h)
-        .select(col("src"), col("id"), col("sigma"))
-        .join(hinted(contribs, stRows, broadcastMaxRows),
-          Seq("src", "id"), "left")
-        .select(col("src"), col("id"), lit(h).as("dist"),
-          coalesce(col("delta"), lit(0L)).as("delta"), col("sigma")).cp()
-      out = out :+ lev
-      deeper = lev
-      h -= 1
-    }
-    (out.reduce(_ unionAll _), dagE)
-  }
-
-  /** Per-EDGE Brandes credits over a resolved ([[multiBfsSigma]],
-    * [[brandesDeltas]]) pair — the Girvan–Newman edge-betweenness
-    * ingredient: every shortest-path DAG edge v→w (dist_s(w) =
-    * dist_s(v)+1) earns `floor(σv/σw · (1e6 + δw) + 0.5)` micro-credits
-    * from source s — the IDENTICAL fixed double tree the node pass sums,
-    * so node and edge scores share one quantization discipline. Returns
-    * one row per (src, va, wb) with the credit; callers fold to
-    * canonical undirected edges. One three-way join, no new traversal —
-    * the forward σ and backward δ frames are reused as-is.
-    */
-  def brandesEdgeCredits(edgesBoth: DataFrame, sigmaState: DataFrame,
-                         deltas: DataFrame): DataFrame =
-    brandesEdgeCreditsOn(edgesBoth.select(col("a"), col("b")).cp(),
-      sigmaState.cp(), deltas)
-
-  /** [[brandesEdgeCredits]] over the SHARED shortest-path-DAG frame the
-    * backward pass already materialized ([[brandesBackward]]'s second
-    * return): the credit pass is then one broadcast-gated join of the δ
-    * frame into the DAG edges — the old spelling re-streamed the |E|
-    * adjacency through a three-way join a sixth time (r16, guide §2.4).
-    * Every DAG edge's head w is a non-source row (wdist = vdist+1 ≥ 1),
-    * so the δ frame covers every head; the v-side σ/dist ride in dagE.
-    */
-  private[graft] def brandesEdgeCreditsDag(dagE: DataFrame, deltas: DataFrame,
-                                           stRows: Long,
-                                           broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val wd = deltas.select(col("src").as("wsrc"), col("id").as("dwid"),
-      col("delta").as("wdelta"))
-    dagE.join(hinted(wd, stRows, broadcastMaxRows),
-        col("wid") === col("dwid") && col("src") === col("wsrc"))
-      .select(col("src"), col("vid").as("va"), col("wid").as("wb"),
-        floor(col("vsigma").cast("double") /
-          col("wsigma").cast("double") *
-          (lit(1000000L) + col("wdelta")).cast("double") + lit(0.5))
-          .cast("long").as("c"))
-  }
-
-  /** [[brandesEdgeCredits]] over the PRE-CHECKPOINTED adjacency and σ
-    * state the forward/backward passes already materialized (see
-    * [[multiBfsSigmaOn]] — one shared edge frame for the whole Brandes
-    * pipeline instead of three derive+checkpoint rounds of it).
-    */
-  private[graft] def brandesEdgeCreditsOn(adj: DataFrame, st: DataFrame,
-                                          deltas: DataFrame,
-                                          broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    // same renaming rationale as brandesDeltas: both frames descend from
-    // st, so the w side renames every column (wsrc/wb/wsigma/wdelta/
-    // wdist) and the cross-source src equality is unambiguous names, not
-    // dataset-id metadata. The δ frame now CARRIES σ (brandesDeltas r15),
-    // so the old per-call σ re-join against the full state is gone.
-    // v and w are the σ state and its δ image (≤ stRows rows each):
-    // broadcast-gate both so the |E| adjacency STREAMS through the credit
-    // join instead of a sort-merge shuffle+sort of it (guide §3.1; same
-    // gate as brandesDeltasOn's per-level joins)
-    val stRows = st.count()
-    val v = st.select(col("src"), col("id").as("va"),
-      col("sigma").as("vsigma"), col("dist").as("vdist"))
-    val w = deltas
-      .select(col("src").as("wsrc"), col("id").as("wb"),
-        col("sigma").as("wsigma"), col("delta").as("wdelta"),
-        col("dist").as("wdist"))
-    adj.join(hinted(v, stRows, broadcastMaxRows), adj("a") === v("va"))
-      .join(hinted(w, stRows, broadcastMaxRows), col("b") === col("wb") &&
-        col("src") === col("wsrc") &&
-        col("wdist") === col("vdist") + lit(1L))
-      .select(col("src"), col("va"), col("wb"),
-        floor(col("vsigma").cast("double") /
-          col("wsigma").cast("double") *
-          (lit(1000000L) + col("wdelta")).cast("double") + lit(0.5))
-          .cast("long").as("c"))
+    (deltas.reduce(_ unionAll _), credits.reduce(_ unionAll _))
   }
 
   /** Bounded BFS WITHOUT GraphX: a single source on lane 0 of

@@ -854,7 +854,10 @@ object GraphOps {
     * equality for source 1); at 100 TB the cohort is the whole user base
     * riding one job instead of |users| driver-looped ones. Oracle is a
     * generated 10-iteration unrolled CTE with the source key carried
-    * through ([[graft.oracle.GraphOracle]]).
+    * through ([[graft.oracle.GraphOracle]]). The rank joins broadcast
+    * only while |S|·|V| ≤ `GraphAlgebra.BroadcastMaxRows` (5 sources ×
+    * the part count here); a cohort that pushes the product past it runs
+    * every iteration as a shuffle join, however sparse the ranks are.
     */
   val graphPprBatch: Q = (s, dir) => {
     import s.implicits._
@@ -1463,27 +1466,21 @@ object GraphOps {
     * signal, estimated from the 8-landmark source sample the
     * closeness/eccentricity family already uses (exact betweenness is
     * all-pairs — Brandes' SSSP-per-source contracted to a fixed landmark
-    * set is the standard at-scale estimator). Forward pass:
-    * [[graft.api.GraphAlgebra.multiBfsSigma]], ONE level-synchronous
-    * multi-source traversal carrying exact BIGINT path counts σ (same
-    * 6-hop cap and broadcast-gated frontier as the sibling ops). Backward
-    * pass: [[graft.api.GraphAlgebra.brandesDeltas]], ≤ 5 level joins
-    * accumulating micro-quantized dependencies δ in exact BIGINTs — the
-    * only float is one fixed per-contribution double tree on exact
-    * integer inputs, mirrored token-for-token in the oracle's unrolled
-    * per-level CTE chain. Output: per part the BIGINT micro-credit sum
-    * and its double image.
+    * set is the standard at-scale estimator). One
+    * [[graft.api.GraphAlgebra.brandes]] call, its δ frame: ONE
+    * level-synchronous multi-source traversal carrying exact BIGINT path
+    * counts σ (same 6-hop cap and broadcast-gated frontier as the sibling
+    * ops), then ≤ 5 backward level joins accumulating micro-quantized
+    * dependencies δ in exact BIGINTs — the only float is one fixed
+    * per-contribution double tree on exact integer inputs, mirrored
+    * token-for-token in the oracle's unrolled per-level CTE chain.
+    * Output: per part the BIGINT micro-credit sum and its double image.
     */
   val graphBetweenness: Q = (s, dir) => {
     import s.implicits._
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
-    // ONE checkpointed adjacency for the forward σ AND backward δ passes
-    // (the public entry points each cp their edge input, so piping the
-    // raw co-purchase lineage ran the self-join build twice — guide §2.4)
-    val both = copurchaseBoth(s, dir).select($"a", $"b").cp()
-    val sigma = graft.api.GraphAlgebra.multiBfsSigmaOn(both, lm, maxHops = 6)
-    graft.api.GraphAlgebra.brandesDeltasOn(both, sigma)
+    graft.api.GraphAlgebra.brandes(copurchaseBoth(s, dir), lm, maxHops = 6)._1
       .groupBy($"id")
       .agg(count(lit(1)).as("n_sources"), sum($"delta").as("bt_micro"))
       .select($"id".as("part"), $"n_sources", $"bt_micro",
@@ -1493,34 +1490,23 @@ object GraphOps {
 
   /** Landmark EDGE betweenness — the Girvan–Newman community-cutting
     * score, sharing [[graphBetweenness]]'s whole machinery: the same 8
-    * landmarks, the same 6-hop multi-source σ forward pass and
-    * micro-quantized δ backward pass, then ONE extra three-way join
-    * ([[graft.api.GraphAlgebra.brandesEdgeCredits]]) credits every
-    * shortest-path DAG edge with the identical fixed double tree
-    * floor(σv/σw·(1e6+δw)+0.5) — node and edge scores stay in one
-    * quantization discipline and BIGINT-sum order-free. Credits fold to
-    * canonical undirected edges; top-20 by micro-credit (ties to the
-    * edge key). The bridges between communities surface first — the
-    * read a graph DB serves before an edge-removal clustering pass. At
-    * 100 TB: sampled landmarks bound the traversal exactly like the
-    * node-betweenness op; the credit join is shuffle-keyed on the
-    * vertex, never all-pairs.
+    * landmarks and the same [[graft.api.GraphAlgebra.brandes]] call, its
+    * credits frame: every shortest-path DAG edge earns the identical
+    * fixed double tree floor(σv/σw·(1e6+δw)+0.5) that the node δ sums,
+    * so node and edge scores stay in one quantization discipline and
+    * BIGINT-sum order-free. Credits fold to canonical undirected edges;
+    * top-20 by micro-credit (ties to the edge key). The bridges between
+    * communities surface first — the read a graph DB serves before an
+    * edge-removal clustering pass. At 100 TB: sampled landmarks bound the
+    * traversal exactly like the node-betweenness op; every credit join
+    * streams the edges through broadcast-gated level frames, never
+    * all-pairs.
     */
   val graphEdgeBetweenness: Q = (s, dir) => {
     import s.implicits._
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
-    // ONE checkpointed adjacency + ONE σ state for all three Brandes
-    // passes — the public wrappers each re-derived AND re-checkpointed
-    // the co-purchase build (3× here) and re-cp'd the already-cp'd σ
-    // state (2×) before this (guide §2.4)
-    val both = copurchaseBoth(s, dir).select($"a", $"b").cp()
-    val sigma = graft.api.GraphAlgebra.multiBfsSigmaOn(both, lm, maxHops = 6)
-    // the backward pass hands back the shortest-path-DAG frame it built;
-    // the credit pass joins δ into it instead of re-streaming the |E|
-    // adjacency through a third three-way join (r16, guide §2.4)
-    val (deltas, dagE) = graft.api.GraphAlgebra.brandesBackward(both, sigma)
-    graft.api.GraphAlgebra.brandesEdgeCreditsDag(dagE, deltas, sigma.count())
+    graft.api.GraphAlgebra.brandes(copurchaseBoth(s, dir), lm, maxHops = 6)._2
       .groupBy(least($"va", $"wb").as("a"), greatest($"va", $"wb").as("b"))
       .agg(count(lit(1)).as("n_contribs"), sum($"c").as("eb_micro"))
       .select($"a", $"b", $"n_contribs", $"eb_micro",

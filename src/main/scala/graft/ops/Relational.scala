@@ -3624,8 +3624,9 @@ object Relational {
     * path walk over the co-purchase graph from a 4-seed cohort, rolled up
     * to (node, min hop, path count). UNION ALL + explicit depth guard —
     * identical multiplicity semantics on both engines by construction
-    * (recursive UNION's dedup subtleties never engage). The sql_q3
-    * single-source-of-truth pattern: this text IS the oracle.
+    * (recursive UNION's dedup subtleties never engage). The walk and
+    * final SELECT are the oracle's own text
+    * (`OracleSql.recursiveWalk`); only the edge relation differs.
     */
   val sqlRecursive: Q = (s, dir) => {
     import s.implicits._
@@ -3635,23 +3636,15 @@ object Relational {
     // CTEs referenced inside the loop body per iteration — the plan
     // showed the lp/cp co-purchase self-join expanded INSIDE UnionLoop,
     // i.e. rebuilt once per recursion level. Materialize the (static)
-    // both-direction edge set ONCE and recurse against it; the oracle
-    // text (OracleSql.Recursive) is unchanged and stays the single
-    // semantic spec — `copurchase` yields exactly the text's
+    // both-direction edge set ONCE and recurse against it with the
+    // oracle's walk text — `copurchase` yields exactly the oracle's
     // SELECT DISTINCT pair set (per-order set-dedup + pair rollup), and
-    // the unchanged DuckDB hash proves the split plan-equivalent.
+    // the DuckDB hash proves the split plan-equivalent.
     val cp = graft.ops.GraphOps.copurchase(s, dir).select($"a", $"b").cp()
     cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
       .createOrReplaceTempView("graft_e2_m")
-    s.sql("""WITH RECURSIVE walk(node, depth) AS (
-      |  SELECT p_partkey, 0 FROM part WHERE p_partkey < 5
-      |  UNION ALL
-      |  SELECT graft_e2_m.b, depth + 1 FROM walk
-      |  JOIN graft_e2_m ON graft_e2_m.a = walk.node
-      |  WHERE depth < 2)
-      |SELECT node, CAST(min(depth) AS BIGINT) AS hop,
-      |  count(*) AS n_paths
-      |FROM walk GROUP BY node ORDER BY node""".stripMargin)
+    s.sql("WITH RECURSIVE " +
+      graft.oracle.OracleSql.recursiveWalk("graft_e2_m"))
   }
 
   /** Local maxima (peaks) in each user's daily value curve with a simple

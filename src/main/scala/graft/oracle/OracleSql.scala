@@ -413,10 +413,12 @@ object OracleSql {
       |  ORDER BY o_totalprice DESC, o_orderkey LIMIT 2) t
       |ORDER BY c_custkey, o_totalprice DESC, o_orderkey""".stripMargin
 
-  /** Shared-dialect bounded recursive traversal — the same text runs on
+  /** Shared-dialect bounded recursive traversal — the same walk runs on
     * Spark 4.1 (`ops.Relational.sqlRecursive`) and DuckDB (one source of
     * truth, zero drift). UNION ALL + depth guard keeps multiplicity
     * semantics identical; the path blow-up is bounded by seeds × deg².
+    * The oracle derives the both-direction co-purchase edges `e2` inline;
+    * the op recurses over its own materialized copy of them.
     */
   val Recursive: String =
     """WITH RECURSIVE lp AS (
@@ -425,14 +427,21 @@ object OracleSql {
       |  SELECT DISTINCT x.p AS a, y.p AS b FROM lp x JOIN lp y
       |  ON x.ok = y.ok AND x.p < y.p),
       |e2 AS (SELECT a, b FROM cp UNION ALL SELECT b, a FROM cp),
-      |walk(node, depth) AS (
-      |  SELECT p_partkey, 0 FROM part WHERE p_partkey < 5
-      |  UNION ALL
-      |  SELECT e2.b, depth + 1 FROM walk JOIN e2 ON e2.a = walk.node
-      |  WHERE depth < 2)
-      |SELECT node, CAST(min(depth) AS BIGINT) AS hop,
-      |  count(*) AS n_paths
-      |FROM walk GROUP BY node ORDER BY node""".stripMargin
+      |""".stripMargin + recursiveWalk("e2")
+
+  /** The `walk` recursion and final rollup of [[Recursive]] over the
+    * (a, b) edge relation `e`: the last CTE of a `WITH RECURSIVE` list
+    * plus the SELECT that closes the statement.
+    */
+  def recursiveWalk(e: String): String =
+    s"""walk(node, depth) AS (
+       |  SELECT p_partkey, 0 FROM part WHERE p_partkey < 5
+       |  UNION ALL
+       |  SELECT $e.b, depth + 1 FROM walk JOIN $e ON $e.a = walk.node
+       |  WHERE depth < 2)
+       |SELECT node, CAST(min(depth) AS BIGINT) AS hop,
+       |  count(*) AS n_paths
+       |FROM walk GROUP BY node ORDER BY node""".stripMargin
 
   /** Shared-dialect TPC-H Q1 — the flagship pricing summary as ONE text
     * both engines execute (agg_pricing is its DataFrame twin): money sums

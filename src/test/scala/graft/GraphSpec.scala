@@ -701,10 +701,12 @@ class GraphSpec extends SparkSpec {
 
   /** In-JVM reference Brandes with the op's EXACT quantized arithmetic:
     * level-synchronous BFS σ counts, then backward micro-quantized δ via
-    * the identical double tree floor(σv/σw·(1e6+δw)+0.5).
+    * the identical double tree floor(σv/σw·(1e6+δw)+0.5). Returns per
+    * non-source vertex (dist, σ, δ) and per shortest-path-DAG edge v→w
+    * its credit.
     */
   private def refBrandes(adj: Map[Long, Seq[Long]], src: Long, maxHops: Int)
-      : Map[Long, (Long, Long, Long)] = {
+      : (Map[Long, (Long, Long, Long)], Map[(Long, Long), Long]) = {
     val dist = scala.collection.mutable.Map(src -> 0L)
     val sigma = scala.collection.mutable.Map(src -> 1L)
     val levels = scala.collection.mutable.Map(0L -> Seq(src))
@@ -720,24 +722,29 @@ class GraphSpec extends SparkSpec {
       h += 1
     }
     val delta = scala.collection.mutable.Map[Long, Long]()
+    def dagOut(v: Long): Seq[Long] =
+      adj.getOrElse(v, Nil).filter(w => dist.get(w).contains(dist(v) + 1))
+    def credit(v: Long, w: Long): Long =
+      math.floor(sigma(v).toDouble / sigma(w).toDouble *
+        (1000000L + delta(w)).toDouble + 0.5).toLong
     val hmax = levels.keys.max
     levels(hmax).foreach(v => delta(v) = 0L)
-    for (lev <- (hmax - 1) to 1L by -1L; v <- levels(lev)) {
-      delta(v) = adj.getOrElse(v, Nil)
-        .filter(w => dist.get(w).contains(lev + 1))
-        .map(w => math.floor(sigma(v).toDouble / sigma(w).toDouble *
-          (1000000L + delta(w)).toDouble + 0.5).toLong)
-        .sum
-    }
-    dist.keys.filter(_ != src)
+    for (lev <- (hmax - 1) to 1L by -1L; v <- levels(lev))
+      delta(v) = dagOut(v).map(credit(v, _)).sum
+    val nodes = dist.keys.filter(_ != src)
       .map(v => v -> ((dist(v), sigma(v), delta(v)))).toMap
+    val credits = (for (v <- dist.keys.toSeq; w <- dagOut(v))
+      yield (v, w) -> credit(v, w)).toMap
+    (nodes, credits)
   }
 
-  test("graph_betweenness machinery equals in-JVM Brandes on a fixture graph") {
+  /** Deterministic sparse Brandes fixture: a 24-ring plus chords, so
+    * equal-length shortest paths give σ > 1 and fractional dependencies
+    * exercise the quantization. Returns the both-direction (a, b) frame
+    * and its adjacency map.
+    */
+  private def ringChords: (DataFrame, Map[Long, Seq[Long]]) = {
     import spark.implicits._
-    // deterministic sparse graph: ring + chords → multiple equal-length
-    // shortest paths, so σ > 1 and fractional dependencies exercise the
-    // quantization
     val n = 24
     val ring = (0 until n).map(i => (i.toLong, ((i + 1) % n).toLong))
     val chords = (0 until n by 3).map(i => (i.toLong, ((i + 7) % n).toLong))
@@ -748,18 +755,21 @@ class GraphSpec extends SparkSpec {
       .unionAll(pairs.map(_.swap).toDF("a", "b"))
     val adj = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
       .map { case (k, vs) => k -> vs.map(_._2) }
+    (both, adj)
+  }
+
+  test("graph_betweenness machinery equals in-JVM Brandes on a fixture graph") {
+    import spark.implicits._
+    val (both, adj) = ringChords
     val sources = Seq(0L, 5L, 11L).toDF("src")
-    val sigma = api.GraphAlgebra.multiBfsSigma(both, sources, maxHops = 6)
-    val deltas = api.GraphAlgebra.brandesDeltas(both, sigma)
-    val got = deltas.as("d")
-      .join(sigma.as("g"), $"d.src" === $"g.src" && $"d.id" === $"g.id")
-      .select($"d.src", $"d.id", $"g.dist", $"g.sigma", $"d.delta")
+    val (deltas, _) = api.GraphAlgebra.brandes(both, sources, maxHops = 6)
+    val got = deltas.select($"src", $"id", $"dist", $"sigma", $"delta")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1)) ->
         ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
     val want = (for {
       s <- Seq(0L, 5L, 11L)
-      (v, t) <- refBrandes(adj, s, 6)
+      (v, t) <- refBrandes(adj, s, 6)._1
     } yield (s, v) -> t).toMap
     assert(got === want)
     // and the registry op runs with a sane shape on the sf fixture
@@ -768,14 +778,41 @@ class GraphSpec extends SparkSpec {
     assert(op.forall(_.getLong(2) >= 0L), "negative betweenness credit")
   }
 
+  test("graph_edge_betweenness machinery equals in-JVM edge Brandes on a fixture") {
+    import spark.implicits._
+    val (both, adj) = ringChords
+    val srcs = Seq(0L, 5L, 11L)
+    // every source's DAG-edge credits, folded to canonical undirected edges
+    val want = srcs.flatMap(refBrandes(adj, _, 6)._2)
+      .groupMapReduce { case ((v, w), _) => (math.min(v, w), math.max(v, w)) }(
+        _._2)(_ + _)
+    val (_, credits) = api.GraphAlgebra.brandes(both, srcs.toDF("src"),
+      maxHops = 6)
+    val got = credits
+      .groupBy(least($"va", $"wb").as("a"), greatest($"va", $"wb").as("b"))
+      .agg(sum($"c").as("eb"))
+      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
+    assert(got === want)
+    // the registry op: sane top-20 shape on the sf fixture
+    val op = q("graph_edge_betweenness").collect()
+    assert(op.nonEmpty && op.length <= 20)
+    assert(op.forall(_.getLong(3) > 0L), "non-positive edge credit in top-20")
+    val creds = op.map(_.getLong(3))
+    assert(creds.zip(creds.tail).forall { case (x, y) => x >= y })
+  }
+
+  /** The collected co-purchase graph as a neighbor map, both directions. */
+  private def cpNbrs: Map[Long, Seq[Long]] =
+    cpBoth.collect().map(r => (r.getLong(0), r.getLong(1)))
+      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
+
   /** JVM replay of multi-source BFS over the collected co-purchase edge
     * list: the expected multiBfsHops rows, sorted. One (s, s, 0) row per
     * RAW source row, then every (s, id, dist) with 0 < dist <= maxHops per
     * distinct source.
     */
   private def jvmMultiBfs(raw: Seq[Long], maxHops: Int): Seq[(Long, Long, Long)] = {
-    val nbrs = cpBoth.collect().map(r => (r.getLong(0), r.getLong(1)))
-      .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).toSeq }
+    val nbrs = cpNbrs
     val reached = raw.distinct.flatMap { s =>
       val dist = scala.collection.mutable.Map(s -> 0L)
       var frontier = Seq(s)
@@ -846,26 +883,36 @@ class GraphSpec extends SparkSpec {
     }
   }
 
-  test("brandesBackward (shared-DAG) deltas equal brandesDeltasOn; DAG credits equal the 3-way join") {
-    import api.Ckpt._
-    val both = cpBoth.cp()
-    val sigma = api.GraphAlgebra.multiBfsSigmaOn(both, landmarks(8), maxHops = 6)
-    val (dagDeltas, dagE) = api.GraphAlgebra.brandesBackward(both, sigma)
-    val levDeltas = api.GraphAlgebra.brandesDeltasOn(both, sigma)
-    def dset(df: org.apache.spark.sql.DataFrame) = df.collect()
+  test("brandes: 8 landmarks' δ rows and per-edge credits equal a JVM replay") {
+    val lm = landmarks(8).collect().map(_.getLong(0)).toSeq
+    val nbrs = cpNbrs
+    val refs = lm.map(s => s -> refBrandes(nbrs, s, 6))
+    val (deltas, credits) = api.GraphAlgebra.brandes(cpBoth, landmarks(8),
+      maxHops = 6)
+    val gotD = deltas.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3),
-        r.getLong(4))).toSet
-    assert(dset(dagDeltas) === dset(levDeltas))
-    val viaDag = api.GraphAlgebra
-      .brandesEdgeCreditsDag(dagE, dagDeltas, sigma.count())
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    val viaJoin = api.GraphAlgebra
-      .brandesEdgeCreditsOn(both, sigma, levDeltas)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(viaDag === viaJoin)
-    assert(viaDag.nonEmpty)
+        r.getLong(4))).toSeq.sorted
+    val wantD = (for ((s, (nodes, _)) <- refs; (v, (d, sg, dl)) <- nodes)
+      yield (s, v, d, dl, sg)).sorted
+    assert(gotD === wantD)
+    val gotC = credits.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+      .toSeq.sorted
+    val wantC = (for ((s, (_, cr)) <- refs; ((v, w), c) <- cr)
+      yield (s, v, w, c)).sorted
+    assert(gotC === wantC)
+    assert(gotD.exists(_._3 > 1), "no landmark reached past hop 1")
+  }
+
+  test("brandes: a source in no edge returns two empty frames") {
+    import spark.implicits._
+    val (both, _) = ringChords
+    val (deltas, credits) = api.GraphAlgebra.brandes(both,
+      Seq(1000L).toDF("src"), maxHops = 6)
+    assert(deltas.columns.toSeq === Seq("src", "id", "dist", "delta", "sigma"))
+    assert(credits.columns.toSeq === Seq("src", "va", "wb", "c"))
+    assert(deltas.collect().isEmpty)
+    assert(credits.collect().isEmpty)
   }
 
   test("temporal_reach week-band pre-key is pair-lossless (matches the unbanded join)") {

@@ -165,74 +165,6 @@ class Round13Spec extends SparkSpec {
     }
   }
 
-  test("graph_edge_betweenness machinery equals in-JVM edge Brandes on a fixture") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{greatest, least}
-    // the GraphSpec Brandes fixture: ring + chords so sigma > 1 and the
-    // quantized fractional credits are exercised
-    val n = 24
-    val ring = (0 until n).map(i => (i.toLong, ((i + 1) % n).toLong))
-    val chords = (0 until n by 3).map(i => (i.toLong, ((i + 7) % n).toLong))
-    val pairs = (ring ++ chords).map { case (a, b) =>
-      if (a < b) (a, b) else (b, a)
-    }.distinct
-    val both = pairs.toDF("a", "b")
-      .unionAll(pairs.map(_.swap).toDF("a", "b"))
-    val adj = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
-      .map { case (k, vs) => k -> vs.map(_._2) }
-    val srcs = Seq(0L, 5L, 11L)
-    // plain-Scala reference: per source, BFS sigma/levels, backward
-    // micro-quantized delta, then every DAG edge's credit
-    val want = scala.collection.mutable.Map[(Long, Long), Long]()
-    for (src <- srcs) {
-      val dist = scala.collection.mutable.Map(src -> 0L)
-      val sigma = scala.collection.mutable.Map(src -> 1L)
-      val levels = scala.collection.mutable.Map(0L -> Seq(src))
-      var frontier = Seq(src)
-      var h = 1L
-      while (frontier.nonEmpty && h <= 6) {
-        val next = scala.collection.mutable.Map[Long, Long]()
-        for (v <- frontier; w <- adj.getOrElse(v, Nil) if !dist.contains(w))
-          next(w) = next.getOrElse(w, 0L) + sigma(v)
-        for ((w, sg) <- next) { dist(w) = h; sigma(w) = sg }
-        frontier = next.keys.toSeq
-        if (frontier.nonEmpty) levels(h) = frontier
-        h += 1
-      }
-      val delta = scala.collection.mutable.Map[Long, Long]()
-      val hmax = levels.keys.max
-      levels(hmax).foreach(v => delta(v) = 0L)
-      for (lev <- (hmax - 1) to 1L by -1L; v <- levels(lev)) {
-        delta(v) = adj.getOrElse(v, Nil)
-          .filter(w => dist.get(w).contains(lev + 1))
-          .map(w => math.floor(sigma(v).toDouble / sigma(w).toDouble *
-            (1000000L + delta(w)).toDouble + 0.5).toLong)
-          .sum
-      }
-      for (v <- dist.keys; w <- adj.getOrElse(v, Nil)
-           if dist.get(w).contains(dist(v) + 1)) {
-        val c = math.floor(sigma(v).toDouble / sigma(w).toDouble *
-          (1000000L + delta(w)).toDouble + 0.5).toLong
-        val e = (math.min(v, w), math.max(v, w))
-        want(e) = want.getOrElse(e, 0L) + c
-      }
-    }
-    val sources = srcs.toDF("src")
-    val sg = api.GraphAlgebra.multiBfsSigma(both, sources, maxHops = 6)
-    val dl = api.GraphAlgebra.brandesDeltas(both, sg)
-    val got = api.GraphAlgebra.brandesEdgeCredits(both, sg, dl)
-      .groupBy(least($"va", $"wb").as("a"), greatest($"va", $"wb").as("b"))
-      .agg(org.apache.spark.sql.functions.sum($"c").as("eb"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    assert(got === want.toMap)
-    // the registry op: sane top-20 shape on the sf fixture
-    val op = q("graph_edge_betweenness").collect()
-    assert(op.nonEmpty && op.length <= 20)
-    assert(op.forall(_.getLong(3) > 0L), "non-positive edge credit in top-20")
-    val creds = op.map(_.getLong(3))
-    assert(creds.zip(creds.tail).forall { case (x, y) => x >= y })
-  }
-
   test("llm_ann_ivfpq: refined recall beats the plain-IVF row, ranking is exact") {
     val rows = q("llm_ann_ivfpq").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getDouble(3),
