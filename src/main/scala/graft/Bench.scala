@@ -120,12 +120,31 @@ object Bench {
     // its error class and kept out of "queries" and the total. NonFatal
     // only, as in timeOnce.
     val failed = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    // one JSON record per key in a file, written as the sweep goes and
+    // outside the timed calls: the harness keeps only the last ~2 KB of
+    // stdout, which drops the per-query line below
+    val recordsPath = java.nio.file.Files.createTempFile("graft-bench-", ".jsonl")
+    val records = java.nio.file.Files.newBufferedWriter(recordsPath)
+    val gitSha = scala.util.Try(scala.sys.process.Process(Seq("git", "rev-parse", "HEAD"))
+      .!!(scala.sys.process.ProcessLogger(_ => ())).trim).getOrElse("unknown")
+    def quoted(s: String) = "\"" + s + "\""
+    val cpusJson = if (cpus.nonEmpty && cpus.forall(_.isDigit)) cpus else quoted(cpus)
+    def record(key: String, status: String, errorClass: Option[String],
+               seconds: Option[Double]): Unit = {
+      records.write(s"""{"key":${quoted(key)},"status":${quoted(status)},""" +
+        s""""error_class":${errorClass.fold("null")(quoted)},""" +
+        s""""seconds":${seconds.fold("null")(_.toString)},"cpus":$cpusJson,""" +
+        s""""sf":${quoted(sfDir)},"git_sha":${quoted(gitSha)}}""")
+      records.newLine()
+      records.flush()
+    }
     val sweep = SparkEntry.queries.toSeq
       .filter(kv => only.forall(_.contains(kv._1)))
       .sortBy(_._1)
     val results = sweep.flatMap { case (name, fn) =>
-      if (budgetOn && elapsedSec > budgetSec) { skipped += name; None }
-      else {
+      if (budgetOn && elapsedSec > budgetSec) {
+        skipped += name; record(name, "skipped", None, None); None
+      } else {
         def once(): Either[Throwable, Double] = {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
@@ -133,17 +152,20 @@ object Bench {
         }
         once() match {
           case Left(e) =>
-            failed += name -> e.getClass.getName; None
+            failed += name -> e.getClass.getName
+            record(name, "failed", Some(e.getClass.getName), None); None
           case Right(t1) =>
             val mayRerun = reruns < rerunCap &&
               !(budgetOn && elapsedSec > 0.6 * budgetSec)
             val t = if (t1 > retryThreshold(name) && mayRerun) {
               reruns += 1; once().fold(_ => t1, math.min(t1, _))
             } else t1
+            record(name, "ok", None, Some(t))
             Some(name -> t)
         }
       }
     }
+    records.close()
     val canaryLast = SparkEntry.queries.get(canaryKey).map(timeOnce)
     // ratio vs the quiet pin uses the MIN of the two probes (the first
     // pays one-time codegen for the plan): a quiet box reads ~1, a
@@ -176,6 +198,7 @@ object Bench {
       s""","n_failed":${failed.size},"failed":${failed.map { case (k, c) =>
         "\"" + k + "\":\"" + c + "\"" }.mkString("{", ",", "}")}"""
     else ""
+    println(s"[bench] per-query records: $recordsPath")
     println(s"""{"metric":"total","value":$total,"unit":"sec","rerun":$reruns$canary,"io_rows":$warm$partial$skipJson$failJson,"queries":$qs,"sf":"$sfDir"}""")
     // The harness keeps only the last ~2KB of output; the full per-query line
     // above (~4KB at 116 queries) gets truncated mid-JSON there. Emit a second,

@@ -24,6 +24,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // custom physical operator: as-of join (plans.AsOfJoinPlan -> Exec)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)
     // custom optimizer rule: band pure range joins into equi-joins
-    ext.injectOptimizerRule(_ => graft.plans.BandRangeJoinRule)
+    ext.injectOptimizerRule(s => new graft.plans.BandRangeJoinRule(s))
   }
 }

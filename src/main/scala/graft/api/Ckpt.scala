@@ -1,6 +1,11 @@
 package graft.api
 
+import scala.reflect.ClassTag
+
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for the iterative family (PageRank/HITS/eigen/CC/
   * k-core/SSSP loops and the multi-consumer frames of the pair ops).
@@ -70,27 +75,46 @@ object Ckpt {
       finally conf.set("spark.sql.adaptive.enabled", old)
     }
 
+  /** Whether `graft.checkpoint.dir` is set, applying it to `sc` first.
+    * (Re-)applies whenever the configured dir is not the one THIS object
+    * applied — a dir pre-set by a test or the deployment must not silently
+    * override -Dgraft.checkpoint.dir. getCheckpointDir can't be compared
+    * directly (setCheckpointDir appends a UUID subdir), hence the
+    * appliedDir bookkeeping.
+    */
+  private def reliable(sc: SparkContext): Boolean = dir match {
+    case Some(d) =>
+      Ckpt.synchronized {
+        if (!appliedDir.contains(d) || sc.getCheckpointDir.isEmpty) {
+          sc.setCheckpointDir(d)
+          appliedDir = Some(d)
+        }
+      }
+      true
+    case None => false
+  }
+
+  /** The RDD counterpart of [[CkptOps.cp]]: marks `rdd` for a local (or,
+    * under `graft.checkpoint.dir`, a persisted reliable) checkpoint and
+    * runs the ONE job that materializes it, returning `f` of each
+    * partition — the build job of a loop's blocks doubles as the job that
+    * reports their shape.
+    */
+  def materialize[T, U: ClassTag](rdd: RDD[T])(f: Iterator[T] => U): Array[U] = {
+    if (reliable(rdd.sparkContext)) {
+      rdd.persist(StorageLevel.MEMORY_AND_DISK)
+      rdd.checkpoint()
+    } else rdd.localCheckpoint()
+    rdd.sparkContext.runJob(rdd, f)
+  }
+
   implicit class CkptOps(private val df: DataFrame) extends AnyVal {
 
     /** Eager lineage truncation: `localCheckpoint()` by default, reliable
       * `checkpoint()` under `-Dgraft.checkpoint.dir` (see [[Ckpt]]).
       */
-    def cp(): DataFrame = Ckpt.dir match {
-      case Some(d) =>
-        val sc = df.sparkSession.sparkContext
-        // (re-)apply whenever the configured dir is not the one THIS
-        // object applied — a dir pre-set by a test or the deployment must
-        // not silently override -Dgraft.checkpoint.dir. getCheckpointDir
-        // can't be compared directly (setCheckpointDir appends a UUID
-        // subdir), hence the appliedDir bookkeeping.
-        Ckpt.synchronized {
-          if (!Ckpt.appliedDir.contains(d) || sc.getCheckpointDir.isEmpty) {
-            sc.setCheckpointDir(d)
-            Ckpt.appliedDir = Some(d)
-          }
-        }
-        df.checkpoint()
-      case None => df.localCheckpoint()
-    }
+    def cp(): DataFrame =
+      if (reliable(df.sparkSession.sparkContext)) df.checkpoint()
+      else df.localCheckpoint()
   }
 }

@@ -1,6 +1,9 @@
 package graft.api
 
+import org.apache.spark.SparkContext
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -244,71 +247,206 @@ object GraphAlgebra {
     * BOTH directions present for undirected semantics.
     * `personalized = Some(src)` teleports all reset mass to the source.
     *
-    * Scale shape: the invariant degree-annotated edge list is materialized
-    * once; each iteration is ONE broadcast join over |E| plus one
-    * partial+final aggregation, with the |V|-row rank frame
-    * lineage-truncated per superstep (otherwise AQE re-optimizes the whole
-    * accumulated tree at every stage boundary — planning, not data,
-    * dominates). Iteration covers ACTIVE (deg ≥ 1) vertices only — the
-    * symmetric graph guarantees each receives a contribution row — and
-    * isolated vertices rejoin at the end with the constant reset rank.
-    * |V| ≪ |E| justifies the broadcast hint at moderate scale, and the
-    * hint is GATED on |V| ≤ `broadcastMaxRows` (|V| is already paid for by
-    * the reset term): a billion-vertex graph automatically takes the
-    * plain-join path instead of OOMing on an unconditional broadcast.
+    * [[powerIterate]] with [[PowerStep.PageRank]] runs over the ACTIVE
+    * (deg ≥ 1) vertices, each of which the symmetric graph feeds every
+    * step; isolated vertices rejoin with the rank of a vertex fed nothing,
+    * the reset term. |V| is counted only for the uniform reset.
     */
   def pageRankExact(vertices: DataFrame, edgesBoth: DataFrame, iters: Int,
                     personalized: Option[Long],
                     broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val both = edgesBoth.select(col("a"), col("b")).cp()
-    // three consumers (ed build, rank init, isolated anti-join) — cp so
-    // the |E| degree rollup runs once (r15, guide §2.4)
-    val deg = both.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
-      .cp()
     val parts = vertices.select(col("part"))
-    val nDf = parts.agg(count(lit(1)).as("n")).cp()
-    // |V| gates every broadcast below; rank/degree frames never exceed it
-    val nV = nDf.first().getLong(0)
-    // pre-partitioned on the GROUP key `edst`: with the rank side broadcast
-    // (the common, gated case) each iteration's contribution aggregation
-    // inherits this clustering and runs exchange-free — `iters` |E|-stream
-    // shuffles become this single upfront one (r6 VERDICT item #6). The
-    // un-hinted fallback (|V| over the ceiling) shuffles as before.
-    val ed = Ckpt.cpByKey(
-      both.join(hinted(deg, nV, broadcastMaxRows), col("a") === col("v"))
-        .select(col("a").as("esrc"), col("b").as("edst"), col("deg")),
-      col("edst"))
-    val resetOf: Column => Column = personalized match {
-      case Some(src) => v => when(v === src, lit(PrScale * 15 / 100)).otherwise(lit(0L))
-      case None => _ => expr(s"${PrScale * 15} div (n * 100)")
+    val op = PowerStep.PageRank(
+      if (personalized.isEmpty) parts.count() else 0L, personalized)
+    val Seq(ranks) = powerIterate(
+      Seq(edgesBoth.select(col("a").as("src"), col("b").as("dst")).cp()),
+      iters, op, broadcastMaxRows)
+    val reset = udf((v: Long) => op.update(iters, v, 0L, 0L))
+    ranks.select(col("id").as("part"), col("x").as("r")).unionAll(
+      parts.join(ranks, col("part") === col("id"), "left_anti")
+        .select(col("part"), reset(col("part")).as("r")))
+  }
+
+  /** Per-vertex BIGINT arithmetic of a [[powerIterate]] loop: each src
+    * vertex sends `send(x, deg)` along its `deg` edges, and each dst vertex
+    * becomes `update(step, id, sum, max)` (`max`: the step's largest sum).
+    * Plain Scala with `Math.*Exact` and floor division, run on the driver
+    * below the broadcast gate and as a UDF above it: each op's arithmetic
+    * is written once, and an overflow throws in both regimes.
+    */
+  sealed abstract class PowerStep extends Serializable {
+    def init(id: Long): Long
+    def send(x: Long, deg: Long): Long = x
+    def update(step: Int, id: Long, sum: Long, max: Long): Long
+    /** `update` reads `max` (an aggregate per step above the gate). */
+    def usesMax: Boolean = false
+  }
+
+  object PowerStep {
+
+    /** Mass scaled by [[PrScale]], damping 85/100, `x div deg` sent; the
+      * reset is uniform over `n` vertices, or all at `source`.
+      */
+    final case class PageRank(n: Long, source: Option[Long]) extends PowerStep {
+      def init(id: Long): Long =
+        source.fold(Math.floorDiv(PrScale, n))(s => if (id == s) PrScale else 0L)
+      override def send(x: Long, deg: Long): Long = Math.floorDiv(x, deg)
+      def update(step: Int, id: Long, sum: Long, max: Long): Long = Math.addExact(
+        source.fold(Math.floorDiv(PrScale * 15, Math.multiplyExact(n, 100L)))(
+          s => if (id == s) PrScale * 15 / 100 else 0L),
+        Math.floorDiv(Math.multiplyExact(sum, 85L), 100L))
     }
-    var ranks: DataFrame = personalized match {
-      case Some(src) => deg.select(col("v").as("part"),
-        when(col("v") === src, lit(PrScale)).otherwise(lit(0L)).as("r"))
-      case None => deg.crossJoin(broadcast(nDf))
-        .select(col("v").as("part"), expr(s"$PrScale div n").as("r"))
+
+    /** HITS / eigenvector step: the sum over `greatest(1, max div scale)`. */
+    final case class MaxNormalized(scale: Long) extends PowerStep {
+      def init(id: Long): Long = scale
+      def update(step: Int, id: Long, sum: Long, max: Long): Long =
+        Math.floorDiv(sum, math.max(1L, Math.floorDiv(max, scale)))
+      override def usesMax: Boolean = true
     }
-    for (_ <- 1 to iters) {
-      val csums = ed.join(hinted(ranks, nV, broadcastMaxRows), col("esrc") === col("part"))
-        .groupBy(col("edst")).agg(sum(expr("r div deg")).as("csum"))
-      val withN = if (personalized.isEmpty) csums.crossJoin(broadcast(nDf)) else csums
-      ranks = withN.select(col("edst").as("part"),
-        (resetOf(col("edst")) + expr("csum * 85 div 100")).as("r"))
-        .cp()
+
+    /** Katz walk counts, attenuation 1/`invAlpha`, in Horner form: 1, then
+      * sum + invAlphaᵏ at step k, i.e. invAlphaᵏ · Σ_{j ≤ k} invAlpha⁻ʲ ·
+      * (walks of length j into the vertex) — no division.
+      */
+    final case class Katz(invAlpha: Long) extends PowerStep {
+      def init(id: Long): Long = 1L
+      def update(step: Int, id: Long, sum: Long, max: Long): Long =
+        Math.addExact(sum, (1 to step).foldLeft(1L)((w, _) => Math.multiplyExact(w, invAlpha)))
     }
-    val isolated = parts.join(deg, col("part") === col("v"), "left_anti")
-    val isoRanks = (if (personalized.isEmpty) isolated.crossJoin(broadcast(nDf)) else isolated)
-      .select(col("part"), resetOf(col("part")).as("r"))
-    ranks.unionAll(isoRanks)
+  }
+
+  /** Exact sparse power iteration, the one loop behind PageRank, HITS,
+    * eigenvector centrality and Katz: each step, every dst vertex sums what
+    * its src in-neighbours send and applies `op`'s update. `phases` are
+    * (src, dst) frames run in turn — one for a symmetric graph, two for
+    * HITS's orientations; phase k's dst vertices must be the next phase's
+    * src vertices, and the state starts as `op.init` over phase 0's. Each
+    * phase is read twice, so pass it checkpointed. Returns, per phase, the
+    * last (id, x) state over its dst vertices (the initial state for the
+    * last phase until it runs).
+    *
+    * With every phase's src count ≤ `broadcastMaxRows`, the sorted ids and
+    * degrees are collected once, each phase is shuffled by dst ONCE into
+    * int-indexed CSR blocks ([[Ckpt.materialize]]), and a step is ONE
+    * job: the state broadcast as a `long[]`, a `runJob` of `Math.addExact`
+    * row sums, the update on the driver. Above the gate a step is a plain
+    * join + sum (ANSI) over the edge frame clustered by dst, with the same
+    * update as a UDF.
+    */
+  def powerIterate(phases: Seq[DataFrame], steps: Int, op: PowerStep,
+                   broadcastMaxRows: Long = BroadcastMaxRows): Seq[DataFrame] = {
+    val nP = phases.size
+    require(nP >= 1 && steps >= nP - 1, s"powerIterate: $nP phases, $steps steps")
+    val sess = phases.head.sparkSession
+    val sc = sess.sparkContext
+    val es = phases.map(_.select(col("src"), col("dst")))
+    val degs = es.map(_.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
+    val degRows = degs.map(_.queryExecution.toRdd)
+    val sizes = degRows.map(r => sc.runJob(r, (it: Iterator[InternalRow]) => it.size.toLong).sum)
+    // state(k): the latest values over phase k's dst = phase k + 1's src
+    def next(k: Int) = (k + 1) % nP
+    def prev(k: Int) = (k + nP - 1) % nP
+    if (sizes.forall(_ <= math.min(broadcastMaxRows, Int.MaxValue))) {
+      val (ids, deg) = degRows.map(collectSorted(sc, _)).unzip
+      val bIds = ids.map(sc.broadcast(_))
+      val np = sess.sessionState.conf.numShufflePartitions
+      val blocks = (0 until nP).map { k =>
+        val (bSrc, bDst) = (bIds(k), bIds(next(k)))
+        val rdd = es(k).repartition(np, col("dst")).queryExecution.toRdd
+          .mapPartitions(rows => Iterator.single(CsrBlock(rows, bSrc.value, bDst.value)))
+        (rdd, Ckpt.materialize(rdd)(_.next().rows))
+      }
+      val state = new Array[Array[Long]](nP)
+      state(nP - 1) = ids(0).map(op.init)
+      for (step <- 1 to steps; k = (step - 1) % nP) {
+        val (x, d, (blk, rows)) = (state(prev(k)), deg(k), blocks(k))
+        val msg = sc.broadcast(Array.tabulate(x.length)(i => op.send(x(i), d(i))))
+        val part = sc.runJob(blk, (it: Iterator[CsrBlock]) => it.next().sums(msg.value))
+        msg.destroy()
+        val sum = new Array[Long](ids(next(k)).length)
+        for (p <- part.indices; j <- part(p).indices) sum(rows(p)(j)) = part(p)(j)
+        val mx = if (sum.isEmpty) 0L else sum.max
+        state(k) = Array.tabulate(sum.length)(i => op.update(step, ids(next(k))(i), sum(i), mx))
+      }
+      // every step job serializes the blocks' closure, which holds the id
+      // broadcasts: destroy them only now
+      blocks.foreach(_._1.unpersist(blocking = false))
+      bIds.foreach(_.destroy())
+      import sess.implicits._
+      (0 until nP).map(k => ids(next(k)).zip(state(k)).toSeq.toDF("id", "x"))
+    } else {
+      val degF = degs.map(_.cp())
+      val eds = (0 until nP).map(k => Ckpt.cpByKey(
+        es(k).join(degF(k), col("src") === col("id")).select(col("src"), col("dst"), col("deg")),
+        col("dst")))
+      val send = udf((x: Long, d: Long) => op.send(x, d))
+      val state = new Array[DataFrame](nP)
+      val init = udf((v: Long) => op.init(v))
+      state(nP - 1) = degF(0).select(col("id"), init(col("id")).as("x"))
+      for (step <- 1 to steps; k = (step - 1) % nP) {
+        val sums = eds(k).join(state(prev(k)), col("src") === col("id"))
+          .groupBy(col("dst").as("id")).agg(sum(send(col("x"), col("deg"))).as("s"))
+        val (s, mx) = if (!op.usesMax) (sums, 0L) else {
+          val c = sums.cp()
+          (c, c.agg(coalesce(max(col("s")), lit(0L))).first().getLong(0))
+        }
+        val update = udf((v: Long, t: Long) => op.update(step, v, t, mx))
+        state(k) = s.select(col("id"), update(col("id"), col("s")).as("x")).cp()
+      }
+      state.toSeq
+    }
+  }
+
+  /** (ids ascending, their degrees) from (id, deg) rows. */
+  private def collectSorted(sc: SparkContext, rows: RDD[InternalRow]): (Array[Long], Array[Long]) = {
+    val parts = sc.runJob(rows, (it: Iterator[InternalRow]) =>
+      it.map(r => (r.getLong(0), r.getLong(1))).toArray)
+    val ids = parts.flatMap(_.map(_._1))
+    java.util.Arrays.sort(ids)
+    val deg = new Array[Long](ids.length)
+    for (p <- parts; (v, d) <- p) deg(java.util.Arrays.binarySearch(ids, v)) = d
+    (ids, deg)
+  }
+
+  /** One partition of a [[powerIterate]] phase in CSR form: its dst
+    * vertices' indices `rows`, and row r's in-neighbours' src indices
+    * `srcs(ptr(r) until ptr(r + 1))`.
+    */
+  private final case class CsrBlock(rows: Array[Int], ptr: Array[Int], srcs: Array[Int]) {
+    /** Per row, the exact sum of `x` over its in-neighbours. */
+    def sums(x: Array[Long]): Array[Long] = Array.tabulate(rows.length) { r =>
+      var (s, j) = (0L, ptr(r))
+      while (j < ptr(r + 1)) { s = Math.addExact(s, x(srcs(j))); j += 1 }
+      s
+    }
+  }
+
+  private object CsrBlock {
+    /** Index (src, dst) rows into the sorted id spaces and group them by
+      * dst: one primitive sort of (dst << 32 | src) keys.
+      */
+    def apply(edges: Iterator[InternalRow], srcIds: Array[Long], dstIds: Array[Long]): CsrBlock = {
+      def index(ids: Array[Long], v: Long): Long = {
+        val i = java.util.Arrays.binarySearch(ids, v)
+        require(i >= 0, s"powerIterate: dst $v is not a src vertex of the next phase")
+        i.toLong
+      }
+      val keys = edges
+        .map(r => index(dstIds, r.getLong(1)) << 32 | index(srcIds, r.getLong(0))).toArray
+      java.util.Arrays.sort(keys)
+      val starts = keys.indices.filter(i => i == 0 || keys(i) >>> 32 != keys(i - 1) >>> 32).toArray
+      CsrBlock(starts.map(i => (keys(i) >>> 32).toInt), starts :+ keys.length, keys.map(_.toInt))
+    }
   }
 
   /** BATCH personalized PageRank — ALL sources at once: the reference's
     * per-user recommendation serving (one PPR per user) expressed as ONE
     * dataflow keyed by an extra source column, instead of |S| driver-looped
-    * jobs. Arithmetic is the same exact scaled-BIGINT iteration as
-    * [[pageRankExact]], so per source the nonzero ranks are bit-identical
-    * to the single-source op (ApiSpec pins this) and the whole batch is
-    * DuckDB-oracle hash-checkable.
+    * jobs. Arithmetic is [[PowerStep.PageRank]]'s exact scaled-BIGINT
+    * step spelled as SQL over the (s, part) state, so per source the
+    * nonzero ranks are bit-identical to [[pageRankExact]]'s (ApiSpec pins
+    * this) and the whole batch is DuckDB-oracle hash-checkable.
     *
     * The rank state is SUPPORT-SPARSE: a (s, part) row exists only once
     * mass has reached `part` from `s` (rank-0 vertices are represented by
@@ -335,8 +473,8 @@ object GraphAlgebra {
     val both = edgesBoth.select(col("a"), col("b")).cp()
     val deg = both.groupBy(col("a").as("v")).agg(count(lit(1)).as("deg"))
     val nV = vertices.select(col("part")).count()
-    // same pre-partitioning as [[pageRankExact]]: HashPartitioning(edst)
-    // satisfies the (s, edst) clustered distribution of the contribution
+    // pre-partitioned on the GROUP key: HashPartitioning(edst) satisfies
+    // the (s, edst) clustered distribution of the contribution
     // aggregation, so the broadcast-rank iterations add no |E| exchange
     val ed = Ckpt.cpByKey(
       both.join(hinted(deg, nV, broadcastMaxRows), col("a") === col("v"))

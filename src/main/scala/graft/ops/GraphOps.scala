@@ -1274,53 +1274,21 @@ object GraphOps {
     * division (`x div greatest(1, max div 1e12)` — identical floor on both
     * engines for these positive values), so all 6 iterations are
     * bit-identical and the op is oracle-checkable via an unrolled
-    * MATERIALIZED-CTE chain. Per half-step: one |E| join + one agg + a
-    * 1-row broadcast scalar — the same shuffle budget as a PageRank
-    * iteration. Overflow-safe by construction: scores ≤ ~2e12 after
-    * normalization, edge fan-in ≤ max degree, so Σ < 2e12·d_max ≪ 2⁶³.
+    * MATERIALIZED-CTE chain. The 12 half-steps are
+    * [[graft.api.GraphAlgebra.powerIterate]] over two phases, customer →
+    * part and part → customer, with
+    * [[graft.api.GraphAlgebra.PowerStep.MaxNormalized]]: one CSR build per
+    * orientation, then one Spark job per half-step. Overflow-safe by
+    * construction: scores ≤ ~2e12 after normalization, edge fan-in ≤ max
+    * degree, so Σ < 2e12·d_max ≪ 2⁶³ (and an overflow would throw).
     */
   val graphHits: Q = (s, dir) => {
     import s.implicits._
-    val S = 1000000000000L
-    // checkpoint the edge build ONCE — the two keyed copies below each
-    // materialize from it (the old raw lineage re-ran orders⋈lineitem per
-    // copy — guide §2.4)
-    val e0 = edges(s, dir).select($"src", $"dst").cp()
-    // TWO pre-partitioned edge copies, one per half-step direction: each is
-    // hash-clustered on that half-step's GROUP key, so once the (gated)
-    // broadcast attaches the scores, the |E|-stream aggregation inherits
-    // the clustering and needs NO exchange — the 12 per-half-step |E|
-    // shuffles of the naive loop collapse into these 2 upfront ones
-    // (r6 VERDICT item #6).
-    val eByDst = graft.api.Ckpt.cpByKey(e0, $"dst")
-    val eBySrc = graft.api.Ckpt.cpByKey(e0, $"src")
-    var h = eBySrc.select($"src".as("id")).distinct()
-      .withColumn("x", lit(S)).cp()
-    // score frames stay within the vertex sets; one count each gates the
-    // 12 broadcast hints (the GraphAlgebra posture: no unconditional hint)
-    val nHub = h.count()
-    val nAuth = eByDst.select($"dst").distinct().count()
-    def halfStep(scores: DataFrame, nScores: Long, key: String, out: String,
-                 eBy: DataFrame): DataFrame = {
-      // scores: (id, x) on the `key` side; returns normalized (id, x) on `out`
-      // raw is cp'd BEFORE q derives from it: the exchange-free groupBy
-      // leaves no reusable exchange, so an unmaterialized raw re-ran the
-      // |E| join+agg inside the broadcast-q subtree every half-step
-      // (the graph_eigencentrality r15 fix, ×12 half-steps here)
-      val raw = eBy.join(graft.api.GraphAlgebra.hintedFrame(
-          scores.withColumnRenamed("id", key), nScores), key)
-        .groupBy(col(out).as("id")).agg(sum($"x").as("xr"))
-        .cp()
-      val q = raw.agg(expr(s"greatest(CAST(1 AS BIGINT), max(xr) div $S)").as("q"))
-      raw.crossJoin(broadcast(q))
-        .select($"id", expr("xr div q").as("x"))
-        .cp()
-    }
-    var a: DataFrame = null
-    for (_ <- 1 to 6) {
-      a = halfStep(h, nHub, "src", "dst", eByDst) // authorities from hubs
-      h = halfStep(a, nAuth, "dst", "src", eBySrc) // hubs from authorities
-    }
+    // one edge build, read by both orientations' CSR builds
+    val e = edges(s, dir).select($"src", $"dst").cp()
+    val Seq(a, h) = graft.api.GraphAlgebra.powerIterate(
+      Seq(e, e.select($"dst".as("src"), $"src".as("dst"))), steps = 12,
+      graft.api.GraphAlgebra.PowerStep.MaxNormalized(1000000000000L))
     val topA = a.orderBy($"x".desc, $"id").limit(20)
       .select(lit("p").as("side"), $"id", $"x".as("score_scaled"))
     val topH = h.orderBy($"x".desc, $"id").limit(20)
@@ -1331,36 +1299,17 @@ object GraphOps {
   /** Eigenvector centrality on the undirected co-purchase graph — the
     * "important because its neighbors are important" ranking (PageRank's
     * undamped sibling; the reference genre's influence query). Same exact
-    * integer power-iteration machinery as [[graphHits]]: 6 iterations of
+    * integer power iteration as [[graphHits]] on one phase: 6 steps of
     * x' = A·x over scaled BIGINTs, each max-normalized by a truncating
-    * division — bit-identical across engines, unrolled MATERIALIZED-CTE
-    * oracle. Per iteration one |E| join + agg + a 1-row broadcast scalar.
+    * division ([[graft.api.GraphAlgebra.powerIterate]] with
+    * [[graft.api.GraphAlgebra.PowerStep.MaxNormalized]]) — bit-identical
+    * across engines, unrolled MATERIALIZED-CTE oracle.
     */
   val graphEigencentrality: Q = (s, dir) => {
     import s.implicits._
-    val S = 1000000000000L
-    // pre-partitioned on the GROUP key `a`: the per-iteration aggregation
-    // inherits the clustering through the broadcast-joined score frame and
-    // runs exchange-free — 6 |E|-stream shuffles become this 1 (r6 VERDICT
-    // item #6)
-    val both = graft.api.Ckpt.cpByKey(copurchaseBoth(s, dir), $"a")
-    var x = both.select($"a".as("id")).distinct()
-      .withColumn("x", lit(S)).cp()
-    val nV = x.count() // gates the 6 score-side broadcast hints
-    for (_ <- 1 to 6) {
-      // cp the |V|-row neighbor-sum BEFORE deriving q from it: the groupBy
-      // is exchange-free (cpByKey clustering), so without a checkpoint
-      // there is no reusable exchange and the broadcast-q subtree re-ran
-      // the whole |E| join+agg a second time every round (r15, guide §2.4)
-      val raw = both.join(graft.api.GraphAlgebra.hintedFrame(
-          x.withColumnRenamed("id", "b"), nV), "b")
-        .groupBy($"a".as("id")).agg(sum($"x").as("xr"))
-        .cp()
-      val q = raw.agg(expr(s"greatest(CAST(1 AS BIGINT), max(xr) div $S)").as("q"))
-      x = raw.crossJoin(broadcast(q))
-        .select($"id", expr("xr div q").as("x"))
-        .cp()
-    }
+    val both = copurchaseBoth(s, dir).select($"b".as("src"), $"a".as("dst")).cp()
+    val Seq(x) = graft.api.GraphAlgebra.powerIterate(Seq(both), steps = 6,
+      graft.api.GraphAlgebra.PowerStep.MaxNormalized(1000000000000L))
     x.orderBy($"x".desc, $"id").limit(20)
       .select($"id".as("part"), $"x".as("score_scaled"))
   }
@@ -2378,7 +2327,9 @@ object GraphOps {
 
   val graphScc: Q = (s, dir) => {
     import s.implicits._
-    val e = transitionBackbone(s, dir)
+    // checkpointed once: the SCC loop materializes both the edges and the
+    // exploded vertices, and each would otherwise rerun the lineitem window
+    val e = transitionBackbone(s, dir).cp()
     // explode, not a self-union: two projections of the same checkpointed
     // frame trip Catalyst's union constraint rewrite (shared expr ids)
     val verts = e.select(explode(array($"src", $"dst")).as("id")).distinct()
@@ -2652,34 +2603,20 @@ object GraphOps {
     * dominant-eigenvector limit: katz₄ = Σ_{k≤4} α^k·(walks of length k
     * into the node). Multiplying through by 4⁴ makes it EXACT integer
     * arithmetic — katz_scaled = 256 + 64·p₁ + 16·p₂ + 4·p₃ + p₄ with
-    * pₖ₊₁ = Σ_{j∈N(i)} pₖ(j), four checkpointed |E|-stream join+agg rounds
-    * (the eigencentrality shape: pre-partitioned on the group key, score
-    * side broadcast-gated) and NO division anywhere. p₄ ≤ d_max⁴ — at an
-    * extreme-hub 100 TB graph the accumulator would widen to
-    * DECIMAL(38,0); BIGINT here, overflow fails loudly under ANSI.
+    * pₖ₊₁ = Σ_{j∈N(i)} pₖ(j) — and NO division anywhere. It runs in Horner
+    * form, yₖ = Σ_{j∈N(i)} yₖ₋₁(j) + 4ᵏ from y₀ = 1, so y₄ = katz_scaled:
+    * four steps of [[graft.api.GraphAlgebra.powerIterate]] with
+    * [[graft.api.GraphAlgebra.PowerStep.Katz]]. p₄ ≤ d_max⁴ — at an
+    * extreme-hub 100 TB graph the accumulator would need DECIMAL(38,0);
+    * BIGINT here, and an overflow throws.
     */
   val graphKatz: Q = (s, dir) => {
     import s.implicits._
-    val both = graft.api.Ckpt.cpByKey(copurchaseBoth(s, dir), $"a")
-    var p = both.select($"a".as("id")).distinct()
-      .withColumn("p", lit(1L)).cp()
-    val nV = p.count() // gates the per-round score-side broadcast hints
-    // fold 256 + Σ wk·pk at the END as one union+sum instead of a join +
-    // checkpoint of the |V| accumulator per round (r15, guide §2.4):
-    // every vertex in `both` has ≥ 1 neighbor, so each pk covers the full
-    // id set and the BIGINT sum is the identical exact accumulator
-    var terms = Seq(p.select($"id", lit(256L).as("t")))
-    for (wk <- Seq(64L, 16L, 4L, 1L)) {
-      p = both.join(graft.api.GraphAlgebra.hintedFrame(
-          p.withColumnRenamed("id", "b"), nV), "b")
-        .groupBy($"a".as("id")).agg(sum($"p").as("p"))
-        .cp()
-      terms = terms :+ p.select($"id", (lit(wk) * $"p").as("t"))
-    }
-    terms.reduce(_ unionAll _)
-      .groupBy($"id").agg(sum($"t").as("acc"))
-      .orderBy($"acc".desc, $"id").limit(20)
-      .select($"id".as("part"), $"acc".as("katz_scaled"))
+    val both = copurchaseBoth(s, dir).select($"b".as("src"), $"a".as("dst")).cp()
+    val Seq(y) = graft.api.GraphAlgebra.powerIterate(Seq(both), steps = 4,
+      graft.api.GraphAlgebra.PowerStep.Katz(4L))
+    y.orderBy($"x".desc, $"id").limit(20)
+      .select($"id".as("part"), $"x".as("katz_scaled"))
   }
 
   /** Overlap coefficient + cosine similarity over the shared-customer

@@ -62,8 +62,15 @@ import org.apache.spark.unsafe.types.CalendarInterval
   * match on the generated band-equality conjunct is kept as a secondary
   * net for joins other rules reconstruct from scratch (tags don't survive
   * node reconstruction).
+  *
+  * The rule belongs to the session it was installed on (`GraftExtensions`
+  * injects one per session, [[BandRangeJoin.install]] adds one): it reads
+  * the policy from that session's conf and runs the cardinality probe on
+  * that session, never on whichever session `SparkSession.active` resolves
+  * to on the optimizing thread.
   */
-object BandRangeJoinRule extends Rule[LogicalPlan] {
+final class BandRangeJoinRule(val session: SparkSession) extends Rule[LogicalPlan] {
+  import BandRangeJoinRule._
 
   /** Fixed-length micros of a calendar interval (reject month components —
     * not a constant duration; days accepted as 86400 s, valid in the
@@ -149,34 +156,6 @@ object BandRangeJoinRule extends Rule[LogicalPlan] {
           if l.outputSet.contains(b) && r.outputSet.contains(a) => (b, a)
     }
 
-  /** Policy for equi+range joins: "auto" | "true" | "false" (see class doc). */
-  val WithEquiKeysConf = "spark.graft.bandRangeJoin.withEquiKeys"
-
-  /** Auto mode bands equi+range joins iff est. key distinct ≤ this. */
-  val AutoMaxDistinctConf = "spark.graft.bandRangeJoin.autoMaxDistinct"
-
-  /** Marks a Join this rule produced — the re-fire guard. */
-  val BandedTag: TreeNodeTag[Boolean] = new TreeNodeTag[Boolean]("graft.bandRangeJoin.banded")
-
-  private val SampleRows = 100000
-
-  /** Re-entrancy latch: the cardinality probe executes a Spark job whose
-    * own optimization runs this rule on the same thread — skip entirely.
-    */
-  private val estimating = new ThreadLocal[Boolean] {
-    override def initialValue: Boolean = false
-  }
-
-  /** Probe results keyed by (canonicalized child, attribute): one probe
-    * per plan shape per session, −1 = probe failed (treated as unknown).
-    */
-  private val cardCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
-
-  /** Number of sampling probes actually EXECUTED (cache misses) — the spec
-    * asserts re-instantiating the same plan shape does not re-probe.
-    */
-  private[graft] val probeCount = new java.util.concurrent.atomic.AtomicLong(0)
-
   /** Estimated distinct count of `attr` in `side`: catalog/CBO column
     * stats when present (free, exact-ish), else a sampled
     * approx_count_distinct over the first [[SampleRows]] rows. None =
@@ -202,7 +181,7 @@ object BandRangeJoinRule extends Rule[LogicalPlan] {
           probeCount.incrementAndGet() // observability: specs pin cache reuse
           estimating.set(true)
           try {
-            val probe = GraftSqlBridge.ofRows(SparkSession.active,
+            val probe = GraftSqlBridge.ofRows(session,
               Project(Seq(Alias(attr, "graft_card_probe")()), side))
             probe.limit(SampleRows)
               .agg(approx_count_distinct(col("graft_card_probe")))
@@ -222,7 +201,7 @@ object BandRangeJoinRule extends Rule[LogicalPlan] {
     pairs.headOption.exists { case (la, ra) =>
       val (side, attr) =
         if (l.stats.sizeInBytes <= r.stats.sizeInBytes) (l, la) else (r, ra)
-      val cap = conf.getConfString(AutoMaxDistinctConf, "256").toLong
+      val cap = session.sessionState.conf.getConfString(AutoMaxDistinctConf, "256").toLong
       estimatedKeyDistinct(side, attr).exists(_ <= cap)
     }
 
@@ -247,7 +226,7 @@ object BandRangeJoinRule extends Rule[LogicalPlan] {
       // ONLY after a bandable bound is found — a plain equi join must
       // never pay a probe
       def equiOk: Boolean =
-        conf.getConfString(WithEquiKeysConf, "auto").toLowerCase match {
+        session.sessionState.conf.getConfString(WithEquiKeysConf, "auto").toLowerCase match {
           case "true" => true
           case "false" => false
           case _ => equiKeyIsLowCardinality(l, r, equiAttrPairs(conjs, l, r))
@@ -301,13 +280,46 @@ object BandRangeJoinRule extends Rule[LogicalPlan] {
   }
 }
 
+object BandRangeJoinRule {
+
+  /** Policy for equi+range joins: "auto" | "true" | "false" (see class doc). */
+  val WithEquiKeysConf = "spark.graft.bandRangeJoin.withEquiKeys"
+
+  /** Auto mode bands equi+range joins iff est. key distinct ≤ this. */
+  val AutoMaxDistinctConf = "spark.graft.bandRangeJoin.autoMaxDistinct"
+
+  /** Marks a Join this rule produced — the re-fire guard. */
+  val BandedTag: TreeNodeTag[Boolean] = new TreeNodeTag[Boolean]("graft.bandRangeJoin.banded")
+
+  private val SampleRows = 100000
+
+  /** Re-entrancy latch: the cardinality probe executes a Spark job whose
+    * own optimization runs this rule on the same thread — skip entirely.
+    */
+  private val estimating = new ThreadLocal[Boolean] {
+    override def initialValue: Boolean = false
+  }
+
+  /** Probe results keyed by (canonicalized child, attribute): one probe
+    * per plan shape per session, −1 = probe failed (treated as unknown).
+    */
+  private val cardCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
+
+  /** Number of sampling probes actually EXECUTED (cache misses) — the spec
+    * asserts re-instantiating the same plan shape does not re-probe.
+    */
+  private[graft] val probeCount = new java.util.concurrent.atomic.AtomicLong(0)
+}
+
 object BandRangeJoin {
   /** Install the rule on a session (idempotent). Also available through
-    * `spark.sql.extensions=graft.GraftExtensions`.
+    * `spark.sql.extensions=graft.GraftExtensions`. A rule inherited from
+    * the session this one was cloned from is replaced by one that owns `s`.
     */
-  def install(s: SparkSession): Unit =
-    if (!s.experimental.extraOptimizations.contains(BandRangeJoinRule)) {
+  def install(s: SparkSession): Unit = {
+    val rules = s.experimental.extraOptimizations
+    if (!rules.exists { case r: BandRangeJoinRule => r.session eq s; case _ => false })
       s.experimental.extraOptimizations =
-        s.experimental.extraOptimizations :+ BandRangeJoinRule
-    }
+        rules.filterNot(_.isInstanceOf[BandRangeJoinRule]) :+ new BandRangeJoinRule(s)
+  }
 }

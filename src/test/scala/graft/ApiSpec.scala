@@ -475,7 +475,8 @@ class ApiSpec extends SparkSpec {
   test("reliable checkpoint path (-Dgraft.checkpoint.dir) is bit-identical to localCheckpoint") {
     import spark.implicits._
     // graph_pagerank exercises pageRankExact's full iterative loop — every
-    // lineage truncation in it routes through Ckpt.cp()
+    // lineage truncation in it routes through Ckpt.cp() or, for the
+    // powerIterate CSR blocks, Ckpt.materialize
     val viaLocal = SparkEntry.queries("graph_pagerank")(spark, sf)
       .collect().map(_.toSeq).toSeq
     val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_").toString
@@ -488,6 +489,13 @@ class ApiSpec extends SparkSpec {
       val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
         .filter(java.nio.file.Files.isRegularFile(_)).count()
       assert(wrote > 0, s"no reliable checkpoint files under $dir")
+      // among them the powerIterate CSR blocks (Java-serialized objects)
+      val csr = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_))
+        .filter(p => new String(java.nio.file.Files.readAllBytes(p), "ISO-8859-1")
+          .contains("CsrBlock"))
+        .count()
+      assert(csr > 0, s"no CSR block checkpoint under $dir")
     } finally {
       System.clearProperty("graft.checkpoint.dir")
       java.nio.file.Files.walk(java.nio.file.Paths.get(dir))

@@ -1145,6 +1145,96 @@ class GraphSpec extends SparkSpec {
     assert(got === graphx)
     assert(got.values.toSet === Set(0L, 100L))
   }
+
+  /** Seeded random undirected graph on ids 1..30 plus a degree-1 chain
+    * 31-32-33-34 and isolated ids 35..40: (vertices, directed edge rows).
+    */
+  private def randomUndirected(seed: Long): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val und = (Seq.fill(70)((1L + rnd.nextInt(30), 1L + rnd.nextInt(30)))
+      .filter { case (a, b) => a != b }.map { case (a, b) => (a min b, a max b) } ++
+      Seq((31L, 32L), (32L, 33L), (33L, 34L))).distinct
+    ((1L to 40L), und ++ und.map(_.swap))
+  }
+
+  /** Plain-Scala integer PageRank replay (d = 85/100, scale 1e12). */
+  private def refPageRank(vs: Seq[Long], e: Seq[(Long, Long)], iters: Int,
+                          src: Option[Long]): Map[Long, Long] = {
+    val S = 1000000000000L
+    val deg = e.groupBy(_._1).map { case (v, es) => v -> es.size.toLong }
+    def reset(v: Long) = src.fold(S * 15 / (vs.size * 100L))(s => if (v == s) S * 15 / 100 else 0L)
+    var r = deg.keys.map(v => v -> src.fold(S / vs.size)(s => if (v == s) S else 0L)).toMap
+    for (_ <- 1 to iters) {
+      val c = e.groupBy(_._2).map { case (v, in) => v -> in.map(x => r(x._1) / deg(x._1)).sum }
+      r = r.keys.map(v => v -> (reset(v) + c.getOrElse(v, 0L) * 85 / 100)).toMap
+    }
+    vs.map(v => v -> r.getOrElse(v, reset(v))).toMap
+  }
+
+  private def xs(df: DataFrame): Map[Long, Long] =
+    df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+
+  test("powerIterate: PageRank, PPR, HITS and Katz equal plain-Scala replays in both regimes") {
+    import spark.implicits._
+    import graft.api.GraphAlgebra.{PowerStep, powerIterate}
+    val S = 1000000000000L
+    for (seed <- 1L to 3L; gate <- Seq(graft.api.GraphAlgebra.BroadcastMaxRows, 0L)) {
+      val (vs, e) = randomUndirected(seed)
+      val msg = s"seed=$seed gate=$gate"
+      val both = e.toDF("a", "b")
+      for (src <- Seq(None, Some(32L), Some(1L + seed)))
+        assert(xs(graft.api.GraphAlgebra.pageRankExact(vs.toDF("part"), both, 10, src,
+          broadcastMaxRows = gate)) === refPageRank(vs, e, 10, src), s"$msg src=$src")
+      // Katz in Horner form: y4 = 256 + 64 p1 + 16 p2 + 4 p3 + p4
+      var p = e.map(_._1).distinct.map(_ -> 1L).toMap
+      var katz = p.map { case (v, _) => v -> 256L }
+      for (w <- Seq(64L, 16L, 4L, 1L)) {
+        p = e.groupBy(_._2).map { case (v, in) => v -> in.map(x => p(x._1)).sum }
+        katz = katz.map { case (v, k) => v -> (k + w * p(v)) }
+      }
+      val Seq(y) = powerIterate(Seq(e.toDF("src", "dst")), 4, PowerStep.Katz(4L), gate)
+      assert(xs(y) === katz, msg)
+      // HITS on a directed bipartite graph whose two id spaces overlap
+      val rnd = new scala.util.Random(seed)
+      val bi = Seq.fill(60)((1L + rnd.nextInt(15), 1L + rnd.nextInt(20))).distinct
+      def norm(m: Map[Long, Long]) = {
+        val q = math.max(1L, m.values.max / S)
+        m.map { case (k, v) => k -> v / q }
+      }
+      var h = bi.map(_._1).distinct.map(_ -> S).toMap
+      var a = Map.empty[Long, Long]
+      for (_ <- 1 to 6) {
+        a = norm(bi.groupBy(_._2).map { case (v, in) => v -> in.map(x => h(x._1)).sum })
+        h = norm(bi.groupBy(_._1).map { case (v, out) => v -> out.map(x => a(x._2)).sum })
+      }
+      val fwd = bi.toDF("src", "dst")
+      val Seq(ga, gh) = powerIterate(Seq(fwd, fwd.select($"dst".as("src"), $"src".as("dst"))),
+        12, PowerStep.MaxNormalized(S), gate)
+      assert(xs(ga) === a, msg)
+      assert(xs(gh) === h, msg)
+    }
+  }
+
+  test("powerIterate: a BIGINT overflow in the sums throws in both regimes") {
+    import spark.implicits._
+    import graft.api.GraphAlgebra.{PowerStep, powerIterate}
+    // two in-neighbours of Long.MaxValue each: the first sum overflows
+    val e = Seq((1L, 3L), (2L, 3L), (3L, 1L), (3L, 2L)).toDF("src", "dst")
+    for (gate <- Seq(graft.api.GraphAlgebra.BroadcastMaxRows, 0L)) {
+      val err = intercept[Exception](
+        powerIterate(Seq(e), 1, PowerStep.MaxNormalized(Long.MaxValue), gate).foreach(_.collect()))
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(_.isInstanceOf[ArithmeticException]), s"gate=$gate: $err")
+    }
+  }
+
+  test("graph_scc scans the transition backbone's lineitem once per call") {
+    // the backbone is checkpointed once and both SCC inputs read it; each
+    // unmaterialized read would rerun the lineitem scan and its window
+    val (_, stages) = sparkEventsDuring(q("graph_scc").collect())
+    val scans = stages.count(_.rddInfos.exists(_.name == "FileScanRDD"))
+    assert(scans === 1, s"$scans lineitem scan stages")
+  }
 }
 
 object GraphSpec {
@@ -1196,4 +1286,5 @@ object GraphSpec {
     }
     label.toMap
   }
+
 }

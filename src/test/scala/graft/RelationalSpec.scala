@@ -356,6 +356,38 @@ class RelationalSpec extends SparkSpec {
     } finally spark.conf.unset(confKey)
   }
 
+  test("BandRangeJoinRule reads its policy and probes on the session that owns it") {
+    val policy = graft.plans.BandRangeJoinRule.WithEquiKeysConf
+    val tag = "spark.graft.test.session"
+    val owner = spark.newSession()
+    val other = spark.newSession()
+    owner.conf.set(tag, "owner")
+    other.conf.set(tag, "other")
+    // under the other session's policy the rule would not even probe
+    other.conf.set(policy, "false")
+    import owner.implicits._
+    // a fresh plan shape: the probe cache keys on the canonicalized plan
+    val salt = System.nanoTime()
+    val l = Seq.tabulate(50)(i => (i % 2L, i * 10L + salt)).toDF("k1", "t1")
+    val r = Seq.tabulate(50)(i => (i % 2L, i * 10L + 5)).toDF("k2", "t2")
+    val plan = l.join(r,
+      $"k1" === $"k2" && $"t2" >= $"t1" - 100L && $"t2" <= $"t1" + 100L)
+      .queryExecution.analyzed
+    val rule = new graft.plans.BandRangeJoinRule(owner)
+    val probes = graft.plans.BandRangeJoinRule.probeCount.get()
+    val prev = SparkSession.getActiveSession
+    var banded = ""
+    val (jobs, _) = sparkEventsDuring {
+      SparkSession.setActiveSession(other)
+      try banded = rule(plan).toString
+      finally prev.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+    }
+    assert(graft.plans.BandRangeJoinRule.probeCount.get() === probes + 1)
+    assert(banded.contains("graft_band"), banded)
+    val sessions = jobs.map(_.getProperty(tag)).toSet
+    assert(sessions === Set("owner"), s"probe jobs ran under $sessions")
+  }
+
   test("BandRangeJoinRule: policy off, no registry plan bands except the pure-range rule op") {
     // the rule pattern-matches every inner join in the session once
     // installed — this pins its blast radius across the ENTIRE registry:

@@ -281,11 +281,12 @@ class ScaleSpec extends SparkSpec {
 
   test("iterative-family mechanism: pre-partitioned checkpointed edges make the per-step agg exchange-free") {
     import spark.implicits._
-    // the graph_hits / eigencentrality / pageRankExact shape: the edge frame
-    // is hash-partitioned on the GROUP key and lineage-truncated; the score
+    // the shape of the remaining cpByKey users (pageRankBatch's edge
+    // frame, the k-core peel, minLabelFixpoint's flow): the edge frame is
+    // hash-partitioned on the GROUP key and lineage-truncated; the state
     // side broadcasts; the aggregation must then inherit the clustering —
-    // zero hash exchanges in the whole step (this is what turns 12
-    // per-iteration |E| shuffles into 2 upfront ones)
+    // zero hash exchanges in the whole step (per-iteration |E| shuffles
+    // become one upfront one)
     val e = api.Ckpt.cpByKey(
       (1 to 1000).map(i => (i.toLong % 50, i.toLong % 97)).toDF("src", "dst"),
       $"dst")
