@@ -1,11 +1,13 @@
 package graft.api
 
-import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+
+import scala.collection.mutable.ArrayBuffer
 
 import graft.graph.GraphBridge
 import Ckpt._
@@ -326,11 +328,11 @@ object GraphAlgebra {
     * last (id, x) state over its dst vertices (the initial state for the
     * last phase until it runs).
     *
-    * With every phase's src count ≤ `broadcastMaxRows`, the sorted ids and
-    * degrees are collected once, each phase is shuffled by dst ONCE into
-    * int-indexed CSR blocks ([[Ckpt.materialize]]), and a step is ONE
-    * job: the state broadcast as a `long[]`, a `runJob` of `Math.addExact`
-    * row sums, the update on the driver. Above the gate a step is a plain
+    * Regimes: with every phase's src count ≤ `broadcastMaxRows`, the sorted
+    * ids and degrees are collected once and each phase becomes one [[Csr]]
+    * (the shared superstep kernel): a step is ONE job, an exact
+    * `Math.addExact` sum per dst row over the broadcast `long[]` state,
+    * with the update on the driver. Above the gate a step is a plain
     * join + sum (ANSI) over the edge frame clustered by dst, with the same
     * update as a UDF.
     */
@@ -339,40 +341,30 @@ object GraphAlgebra {
     val nP = phases.size
     require(nP >= 1 && steps >= nP - 1, s"powerIterate: $nP phases, $steps steps")
     val sess = phases.head.sparkSession
-    val sc = sess.sparkContext
     val es = phases.map(_.select(col("src"), col("dst")))
     val degs = es.map(_.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
-    val degRows = degs.map(_.queryExecution.toRdd)
-    val sizes = degRows.map(r => sc.runJob(r, (it: Iterator[InternalRow]) => it.size.toLong).sum)
     // state(k): the latest values over phase k's dst = phase k + 1's src
     def next(k: Int) = (k + 1) % nP
     def prev(k: Int) = (k + nP - 1) % nP
-    if (sizes.forall(_ <= math.min(broadcastMaxRows, Int.MaxValue))) {
-      val (ids, deg) = degRows.map(collectSorted(sc, _)).unzip
-      val bIds = ids.map(sc.broadcast(_))
-      val np = sess.sessionState.conf.numShufflePartitions
-      val blocks = (0 until nP).map { k =>
-        val (bSrc, bDst) = (bIds(k), bIds(next(k)))
-        val rdd = es(k).repartition(np, col("dst")).queryExecution.toRdd
-          .mapPartitions(rows => Iterator.single(CsrBlock(rows, bSrc.value, bDst.value)))
-        (rdd, Ckpt.materialize(rdd)(_.next().rows))
+    val arrays = degs.map(driverArrays(_, broadcastMaxRows))
+    if (arrays.forall(_.isRight)) {
+      val (ids, deg) = arrays.map(_.toOption.get).unzip
+      val csrs = (0 until nP).map { k =>
+        val csr = Csr(es(k), ids(k), ids(next(k)))
+        for (v <- csr.dsts.iterator.flatten) require(
+          java.util.Arrays.binarySearch(ids(next(k)), v) >= 0,
+          s"powerIterate: dst $v is not a src vertex of the next phase")
+        csr
       }
       val state = new Array[Array[Long]](nP)
       state(nP - 1) = ids(0).map(op.init)
-      for (step <- 1 to steps; k = (step - 1) % nP) {
-        val (x, d, (blk, rows)) = (state(prev(k)), deg(k), blocks(k))
-        val msg = sc.broadcast(Array.tabulate(x.length)(i => op.send(x(i), d(i))))
-        val part = sc.runJob(blk, (it: Iterator[CsrBlock]) => it.next().sums(msg.value))
-        msg.destroy()
-        val sum = new Array[Long](ids(next(k)).length)
-        for (p <- part.indices; j <- part(p).indices) sum(rows(p)(j)) = part(p)(j)
+      try for (step <- 1 to steps; k = (step - 1) % nP) {
+        val (x, d) = (state(prev(k)), deg(k))
+        val sum = csrs(k).fold(Array.tabulate(x.length)(i => op.send(x(i), d(i))), 0L,
+          (a, b) => Math.addExact(a, b))
         val mx = if (sum.isEmpty) 0L else sum.max
         state(k) = Array.tabulate(sum.length)(i => op.update(step, ids(next(k))(i), sum(i), mx))
-      }
-      // every step job serializes the blocks' closure, which holds the id
-      // broadcasts: destroy them only now
-      blocks.foreach(_._1.unpersist(blocking = false))
-      bIds.foreach(_.destroy())
+      } finally csrs.foreach(_.release())
       import sess.implicits._
       (0 until nP).map(k => ids(next(k)).zip(state(k)).toSeq.toDF("id", "x"))
     } else {
@@ -398,45 +390,125 @@ object GraphAlgebra {
     }
   }
 
-  /** (ids ascending, their degrees) from (id, deg) rows. */
-  private def collectSorted(sc: SparkContext, rows: RDD[InternalRow]): (Array[Long], Array[Long]) = {
-    val parts = sc.runJob(rows, (it: Iterator[InternalRow]) =>
+  /** The kernel's driver arrays of the (id, x) `rows` — ids ascending and
+    * their values — when there are at most `maxRows` rows (capped at the
+    * Int index range) with unique ids; otherwise the row count. The count
+    * and the collect are two jobs over ONE RDD, so a shuffle below `rows`
+    * runs once.
+    */
+  private def driverArrays(rows: DataFrame, maxRows: Long)
+      : Either[Long, (Array[Long], Array[Long])] = {
+    val sc = rows.sparkSession.sparkContext
+    val rdd = rows.select(rows.columns.toSeq.map(c => col(c).cast("long")): _*)
+      .queryExecution.toRdd
+    val n = sc.runJob(rdd, (it: Iterator[InternalRow]) => it.size.toLong).sum
+    if (n > math.min(maxRows, Int.MaxValue)) return Left(n)
+    val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) =>
       it.map(r => (r.getLong(0), r.getLong(1))).toArray)
     val ids = parts.flatMap(_.map(_._1))
     java.util.Arrays.sort(ids)
-    val deg = new Array[Long](ids.length)
-    for (p <- parts; (v, d) <- p) deg(java.util.Arrays.binarySearch(ids, v)) = d
-    (ids, deg)
+    if (ids.indices.exists(i => i > 0 && ids(i) == ids(i - 1))) return Left(n)
+    val x = new Array[Long](ids.length)
+    for (p <- parts; (v, d) <- p) x(java.util.Arrays.binarySearch(ids, v)) = d
+    Right((ids, x))
   }
 
-  /** One partition of a [[powerIterate]] phase in CSR form: its dst
-    * vertices' indices `rows`, and row r's in-neighbours' src indices
-    * `srcs(ptr(r) until ptr(r + 1))`.
+  /** `xs` ascending without duplicates. */
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
+    val a = xs.clone()
+    java.util.Arrays.sort(a)
+    Array.range(0, a.length).filter(i => i == 0 || a(i) != a(i - 1)).map(i => a(i))
+  }
+
+  /** The one CSR superstep kernel behind [[powerIterate]],
+    * [[minLabelFixpoint]] and [[frontierHops]] (Pregelix's superstep as
+    * one dataflow): a (src, dst) flow shuffled by dst ONCE into
+    * per-partition [[CsrBlock]]s and materialized ([[Ckpt.materialize]]),
+    * whose dst rows are indexed into the driver's sorted `dstIds`. A round
+    * is [[fold]]: ONE job that folds every dst row's in-neighbour values
+    * out of a broadcast `long[]` state indexed like `srcIds`. Rows of dst
+    * ids outside `dstIds` are dropped, and a src outside `srcIds` sends
+    * the fold's zero — the flow rows the DataFrame loops' joins drop.
+    * [[release]] unpersists the blocks and destroys the id broadcast.
     */
-  private final case class CsrBlock(rows: Array[Int], ptr: Array[Int], srcs: Array[Int]) {
-    /** Per row, the exact sum of `x` over its in-neighbours. */
-    def sums(x: Array[Long]): Array[Long] = Array.tabulate(rows.length) { r =>
-      var (s, j) = (0L, ptr(r))
-      while (j < ptr(r + 1)) { s = Math.addExact(s, x(srcs(j))); j += 1 }
-      s
+  private final class Csr(blocks: RDD[CsrBlock], val dsts: Array[Array[Long]],
+                          srcIds: Array[Long], dstIds: Array[Long]) {
+    private val bSrc = blocks.sparkContext.broadcast(srcIds)
+    private val rows = dsts.map(_.map(java.util.Arrays.binarySearch(dstIds, _)))
+
+    /** Per index of `dstIds`, `f` folded from `zero` over the `x` values
+      * of its in-neighbours (`zero` for a vertex with none).
+      */
+    def fold(x: Array[Long], zero: Long, f: (Long, Long) => Long): Array[Long] = {
+      val sc = blocks.sparkContext
+      val (ids, bx) = (bSrc, sc.broadcast(x))
+      val part = sc.runJob(blocks, (it: Iterator[CsrBlock]) =>
+        it.next().fold(ids.value, bx.value, zero, f))
+      bx.destroy()
+      val out = Array.fill(dstIds.length)(zero)
+      for (p <- part.indices; r <- part(p).indices if rows(p)(r) >= 0) out(rows(p)(r)) = part(p)(r)
+      out
+    }
+
+    def release(): Unit = {
+      blocks.unpersist(blocking = false)
+      bSrc.destroy()
+    }
+  }
+
+  private object Csr {
+    /** `flow`'s (src, dst) rows hash-partitioned on dst and sorted by it
+      * within each partition: the kernel's one read of the flow.
+      */
+    def byDst(flow: DataFrame): RDD[InternalRow] =
+      flow.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
+        .repartition(flow.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
+        .sortWithinPartitions(col("dst")).queryExecution.toRdd
+
+    /** The materialized blocks of [[byDst]] rows and each block's dst ids
+      * (ascending, and disjoint across blocks).
+      */
+    def blocks(byDst: RDD[InternalRow]): (RDD[CsrBlock], Array[Array[Long]]) = {
+      val rdd = byDst.mapPartitions(rows => Iterator.single(CsrBlock(rows)))
+      (rdd, Ckpt.materialize(rdd)(_.next().dst))
+    }
+
+    def apply(flow: DataFrame, srcIds: Array[Long], dstIds: Array[Long]): Csr = {
+      val (rdd, dsts) = blocks(byDst(flow))
+      new Csr(rdd, dsts, srcIds, dstIds)
+    }
+  }
+
+  /** One partition of a [[Csr]]: its dst ids `dst` (ascending), and row
+    * r's in-neighbours `src(srcs(j))` for j in `ptr(r) until ptr(r + 1)`,
+    * where `src` is the block's own ascending src table — so a round looks
+    * each distinct src up in the id space once, not once per edge.
+    */
+  private final case class CsrBlock(dst: Array[Long], ptr: Array[Int], srcs: Array[Int],
+                                    src: Array[Long]) {
+    def fold(ids: Array[Long], x: Array[Long], zero: Long, f: (Long, Long) => Long): Array[Long] = {
+      val xs = src.map { v =>
+        val i = java.util.Arrays.binarySearch(ids, v)
+        if (i >= 0) x(i) else zero
+      }
+      Array.tabulate(dst.length) { r =>
+        var (s, j) = (zero, ptr(r))
+        while (j < ptr(r + 1)) { s = f(s, xs(srcs(j))); j += 1 }
+        s
+      }
     }
   }
 
   private object CsrBlock {
-    /** Index (src, dst) rows into the sorted id spaces and group them by
-      * dst: one primitive sort of (dst << 32 | src) keys.
-      */
-    def apply(edges: Iterator[InternalRow], srcIds: Array[Long], dstIds: Array[Long]): CsrBlock = {
-      def index(ids: Array[Long], v: Long): Long = {
-        val i = java.util.Arrays.binarySearch(ids, v)
-        require(i >= 0, s"powerIterate: dst $v is not a src vertex of the next phase")
-        i.toLong
-      }
-      val keys = edges
-        .map(r => index(dstIds, r.getLong(1)) << 32 | index(srcIds, r.getLong(0))).toArray
-      java.util.Arrays.sort(keys)
-      val starts = keys.indices.filter(i => i == 0 || keys(i) >>> 32 != keys(i - 1) >>> 32).toArray
-      CsrBlock(starts.map(i => (keys(i) >>> 32).toInt), starts :+ keys.length, keys.map(_.toInt))
+    /** Group (src, dst) rows that arrive sorted by dst. */
+    def apply(rows: Iterator[InternalRow]): CsrBlock = {
+      val (s, d) = (Array.newBuilder[Long], Array.newBuilder[Long])
+      rows.foreach { r => s += r.getLong(0); d += r.getLong(1) }
+      val (sv, dv) = (s.result(), d.result())
+      val src = sortedDistinct(sv)
+      val starts = Array.range(0, dv.length).filter(i => i == 0 || dv(i) != dv(i - 1))
+      CsrBlock(starts.map(i => dv(i)), starts :+ dv.length,
+        sv.map(java.util.Arrays.binarySearch(src, _)), src)
     }
   }
 
@@ -940,31 +1012,33 @@ object GraphAlgebra {
   }
 
   /** Connected components WITHOUT GraphX: min-label propagation iterated to
-    * the fixpoint in pure DataFrames on [[minLabelFixpoint]] over the
-    * mirrored pairs (labels lineage-truncated per round, convergence = zero
-    * changed labels). Labels = min vertex id per component — identical to
-    * GraphX ConnectedComponents and to the recursive min-label oracle.
-    * O(graph diameter) rounds: a chain-shaped component whose minimum id
-    * sits at one end takes one round per hop. Adopting the label of the
-    * current label each round would cut that to O(log diameter), but it
-    * costs a second checkpointed join per round, which on the registry's
-    * co-purchase and near-dup graphs outweighs the about one round it
-    * saves. Only [[boruvkaForest]]'s contraction above its
-    * `localContractMax` bound (1M components) can hand this a long chain.
+    * the fixpoint on [[minLabelFixpoint]] over the mirrored pairs
+    * (convergence = zero changed labels). Labels = min vertex id per
+    * component — identical to GraphX ConnectedComponents and to the
+    * recursive min-label oracle. Pairs with an endpoint outside `vertices`
+    * are dropped. O(graph diameter) rounds: a chain-shaped component whose
+    * minimum id sits at one end takes one round per hop. Adopting the
+    * label of the current label each round would cut that to O(log
+    * diameter), but in the DataFrame regime it costs a second
+    * checkpointed join per round, which on the registry's co-purchase and
+    * near-dup graphs outweighs the about one round it saves. Only
+    * [[boruvkaForest]]'s contraction above its `localContractMax` bound
+    * (1M components) can hand this a long chain.
     *
-    * The label-frame broadcast is GATED on |V| ≤ `broadcastMaxRows`, and
-    * rounds after the first propagate ONLY from the frontier — the rows
-    * whose label improved last round (see [[minLabelFixpoint]]).
+    * Regimes: with |V| ≤ `broadcastMaxRows` the labels are a driver
+    * `long[]` and each round is ONE job of the [[Csr]] kernel over the
+    * pairs, read once; above it the pairs are checkpointed once and the
+    * rounds propagate ONLY from the frontier — the rows whose label
+    * improved last round — with the label-frame broadcast GATED on its row
+    * count (see [[minLabelFixpoint]]). The mirror is one `explode`, so the
+    * caller's pair lineage is read once in either regime.
     */
   def connectedComponentsDf(vertices: DataFrame, pairs: DataFrame,
                             broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    // checkpoint the caller's pair lineage ONCE before mirroring: the
-    // union's two branches would otherwise each re-derive it during the
-    // cpByKey materialization (for graph_cc_df that is the whole
-    // co-purchase self-join, twice — guide §2.4)
-    val cp = pairs.select(col("a"), col("b")).cp()
-    val flow = cp.select(col("a").as("from"), col("b").as("to"))
-      .unionAll(cp.select(col("b").as("from"), col("a").as("to")))
+    val flow = pairs.select(explode(array(
+        struct(col("a").as("from"), col("b").as("to")),
+        struct(col("b").as("from"), col("a").as("to")))).as("e"))
+      .select(col("e.from"), col("e.to"))
     minLabelFixpoint(vertices.select(col("part").as("id"), col("part").as("lbl")),
         flow, 0, broadcastMaxRows)
       .select(col("id"), col("lbl").as("comp"))
@@ -1132,22 +1206,28 @@ object GraphAlgebra {
 
   /** The one min-label loop behind [[connectedComponentsDf]], both
     * colorings of [[stronglyConnectedComponents]] and [[dagLevels]] — a
-    * Pregel superstep (vertex ⋈ message, halt test in the same plan) as one
-    * DataFrame round. Labels flow `from` → `to` along `flow`, each hop adds
-    * `step`, and every vertex keeps the least label it has seen, until no
-    * label changes. `init` is the hop-0 (id, lbl) frame; the result is
-    * the fixpoint (id, lbl) over the same ids.
+    * Pregel superstep (vertex ⋈ message, halt test in the same round).
+    * Labels flow `from` → `to` along `flow`, each hop adds `step`, and
+    * every vertex keeps the least label it has seen, until no label
+    * changes. `init` is the hop-0 (id, lbl) frame; the result is the
+    * fixpoint (id, lbl) over the same ids. Flow rows with an endpoint
+    * outside `init` are dropped.
     *
-    * The flow is checkpointed once, clustered on its group key `to`. Per
-    * round: the frontier — the rows whose label changed last round, every
-    * row in round 1 — joins the flow, broadcast-GATED on its row count; one
-    * min(lbl) + step aggregate per `to`; `least` against the current label;
-    * one checkpoint and one count of the changed rows, which is both the
-    * halt test and the next round's gate. Frontier gating is exact because
-    * labels only decrease: a vertex whose label did not change last round
-    * has already folded its current label into every flow successor (the
-    * Bellman-Ford queue argument), so every round's labels equal a
-    * full-frame relaxation's.
+    * Regimes: with |V| ≤ `broadcastMaxRows` and unique ids, the labels are
+    * a driver `long[]` and the flow one [[Csr]], read once: a round is ONE
+    * job folding min(lbl) per `to` ([[minLabelRounds]]), and the (id, lbl)
+    * frame is built once at the end. Above the gate the flow is
+    * checkpointed once, clustered on its group key `to`, and a round is
+    * DataFrames: the frontier — the rows whose label changed last round,
+    * every row in round 1 — joins the flow, broadcast-GATED on its row
+    * count; one min(lbl) + step aggregate per `to`; `least` against the
+    * current label; one checkpoint and one count of the changed rows,
+    * which is both the halt test and the next round's gate. Frontier
+    * gating is exact because labels only decrease: a vertex whose label
+    * did not change last round has already folded its current label into
+    * every flow successor (the Bellman-Ford queue argument), so every
+    * round's labels equal a full-frame relaxation's — the kernel's — and
+    * both regimes run the same rounds.
     *
     * With `step` = 0 a label settles once the least label reaching the
     * vertex has arrived, so rounds ≤ the longest shortest flow path + 1.
@@ -1157,32 +1237,64 @@ object GraphAlgebra {
     * cycle lowers labels forever and trips it.
     */
   private def minLabelFixpoint(init: DataFrame, flow: DataFrame, step: Int,
-                               broadcastMaxRows: Long): DataFrame = {
-    val fl = Ckpt.cpByKey(flow.select(col("from"), col("to")), col("to"))
-    var labels = init.select(col("id"), col("lbl")).cp()
-    val nV = labels.count() // label frame stays exactly |V| rows every round
-    var frontier = labels
-    var frontierRows = nV
+                               broadcastMaxRows: Long): DataFrame =
+    driverArrays(init.select(col("id"), col("lbl")), broadcastMaxRows) match {
+      case Right((ids, lbl)) =>
+        val csr = Csr(flow.select(col("from").as("src"), col("to").as("dst")), ids, ids)
+        try minLabelRounds(csr, lbl, step, Array.fill(ids.length)(true))
+        finally csr.release()
+        val sess = init.sparkSession
+        import sess.implicits._
+        ids.zip(lbl).toSeq.toDF("id", "lbl")
+      case Left(nV) =>
+        val fl = Ckpt.cpByKey(flow.select(col("from"), col("to")), col("to"))
+        var labels = init.select(col("id"), col("lbl")).cp()
+        var frontier = labels
+        var frontierRows = nV // the label frame stays exactly |V| rows
+        var round = 0L
+        while (frontierRows > 0) {
+          round += 1
+          require(round <= nV + 1,
+            s"min-label fixpoint did not converge in ${nV + 1} rounds — cycle in input?")
+          val nbrMin = fl.join(hinted(frontier, frontierRows, broadcastMaxRows),
+              col("from") === col("id"))
+            .groupBy(col("to").as("nid")).agg((min(col("lbl")) + step).as("nmin"))
+          // `prev` rides along so the round's diff is a FILTER on the
+          // checkpointed frame instead of a join against the old labels
+          val next = labels.join(nbrMin, col("id") === col("nid"), "left")
+            .select(col("id"), col("lbl").as("prev"),
+              least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
+            .cp()
+          frontier = next.filter(col("lbl") < col("prev"))
+            .select(col("id"), col("lbl"))
+          frontierRows = frontier.count()
+          labels = next.select(col("id"), col("lbl"))
+        }
+        labels
+    }
+
+  /** [[minLabelFixpoint]]'s rounds on the kernel: relaxes `lbl` (indexed
+    * like the csr's ids) in place to its fixpoint over the `live`
+    * vertices; the others neither send nor receive. The changed-row count
+    * is the halt test, under the same `|V| + 1` round guard.
+    */
+  private def minLabelRounds(csr: Csr, lbl: Array[Long], step: Int,
+                             live: Array[Boolean]): Unit = {
+    val nV = live.count(identity).toLong
+    var changed = nV
     var round = 0L
-    while (frontierRows > 0) {
+    while (changed > 0) {
       round += 1
       require(round <= nV + 1,
         s"min-label fixpoint did not converge in ${nV + 1} rounds — cycle in input?")
-      val nbrMin = fl.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("from") === col("id"))
-        .groupBy(col("to").as("nid")).agg((min(col("lbl")) + step).as("nmin"))
-      // `prev` rides along so the round's diff is a FILTER on the
-      // checkpointed frame instead of a join against the old labels
-      val next = labels.join(nbrMin, col("id") === col("nid"), "left")
-        .select(col("id"), col("lbl").as("prev"),
-          least(col("lbl"), coalesce(col("nmin"), col("lbl"))).as("lbl"))
-        .cp()
-      frontier = next.filter(col("lbl") < col("prev"))
-        .select(col("id"), col("lbl"))
-      frontierRows = frontier.count()
-      labels = next.select(col("id"), col("lbl"))
+      val nmin = csr.fold(Array.tabulate(lbl.length)(i => if (live(i)) lbl(i) else Long.MaxValue),
+        Long.MaxValue, (a, b) => math.min(a, b))
+      changed = 0
+      for (i <- lbl.indices if live(i) && nmin(i) != Long.MaxValue && nmin(i) + step < lbl(i)) {
+        lbl(i) = nmin(i) + step
+        changed += 1
+      }
     }
-    labels
   }
 
   /** Strongly connected components of a DIRECTED (src, dst) edge frame —
@@ -1197,77 +1309,109 @@ object GraphAlgebra {
     * minimum id (c is forward-reachable from all members, so c ≤ min; c is
     * a member, so c = min). The remaining-graph minimum always satisfies
     * the predicate, so ≥ 1 SCC retires per round — the round cap is a
-    * convergence assertion, not a semantics knob.
+    * convergence assertion, not a semantics knob. Edges with an endpoint
+    * outside `vertices` are dropped.
     *
-    * Scale shape: every per-round frame is vertex- or edge-sized, the
-    * label joins are broadcast-GATED on measured row counts, and the
-    * subgraph restriction is two semi-joins on the retired set — nothing
-    * materializes pairs. Worst-case outer rounds = the condensation's
-    * chain length (a long path of singleton SCCs) ≤ |V|, so the cap is the
-    * input's vertex count — a valid input can exhaust patience, never trip
-    * a require(); the assertion fires solely on a genuine non-convergence
-    * bug.
+    * Regimes: with |V| ≤ `broadcastMaxRows` (and unique ids) both
+    * orientations become one [[Csr]] each, built once; the retired
+    * vertices are a driver-side mask over both, so a round restricts the
+    * subgraph for free and each coloring round is ONE job
+    * ([[minLabelRounds]]). Above the gate every per-round frame is vertex-
+    * or edge-sized, the label joins are broadcast-GATED on measured row
+    * counts, and the subgraph restriction is two semi-joins on the retired
+    * set, checkpointed per round — nothing materializes pairs. Worst-case
+    * outer rounds = the condensation's chain length (a long path of
+    * singleton SCCs) ≤ |V|, so the cap is the input's vertex count — a
+    * valid input can exhaust patience, never trip a require(); the
+    * assertion fires solely on a genuine non-convergence bug.
     */
   def stronglyConnectedComponents(vertices: DataFrame, edges: DataFrame,
-                                  broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    var remV = vertices.select(col("id")).cp()
-    var remE = edges.select(col("src"), col("dst")).cp()
-    var out: DataFrame = null
-    var nRem = remV.count()
-    // ≥ 1 SCC retires per round ⇒ ≤ |V| rounds suffice for ANY input
-    val roundCap = nRem
-    var round = 0
-    while (nRem > 0) {
-      round += 1
-      require(round <= roundCap,
-        s"SCC coloring did not converge in $roundCap rounds")
-      val own = remV.select(col("id"), col("id").as("lbl"))
-      val fwd = minLabelFixpoint(own,
-        remE.select(col("dst").as("from"), col("src").as("to")), 0,
-        broadcastMaxRows)
-      val bwd = minLabelFixpoint(own,
-        remE.select(col("src").as("from"), col("dst").as("to")), 0,
-        broadcastMaxRows)
-      val done = fwd.as("f").join(bwd.as("b"), col("f.id") === col("b.id"))
-        .filter(col("f.lbl") === col("b.lbl"))
-        .select(col("f.id").as("id"), col("f.lbl").as("scc"))
-        .cp()
-      out = if (out == null) done else out.unionAll(done)
-      remV = remV.join(done.select(col("id")), Seq("id"), "left_anti").cp()
-      nRem = remV.count()
-      if (nRem > 0) {
-        remE = remE
-          .join(remV.select(col("id").as("src")), Seq("src"), "left_semi")
-          .join(remV.select(col("id").as("dst")), Seq("dst"), "left_semi")
-          .select(col("src"), col("dst"))
-          .cp()
-      }
+                                  broadcastMaxRows: Long = BroadcastMaxRows): DataFrame =
+    driverArrays(vertices.select(col("id"), col("id").as("x")), broadcastMaxRows) match {
+      case Right((ids, _)) =>
+        val e = edges.select(col("src"), col("dst"))
+        val Seq(fwd, bwd) = Seq(e.select(col("dst").as("src"), col("src").as("dst")), e)
+          .map(Csr(_, ids, ids))
+        val live = Array.fill(ids.length)(true)
+        val scc = new Array[Long](ids.length)
+        var (left, round) = (ids.length, 0)
+        try while (left > 0) {
+          round += 1
+          require(round <= ids.length, s"SCC coloring did not converge in ${ids.length} rounds")
+          val (f, b) = (ids.clone(), ids.clone())
+          minLabelRounds(fwd, f, 0, live)
+          minLabelRounds(bwd, b, 0, live)
+          for (i <- ids.indices if live(i) && f(i) == b(i)) {
+            scc(i) = f(i)
+            live(i) = false
+            left -= 1
+          }
+        } finally Seq(fwd, bwd).foreach(_.release())
+        val sess = vertices.sparkSession
+        import sess.implicits._
+        ids.zip(scc).toSeq.toDF("id", "scc")
+      case Left(nV) =>
+        var remV = vertices.select(col("id")).cp()
+        var remE = edges.select(col("src"), col("dst")).cp()
+        var out: DataFrame = null
+        var nRem = nV
+        // ≥ 1 SCC retires per round ⇒ ≤ |V| rounds suffice for ANY input
+        val roundCap = nRem
+        var round = 0
+        while (nRem > 0) {
+          round += 1
+          require(round <= roundCap,
+            s"SCC coloring did not converge in $roundCap rounds")
+          val own = remV.select(col("id"), col("id").as("lbl"))
+          val fwd = minLabelFixpoint(own,
+            remE.select(col("dst").as("from"), col("src").as("to")), 0,
+            broadcastMaxRows)
+          val bwd = minLabelFixpoint(own,
+            remE.select(col("src").as("from"), col("dst").as("to")), 0,
+            broadcastMaxRows)
+          val done = fwd.as("f").join(bwd.as("b"), col("f.id") === col("b.id"))
+            .filter(col("f.lbl") === col("b.lbl"))
+            .select(col("f.id").as("id"), col("f.lbl").as("scc"))
+            .cp()
+          out = if (out == null) done else out.unionAll(done)
+          remV = remV.join(done.select(col("id")), Seq("id"), "left_anti").cp()
+          nRem = remV.count()
+          if (nRem > 0) {
+            remE = remE
+              .join(remV.select(col("id").as("src")), Seq("src"), "left_semi")
+              .join(remV.select(col("id").as("dst")), Seq("dst"), "left_semi")
+              .select(col("src"), col("dst"))
+              .cp()
+          }
+        }
+        if (out == null) vertices.select(col("id"), col("id").as("scc"))
+        else out
     }
-    if (out == null) vertices.select(col("id"), col("id").as("scc"))
-    else out
-  }
 
   /** Transitive closure of a seed set along directed (from, to) flow rows:
     * returns the ids reachable from ANY seed, INCLUDING the seeds
     * themselves. Every seed shares lane 0 of [[frontierHops]], so the loop
     * expands each vertex exactly once and runs until the frontier empties
-    * (no hop cap). Total work = O(|reached edges|) across all hops.
+    * (no hop cap). Total work = O(|reached edges|) across all hops. Below
+    * the broadcast gate each hop is one job of the [[Csr]] kernel over one
+    * read of the flow; above it, a checkpointed DataFrame loop.
     */
   def reachClosure(seeds: DataFrame, flow: DataFrame,
                    broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
-    val adj = flow.select(col("from").as("a"), col("to").as("b")).cp()
-    val seed = seeds.select(col("id"), lit(1L).as("mask")).distinct().cp()
-    frontierHops(adj, seed, seed.count(), Int.MaxValue, broadcastMaxRows)
-      ._1.select(col("id"))
+    val seed = seeds.select(col("id"), lit(1L).as("mask")).distinct()
+    val Seq(reached) = frontierHops(flow.select(col("from").as("src"), col("to").as("dst")),
+      Seq((seed, seed.count())), Int.MaxValue, broadcastMaxRows)
+    reached.select(col("id"))
   }
 
   /** Longest-path levels of a DAG given as (src, dst) rows: level(v) = 0
     * for sources, else 1 + max level over predecessors — the topological
     * depth used to schedule/stage a condensation. Runs on
     * [[minLabelFixpoint]] with every label starting at 0 and step −1, so a
-    * label is −level: frontier-gated and broadcast-gated like every label
-    * loop here, and a DAG of depth d converges in d + 1 rounds. The round
-    * cap is derived from the input's vertex count (depth < |V|), so a
+    * label is −level: one [[Csr]] job per round below the broadcast gate,
+    * frontier- and broadcast-gated DataFrame rounds above it, and a DAG of
+    * depth d converges in d + 1 rounds either way. The round cap is
+    * derived from the input's vertex count (depth < |V|), so a
     * chain-shaped DAG of any length converges legitimately — the require()
     * fires only on a true cycle, where levels keep rising past every
     * possible DAG depth.
@@ -1283,49 +1427,97 @@ object GraphAlgebra {
     * [[reachClosure]]: MS-BFS over up to 64 bit lanes (Then et al., "The
     * More the Merrier: Efficient Multi-Source BFS", VLDB 2015). State is
     * keyed by VERTEX with one BIGINT whose bit i records "lane i has
-    * reached this vertex". Per hop: one join of the frontier into the
-    * checkpointed (a, b) adjacency, a bit_or of the reaching lanes per
-    * neighbor (the mask aggregate folds map-side), and the first-reach
-    * bits `contrib & ~visited` — so per (lane, vertex) exactly one hop
-    * emits the bit. The frontier and visited sides are broadcast-GATED on
-    * their row counts, which the loop pays anyway to detect termination;
+    * reached this vertex". Per hop every vertex ORs the frontier masks of
+    * its in-neighbours along the (src, dst) `flow` and keeps the
+    * first-reach bits `contrib & ~visited` — so per (lane, vertex) exactly
+    * one hop emits the bit.
+    *
+    * `passes` are hop-0 (id, mask) seed frames with their row counts, run
+    * in turn over one read of the flow. Returns per pass the (id, dist,
+    * mask) rows of every first reach, the seed rows at dist 0 included.
+    * A pass stops after `maxHops` hops or when its frontier empties.
+    *
+    * Regimes: the flow is shuffled by dst once and its distinct dst ids
+    * counted. With those plus the seed rows ≤ `broadcastMaxRows`, that
+    * shuffle's blocks become one [[Csr]] over the dst and seed ids, the
+    * masks are driver `long[]`s, a hop is ONE job (a `bit_or` fold), and a
+    * pass's frame is built once at its end. Above the gate the shuffled
+    * flow is checkpointed once as the (a, b) adjacency and a hop is
+    * [[frontierHop]]: a join of the frontier into it, a bit_or of the
+    * reaching lanes per neighbor (the mask aggregate folds map-side) and
+    * one checkpoint; the frontier and visited sides are broadcast-GATED on
+    * their row counts, which the loop pays anyway to detect termination, so
     * a frontier that balloons toward |V| degrades to a shuffle join
     * instead of OOMing on the hint.
-    *
-    * `seed` is the checkpointed hop-0 (id, mask) frame with `seedRows`
-    * rows. Returns the final visited (id, mask) frame and the per-hop
-    * first-reach frames (id, dist, mask), hop 1 first. Stops after
-    * `maxHops` hops or when the frontier empties.
     */
-  private def frontierHops(adj: DataFrame, seed: DataFrame, seedRows: Long,
-                           maxHops: Int, broadcastMaxRows: Long)
-      : (DataFrame, Seq[DataFrame]) = {
-    var visited = seed
-    var frontier = seed
-    var frontierRows = seedRows
-    var visitedRows = seedRows // upper bound is enough for the gate
-    var h = 1L
-    var levels = Seq.empty[DataFrame]
-    while (h <= maxHops && frontierRows > 0) {
-      val fresh = frontierHop(adj, frontier, frontierRows, visited,
-        visitedRows, broadcastMaxRows).cp()
-      frontierRows = fresh.count()
-      if (frontierRows > 0) {
-        levels = levels :+ fresh.select(col("id"), lit(h).as("dist"),
-          col("mask"))
-        visited = visited.unionAll(fresh).groupBy(col("id"))
-          .agg(expr("bit_or(mask)").as("mask")).cp()
-        visitedRows += frontierRows
-        frontier = fresh
-        h += 1
+  private def frontierHops(flow: DataFrame, passes: Seq[(DataFrame, Long)], maxHops: Int,
+                           broadcastMaxRows: Long): Seq[DataFrame] = {
+    val sess = flow.sparkSession
+    import sess.implicits._
+    val byDst = Csr.byDst(flow)
+    val nDst = sess.sparkContext.runJob(byDst, (it: Iterator[InternalRow]) => {
+      var (n, last) = (0L, 0L)
+      for (r <- it) { if (n == 0 || r.getLong(1) != last) n += 1; last = r.getLong(1) }
+      n
+    }).sum
+    if (nDst + passes.map(_._2).sum <= math.min(broadcastMaxRows, Int.MaxValue)) {
+      val seeds = passes.map(_._1.select(col("id").cast("long"), col("mask").cast("long"))
+        .collect().map(r => (r.getLong(0), r.getLong(1))))
+      val (blocks, dsts) = Csr.blocks(byDst)
+      val ids = sortedDistinct(dsts.flatten ++ seeds.flatten.map(_._1))
+      val csr = new Csr(blocks, dsts, ids, ids)
+      try seeds.map { seed =>
+        val visited = new Array[Long](ids.length)
+        for ((v, m) <- seed) visited(java.util.Arrays.binarySearch(ids, v)) |= m
+        val reached = ArrayBuffer.from(
+          for (i <- ids.indices if visited(i) != 0) yield (ids(i), 0L, visited(i)))
+        var frontier = visited.clone()
+        var h = 1L
+        while (h <= maxHops && frontier.exists(_ != 0)) {
+          val contrib = csr.fold(frontier, 0L, _ | _)
+          frontier = Array.tabulate(ids.length)(i => contrib(i) & ~visited(i))
+          for (i <- ids.indices if frontier(i) != 0) {
+            visited(i) |= frontier(i)
+            reached += ((ids(i), h, frontier(i)))
+          }
+          h += 1
+        }
+        reached.toSeq.toDF("id", "dist", "mask")
+      } finally csr.release()
+    } else {
+      val adj = GraftSqlBridge.ofInternalRows(sess, byDst, StructType.fromDDL("src BIGINT, dst BIGINT"))
+        .select(col("src").as("a"), col("dst").as("b")).cp()
+      passes.map { case (p, seedRows) =>
+        val seed = p.cp()
+        var visited = seed
+        var frontier = seed
+        var frontierRows = seedRows
+        var visitedRows = seedRows // upper bound is enough for the gate
+        var h = 1L
+        var levels = Seq(seed.select(col("id"), lit(0L).as("dist"), col("mask")))
+        while (h <= maxHops && frontierRows > 0) {
+          val fresh = frontierHop(adj, frontier, frontierRows, visited,
+            visitedRows, broadcastMaxRows).cp()
+          frontierRows = fresh.count()
+          if (frontierRows > 0) {
+            levels = levels :+ fresh.select(col("id"), lit(h).as("dist"),
+              col("mask"))
+            visited = visited.unionAll(fresh).groupBy(col("id"))
+              .agg(expr("bit_or(mask)").as("mask")).cp()
+            visitedRows += frontierRows
+            frontier = fresh
+            h += 1
+          }
+        }
+        levels.reduce(_ unionAll _)
       }
     }
-    (visited, levels)
   }
 
-  /** One hop of [[frontierHops]]: the (id, mask) rows whose mask holds
-    * the lanes that reach `id` for the first time. Its own function so
-    * `tools.DumpHopPlan` explains the exact plan the loop runs.
+  /** One above-gate hop of [[frontierHops]]: the (id, mask) rows whose
+    * mask holds the lanes that reach `id` for the first time. Its own
+    * function so `tools.DumpHopPlan` explains the exact plan that regime
+    * runs.
     */
   private[graft] def frontierHop(adj: DataFrame, frontier: DataFrame,
                                  frontierRows: Long, visited: DataFrame,
@@ -1350,12 +1542,13 @@ object GraphAlgebra {
     *
     * The source ids are collected to the driver (landmark frames are tiny
     * by construction: orderBy + limit). The distinct ids, in sorted order,
-    * are dealt into 64-lane passes of [[frontierHops]] over the one
-    * checkpointed adjacency: ⌈|S|/64⌉ sequential passes, one lane per
-    * source, so the landmark ops' 8 sources run in one pass. Each pass's
-    * first-reach masks are exploded back to (src, id, dist) once at the
-    * END, never inside the hop loop. The hop-0 self rows come from the raw
-    * source list, so a duplicated source row yields a duplicated dist-0
+    * are dealt into 64-lane passes of [[frontierHops]] over one read of
+    * the flow — ⌈|S|/64⌉ sequential passes, one lane per source, so the
+    * landmark ops' 8 sources run in one pass; below the broadcast gate a
+    * hop is one [[Csr]] job, above it a checkpointed DataFrame round. Each
+    * pass's first-reach masks are exploded back to (src, id, dist) once at
+    * the END, never inside the hop loop. The hop-0 self rows come from the
+    * raw source list, so a duplicated source row yields a duplicated dist-0
     * row and nothing else.
     */
   def multiBfsHops(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
@@ -1363,21 +1556,17 @@ object GraphAlgebra {
     val sess = edgesBoth.sparkSession
     import sess.implicits._
     val raw = sources.select(col("src")).collect().map(_.getLong(0)).toSeq
-    val adj = edgesBoth.select(col("a"), col("b")).cp()
-    val passes = raw.distinct.sorted.grouped(64).toList.flatMap { ids =>
-      val lanes = ids.zipWithIndex
-      val seed = lanes.map { case (s, i) => (s, 1L << i) }
-        .toDF("id", "mask").cp()
-      val (_, levels) =
-        frontierHops(adj, seed, ids.size, maxHops, broadcastMaxRows)
-      levels.reduceOption(_ unionAll _).map { reached =>
-        reached.join(broadcast(lanes.toDF("bsrc", "bit")),
-            expr("(mask & shiftleft(cast(1 as bigint), bit)) != 0"))
-          .select(col("bsrc").as("src"), col("id"), col("dist"))
-      }
-    }
+    val lanes = raw.distinct.sorted.grouped(64).map(_.zipWithIndex).toSeq
+    val reached = frontierHops(edgesBoth.select(col("a").as("src"), col("b").as("dst")),
+      lanes.map(ls => (ls.map { case (s, i) => (s, 1L << i) }.toDF("id", "mask"), ls.size.toLong)),
+      maxHops, broadcastMaxRows)
     val zero = raw.map(s => (s, s, 0L)).toDF("src", "id", "dist")
-    (zero +: passes).reduce(_ unionAll _)
+    (zero +: lanes.zip(reached).map { case (ls, r) =>
+      r.filter(col("dist") > 0)
+        .join(broadcast(ls.toDF("bsrc", "bit")),
+          expr("(mask & shiftleft(cast(1 as bigint), bit)) != 0"))
+        .select(col("bsrc").as("src"), col("id"), col("dist"))
+    }).reduce(_ unionAll _)
   }
 
   /** [[multiBfsHops]] carrying Brandes path counts: per (src, id) the hop
@@ -1523,19 +1712,18 @@ object GraphAlgebra {
   }
 
   /** Bounded BFS WITHOUT GraphX: a single source on lane 0 of
-    * [[frontierHops]]. Output (id, dist) for reachable vertices, dist =
-    * minimum hop count (identical to GraphX ShortestPaths and the
-    * recursive BFS oracle).
+    * [[frontierHops]] (one [[Csr]] job per hop below the broadcast gate,
+    * a checkpointed DataFrame round above it). Output (id, dist) for
+    * reachable vertices, dist = minimum hop count (identical to GraphX
+    * ShortestPaths and the recursive BFS oracle).
     */
   def bfsHops(edgesBoth: DataFrame, src: Long, maxHops: Int,
               broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
     val s = edgesBoth.sparkSession
     import s.implicits._
-    val adj = edgesBoth.select(col("a"), col("b")).cp()
-    val seed = Seq((src, 1L)).toDF("id", "mask").cp()
-    val (_, levels) = frontierHops(adj, seed, 1L, maxHops, broadcastMaxRows)
-    (Seq((src, 0L)).toDF("id", "dist") +:
-      levels.map(_.select(col("id"), col("dist")))).reduce(_ unionAll _)
+    val Seq(reached) = frontierHops(edgesBoth.select(col("a").as("src"), col("b").as("dst")),
+      Seq((Seq((src, 1L)).toDF("id", "mask"), 1L)), maxHops, broadcastMaxRows)
+    reached.select(col("id"), col("dist"))
   }
 
   /** Time-decayed popularity: score = Σ value · exp((day − max_day)/τ days),

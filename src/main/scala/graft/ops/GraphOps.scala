@@ -63,12 +63,15 @@ object GraphOps {
   }
 
   /** Undirected view of the co-purchase graph (both directions), for the
-    * direction-sensitive GraphX algorithms.
+    * direction-sensitive algorithms. One `explode` mirrors each pair, so
+    * the pair build and its final aggregate run once (a self-union would
+    * run both twice).
     */
   private def copurchaseBoth(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b")
-    cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
+    copurchase(s, dir)
+      .select(explode(array(struct($"a", $"b"), struct($"b".as("a"), $"a".as("b")))).as("e"))
+      .select($"e.a", $"e.b")
   }
 
   private def partVertices(s: SparkSession, dir: String): DataFrame = {

@@ -4,12 +4,13 @@ import org.apache.spark.sql.SparkSession
 
 import graft.api.GraphAlgebra
 
-/** Dev utility: explain ONE hop of the shared frontier loop
-  * (`GraphAlgebra.frontierHop`, behind bfsHops, multiBfsHops and
-  * reachClosure). The loop's per-hop subplan is hidden behind checkpoint
-  * leaves in the final query plan, so this dumps the first hop of the
-  * 8-landmark pass in isolation: the vertex-keyed bit_or aggregate and the
-  * first-reach mask projection.
+/** Dev utility: explain ONE hop of the shared frontier loop's DataFrame
+  * regime (`GraphAlgebra.frontierHop`, behind bfsHops, multiBfsHops and
+  * reachClosure when the vertex set is above the broadcast gate; below it
+  * a hop is a CSR kernel job with no query plan). The loop's per-hop
+  * subplan is hidden behind checkpoint leaves in the final query plan, so
+  * this dumps the first hop of the 8-landmark pass in isolation: the
+  * vertex-keyed bit_or aggregate and the first-reach mask projection.
   *
   * Run: `sbt 'runMain graft.tools.DumpHopPlan <sf-dir>'`.
   */

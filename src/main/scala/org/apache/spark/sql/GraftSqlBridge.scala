@@ -22,4 +22,9 @@ object GraftSqlBridge {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
       spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** DataFrame over rows a plan already produced (its `queryExecution.toRdd`). */
+  def ofInternalRows(spark: SparkSession, rows: org.apache.spark.rdd.RDD[
+      org.apache.spark.sql.catalyst.InternalRow], schema: types.StructType): DataFrame =
+    spark.asInstanceOf[classic.SparkSession].internalCreateDataFrame(rows, schema)
 }

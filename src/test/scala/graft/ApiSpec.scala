@@ -330,7 +330,8 @@ class ApiSpec extends SparkSpec {
   test("GraphAlgebra iterative ops: gated-off broadcast path is bit-identical") {
     import spark.implicits._
     // broadcastMaxRows = 0 forces the plain-join (100 TB) path; results
-    // must match the broadcast-hinted default exactly for all three ops
+    // must match the default (CSR kernel) path exactly for every op. The
+    // dagLevels input drops edge 2 -> 3, whose src is not a vertex
     val pairs = Seq((1L, 2L), (2L, 3L), (4L, 5L), (1L, 6L)).toDF("a", "b")
     val both = pairs.unionAll(pairs.select($"b".as("a"), $"a".as("b")))
     val vertices = (1L to 7L).toDF("part")
@@ -345,6 +346,22 @@ class ApiSpec extends SparkSpec {
     assert(
       rows(GraphAlgebra.bfsHops(both, src = 1L, maxHops = 3, broadcastMaxRows = 0)) ===
       rows(GraphAlgebra.bfsHops(both, src = 1L, maxHops = 3)))
+    // the min-label and frontier loops over a digraph with a 2-cycle
+    val dir = Seq((1L, 2L), (2L, 1L), (2L, 3L), (4L, 5L)).toDF("src", "dst")
+    val sources = Seq(1L, 4L).toDF("src")
+    for (gate <- Seq(GraphAlgebra.BroadcastMaxRows, 0L)) {
+      val scc = GraphAlgebra.stronglyConnectedComponents(vertices.toDF("id"), dir, gate)
+      val flow = dir.select($"src".as("from"), $"dst".as("to"))
+      assert(rows(scc) ===
+        Seq(Seq(1L, 1L), Seq(2L, 1L), Seq(3L, 3L), Seq(4L, 4L), Seq(5L, 5L), Seq(6L, 6L), Seq(7L, 7L)))
+      assert(rows(GraphAlgebra.reachClosure(Seq(2L).toDF("id"), flow, gate)) ===
+        Seq(Seq(1L), Seq(2L), Seq(3L)))
+      assert(rows(GraphAlgebra.dagLevels(Seq(3L, 4L, 5L).toDF("id"),
+        dir.filter($"src" =!= 1L), gate)) === Seq(Seq(3L, 0L), Seq(4L, 0L), Seq(5L, 1L)))
+      assert(rows(GraphAlgebra.multiBfsHops(both, sources, 3, gate)) ===
+        Seq(Seq(1L, 1L, 0L), Seq(1L, 2L, 1L), Seq(1L, 3L, 2L), Seq(1L, 6L, 1L),
+          Seq(4L, 4L, 0L), Seq(4L, 5L, 1L)))
+    }
   }
 
   test("GraphAlgebra.khopK: parameterized traversal equals the fixed-k registry ops") {

@@ -26,6 +26,11 @@ class GraphSpec extends SparkSpec {
     cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
   }
 
+  /** The two regimes of every GraphAlgebra loop: the CSR kernel at the
+    * default broadcast gate, the DataFrame loop with the gate at 0.
+    */
+  private val gates = Seq(api.GraphAlgebra.BroadcastMaxRows, 0L)
+
   /** The landmark frame the registry ops build: the n smallest part ids. */
   private def landmarks(n: Int): DataFrame = {
     import spark.implicits._
@@ -828,15 +833,19 @@ class GraphSpec extends SparkSpec {
     (raw.map(s => (s, s, 0L)) ++ reached).sorted
   }
 
-  private def multiBfsRows(sources: DataFrame, maxHops: Int): Seq[(Long, Long, Long)] =
-    api.GraphAlgebra.multiBfsHops(cpBoth, sources, maxHops).collect()
+  private def multiBfsRows(sources: DataFrame, maxHops: Int,
+                           gate: Long = api.GraphAlgebra.BroadcastMaxRows): Seq[(Long, Long, Long)] =
+    api.GraphAlgebra.multiBfsHops(cpBoth, sources, maxHops, gate).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
 
   test("multiBfsHops: 8 landmarks (one pass) equal a JVM BFS replay") {
     val lm = landmarks(8)
-    val got = multiBfsRows(lm, 6)
-    assert(got === jvmMultiBfs(lm.collect().map(_.getLong(0)).toSeq, 6))
-    assert(got.exists(_._3 > 0))
+    val want = jvmMultiBfs(lm.collect().map(_.getLong(0)).toSeq, 6)
+    for (gate <- gates) {
+      val got = multiBfsRows(lm, 6, gate)
+      assert(got === want, s"gate=$gate")
+      assert(got.exists(_._3 > 0))
+    }
   }
 
   test("multiBfsHops: 70 sources (two 64-lane passes, sign-bit lane) equal a JVM BFS replay") {
@@ -846,10 +855,13 @@ class GraphSpec extends SparkSpec {
     val ids = cpBoth.select($"a").distinct().collect().map(_.getLong(0))
       .sorted.take(70).toSeq
     assert(ids.size === 70)
-    val got = multiBfsRows(ids.toDF("src"), 3)
-    assert(got === jvmMultiBfs(ids, 3))
-    assert(got.exists(r => r._1 == ids(63) && r._3 > 0), "lane 63 reached nothing")
-    assert(got.exists(r => r._1 == ids(64) && r._3 > 0), "second pass reached nothing")
+    val want = jvmMultiBfs(ids, 3)
+    for (gate <- gates) {
+      val got = multiBfsRows(ids.toDF("src"), 3, gate)
+      assert(got === want, s"gate=$gate")
+      assert(got.exists(r => r._1 == ids(63) && r._3 > 0), "lane 63 reached nothing")
+      assert(got.exists(r => r._1 == ids(64) && r._3 > 0), "second pass reached nothing")
+    }
   }
 
   test("multiBfsHops: a duplicated source row duplicates only its dist-0 row") {
@@ -863,7 +875,7 @@ class GraphSpec extends SparkSpec {
 
   test("reachClosure equals a JVM closure on random digraphs with cycles and isolated seeds") {
     import spark.implicits._
-    (1 to 5).foreach { seed =>
+    for (seed <- 1 to 5; gate <- gates) {
       val rnd = new scala.util.Random(seed)
       val n = 10 + rnd.nextInt(6)
       // a random digraph plus one forced cycle 0 -> 1 -> 2 -> 0
@@ -877,9 +889,9 @@ class GraphSpec extends SparkSpec {
       def dfs(v: Long): Unit = if (exp.add(v)) out.getOrElse(v, Nil).foreach(dfs)
       seeds.foreach(dfs)
       val got = api.GraphAlgebra.reachClosure(seeds.toDF("id"),
-          edges.toDF("from", "to"))
+          edges.toDF("from", "to"), gate)
         .collect().map(_.getLong(0)).toSeq.sorted
-      assert(got === exp.toSeq.sorted, s"random digraph seed $seed")
+      assert(got === exp.toSeq.sorted, s"random digraph seed $seed gate $gate")
     }
   }
 
@@ -1083,7 +1095,7 @@ class GraphSpec extends SparkSpec {
 
   test("stronglyConnectedComponents equals a JVM Kosaraju on random digraphs with cycles and isolated vertices") {
     import spark.implicits._
-    (1 to 3).foreach { seed =>
+    for (seed <- 1 to 3; gate <- gates) {
       val rnd = new scala.util.Random(seed)
       val n = 10 + rnd.nextInt(6)
       // a random digraph plus one forced cycle 0 -> 1 -> 2 -> 0; the ids n
@@ -1092,15 +1104,15 @@ class GraphSpec extends SparkSpec {
         Seq.fill(n + n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))).distinct
       val verts = 0L until n + 2L
       val got = api.GraphAlgebra.stronglyConnectedComponents(verts.toDF("id"),
-          edges.toDF("src", "dst"))
+          edges.toDF("src", "dst"), gate)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === GraphSpec.kosaraju(verts, edges), s"random digraph seed $seed")
+      assert(got === GraphSpec.kosaraju(verts, edges), s"random digraph seed $seed gate $gate")
     }
   }
 
   test("dagLevels equals JVM longest-path levels on random DAGs") {
     import spark.implicits._
-    (1 to 3).foreach { seed =>
+    for (seed <- 1 to 3; gate <- gates) {
       val rnd = new scala.util.Random(seed)
       val n = 12 + rnd.nextInt(6)
       // every edge runs from a lower to a higher id, so the graph is
@@ -1114,19 +1126,21 @@ class GraphSpec extends SparkSpec {
       val memo = scala.collection.mutable.Map[Long, Long]()
       def lvl(v: Long): Long = memo.getOrElseUpdate(v,
         preds.get(v).map(_.map(lvl).max + 1L).getOrElse(0L))
-      val got = api.GraphAlgebra.dagLevels(verts.toDF("id"), edges.toDF("src", "dst"))
+      val got = api.GraphAlgebra.dagLevels(verts.toDF("id"), edges.toDF("src", "dst"), gate)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got === verts.map(v => v -> lvl(v)).toMap, s"random DAG seed $seed")
+      assert(got === verts.map(v => v -> lvl(v)).toMap, s"random DAG seed $seed gate $gate")
     }
   }
 
   test("dagLevels throws on a 3-cycle") {
     import spark.implicits._
-    val e = intercept[IllegalArgumentException] {
-      api.GraphAlgebra.dagLevels(Seq(1L, 2L, 3L).toDF("id"),
-        Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")).collect()
+    for (gate <- gates) {
+      val e = intercept[IllegalArgumentException] {
+        api.GraphAlgebra.dagLevels(Seq(1L, 2L, 3L).toDF("id"),
+          Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst"), gate).collect()
+      }
+      assert(e.getMessage.contains("did not converge in 4 rounds"), s"gate=$gate")
     }
-    assert(e.getMessage.contains("did not converge in 4 rounds"))
   }
 
   test("connectedComponentsDf equals GraphX on a 48-vertex path with the minimum id at one end") {
@@ -1144,6 +1158,110 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got === graphx)
     assert(got.values.toSet === Set(0L, 100L))
+  }
+
+  test("connectedComponentsDf below the gate runs one job per round plus the build") {
+    import spark.implicits._
+    // a 40-vertex path with the minimum id at one end: 40 rounds. The
+    // DataFrame loop pays a checkpoint and a count per round (~3 jobs)
+    val n = 40
+    val verts = 0L until n.toLong
+    val (jobs, _) = sparkEventsDuring(api.GraphAlgebra.connectedComponentsDf(
+      verts.toDF("part"), verts.init.map(i => (i, i + 1)).toDF("a", "b")).collect())
+    assert(jobs.size <= n + 6, s"${jobs.size} jobs for $n rounds")
+  }
+
+  /** Seeded random directed edges over ids 0 until n with duplicate rows,
+    * self-loops and edges from and to ids the vertex set lacks; the ids n
+    * and n + 1 are vertices that no edge touches.
+    */
+  private def messyDigraph(seed: Int): (Seq[Long], Seq[(Long, Long)]) = {
+    val rnd = new scala.util.Random(seed)
+    val n = 15 + rnd.nextInt(10)
+    val base = Seq.fill(n + n / 2)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+    val edges = base ++ base.take(5) ++ (0L until 3L).map(i => (i, i)) ++
+      Seq((100L + seed, 0L), (1L, 200L + seed), (300L, 301L))
+    (0L until n + 2L, rnd.shuffle(edges))
+  }
+
+  test("connectedComponentsDf and stronglyConnectedComponents equal JVM replays on messy random graphs in both regimes") {
+    import spark.implicits._
+    for (seed <- 1 to 4; gate <- gates) {
+      val msg = s"seed=$seed gate=$gate"
+      val (verts, edges) = messyDigraph(seed)
+      val inV = edges.filter { case (a, b) => verts.contains(a) && verts.contains(b) }
+      // union-find whose roots are the minimum ids
+      val parent = scala.collection.mutable.Map[Long, Long]()
+      def find(x: Long): Long = parent.get(x).filter(_ != x).fold(x)(find)
+      for ((a, b) <- inV) {
+        val (ra, rb) = (find(a), find(b))
+        parent(math.max(ra, rb)) = math.min(ra, rb)
+      }
+      val cc = api.GraphAlgebra.connectedComponentsDf(verts.toDF("part"), edges.toDF("a", "b"), gate)
+      assert(cc.count() === verts.size, msg)
+      assert(xs(cc) === verts.map(v => v -> find(v)).toMap, msg)
+      val scc = api.GraphAlgebra.stronglyConnectedComponents(verts.toDF("id"),
+        edges.toDF("src", "dst"), gate)
+      assert(scc.count() === verts.size, msg)
+      assert(xs(scc) === GraphSpec.kosaraju(verts, inV), msg)
+    }
+  }
+
+  test("SCC, reachClosure and dagLevels on a digraph with several non-trivial SCCs equal JVM replays in both regimes") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(11)
+    // units in topological order: four cycles (3, 5, 4, 6 vertices) and
+    // eight singletons; cross edges only run from an earlier unit to a
+    // later one and never touch the last three singletons, so the cycles
+    // are exactly the non-trivial SCCs. A chain
+    // through the cycles into the first singleton makes the 6-cycle the
+    // core with an IN side, an OUT side and untouched OTHER singletons
+    val cycles = Seq(3, 5, 4, 6).scanLeft(0)(_ + _).sliding(2)
+      .map { case Seq(a, b) => (a.toLong until b.toLong) }.toSeq
+    val units = cycles ++ (18L until 26L).map(v => v until v + 1)
+    val cross = (0 until 4).map(u => (units(u).last, units(u + 1).head)) ++
+      Seq.fill(25)((rnd.nextInt(units.size), rnd.nextInt(units.size))).collect {
+        case (u, w) if u < w && w <= 8 => (units(u)(rnd.nextInt(units(u).size)),
+          units(w)(rnd.nextInt(units(w).size)))
+      }
+    // shuffled ids, so an SCC's minimum sits anywhere on its cycle
+    val id = rnd.shuffle((0L until 26L).toList).toIndexedSeq
+    val edges = (cycles.flatMap(c => c.zip(c.tail :+ c.head)) ++ cross)
+      .map { case (a, b) => (id(a.toInt), id(b.toInt)) }.distinct
+    val verts = 0L until 26L
+    val want = GraphSpec.kosaraju(verts, edges)
+    val bySize = want.groupBy(_._2).map { case (c, m) => c -> m.size }
+    assert(bySize.count(_._2 > 1) === 4)
+    val core = bySize.maxBy { case (c, sz) => (sz, -c) }._1
+    def closure(es: Seq[(Long, Long)]): Seq[Long] = {
+      val out = es.groupBy(_._1).map { case (k, v) => k -> v.map(_._2) }
+      val seen = scala.collection.mutable.Set[Long]()
+      def dfs(v: Long): Unit = if (seen.add(v)) out.getOrElse(v, Nil).foreach(dfs)
+      want.collect { case (v, c) if c == core => v }.foreach(dfs)
+      seen.toSeq.sorted
+    }
+    val (fromCore, toCore) = (closure(edges), closure(edges.map(_.swap)))
+    val ce = edges.map { case (a, b) => (want(a), want(b)) }.filter { case (a, b) => a != b }.distinct
+    val preds = ce.groupBy(_._2).map { case (k, v) => k -> v.map(_._1) }
+    val memo = scala.collection.mutable.Map[Long, Long]()
+    def lvl(v: Long): Long = memo.getOrElseUpdate(v,
+      preds.get(v).map(_.map(lvl).max + 1L).getOrElse(0L))
+    val comps = want.values.toSeq.distinct
+    assert(comps.map(lvl).max >= 4)
+    assert(toCore.size > bySize(core) && fromCore.size > bySize(core))
+    assert(toCore.size + fromCore.size - bySize(core) < verts.size, "no OTHER vertex")
+    for (gate <- gates) {
+      val scc = api.GraphAlgebra.stronglyConnectedComponents(verts.toDF("id"),
+        edges.toDF("src", "dst"), gate)
+      assert(xs(scc) === want, s"gate=$gate")
+      val members = scc.filter($"scc" === core).select($"id")
+      def reach(flow: Seq[(Long, Long)]) = api.GraphAlgebra.reachClosure(members,
+        flow.toDF("from", "to"), gate).collect().map(_.getLong(0)).toSeq.sorted
+      assert(reach(edges) === fromCore, s"gate=$gate")
+      assert(reach(edges.map(_.swap)) === toCore, s"gate=$gate")
+      val lv = api.GraphAlgebra.dagLevels(comps.toDF("id"), ce.toDF("src", "dst"), gate)
+      assert(xs(lv) === comps.map(c => c -> lvl(c)).toMap, s"gate=$gate")
+    }
   }
 
   /** Seeded random undirected graph on ids 1..30 plus a degree-1 chain

@@ -282,7 +282,8 @@ class ScaleSpec extends SparkSpec {
   test("iterative-family mechanism: pre-partitioned checkpointed edges make the per-step agg exchange-free") {
     import spark.implicits._
     // the shape of the remaining cpByKey users (pageRankBatch's edge
-    // frame, the k-core peel, minLabelFixpoint's flow): the edge frame is
+    // frame, the k-core peel, and above the broadcast gate
+    // minLabelFixpoint's flow and powerIterate's edges): the edge frame is
     // hash-partitioned on the GROUP key and lineage-truncated; the state
     // side broadcasts; the aggregation must then inherit the clustering —
     // zero hash exchanges in the whole step (per-iteration |E| shuffles
