@@ -4,7 +4,7 @@ import scala.reflect.ClassTag
 
 import org.apache.spark.SparkContext
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage truncation for the iterative family (PageRank/HITS/eigen/CC/
@@ -21,6 +21,12 @@ import org.apache.spark.storage.StorageLevel
   * then costs a re-read from the DFS, not a job failure. Results are
   * bit-identical on either path — both truncate lineage; only the storage
   * contract changes (ApiSpec pins one iterative op across the two paths).
+  *
+  * Besides `cp()`, every materialization here is [[materialize]]: ONE job
+  * that checkpoints an RDD and returns a small result per partition — a
+  * frame's row count for [[cpCounted]], the CSR kernel's block shapes. A
+  * declared partitioning comes only from the explicit `repartition(n,
+  * keys)` under [[cpCounted]]'s rows; no session conf is written.
   */
 object Ckpt {
 
@@ -42,38 +48,22 @@ object Ckpt {
     */
   @volatile private var appliedDir: Option[String] = None
 
-  /** Checkpoint `df` hash-partitioned on `cols`, PRESERVING the
-    * partitioning in the checkpointed plan — the iterative family's
-    * pre-partitioning primitive (each loop step's aggregation then
-    * inherits the clustering through a broadcast join and runs
-    * exchange-free; ScaleSpec pins the mechanism).
-    *
-    * Why AQE is scoped off for the materialization: a checkpointed
-    * Dataset captures `executedPlan.outputPartitioning`, and under AQE
-    * that node is the adaptive wrapper, whose partitioning is UNKNOWN at
-    * capture time — the checkpoint then silently forgets the layout and
-    * every iteration re-inserts the exchange this call exists to hoist
-    * (verified empirically: the ScaleSpec mechanism test fails with a
-    * re-inserted `Exchange hashpartitioning` if the frame materializes
-    * adaptively). With AQE off for just this eager materialization the
-    * physical plan is a plain shuffle whose HashPartitioning survives the
-    * capture; the loop's state frames still plan adaptively.
+  /** `df` checkpointed and counted by ONE [[materialize]] job over the
+    * copied rows of its plan (adaptive execution runs the plan's shuffle
+    * stages as jobs of their own first). With `keys`, `df` is first
+    * repartitioned on them into `spark.sql.shuffle.partitions` partitions
+    * — an explicit count, which adaptive execution never coalesces — and
+    * the result declares that `HashPartitioning`
+    * ([[GraftSqlBridge.materialized]]), so a loop step keyed on `keys`
+    * runs exchange-free (ScaleSpec pins it).
     */
-  def cpByKey(df: DataFrame, cols: Column*): DataFrame =
-    // serialized on this object: the AQE toggle is session-global, so two
-    // concurrent cpByKey calls could otherwise clobber each other's
-    // restore value. Queries planned concurrently on the same session by
-    // OTHER threads still see AQE off for the duration of this eager
-    // materialization — callers sharing a session across threads should
-    // not plan during cpByKey (the registry's ops are single-threaded per
-    // query, so the harness never hits this).
-    Ckpt.synchronized {
-      val conf = df.sparkSession.conf
-      val old = conf.get("spark.sql.adaptive.enabled")
-      conf.set("spark.sql.adaptive.enabled", "false")
-      try new CkptOps(df.repartition(cols: _*)).cp()
-      finally conf.set("spark.sql.adaptive.enabled", old)
-    }
+  def cpCounted(df: DataFrame, keys: Column*): (DataFrame, Long) = {
+    val src = if (keys.isEmpty) df
+      else df.repartition(df.sparkSession.sessionState.conf.numShufflePartitions, keys: _*)
+    val rows = src.queryExecution.toRdd.map(_.copy())
+    val n = materialize(rows)(_.size.toLong).sum
+    (GraftSqlBridge.materialized(src, rows, n), n)
+  }
 
   /** Whether `graft.checkpoint.dir` is set, applying it to `sc` first.
     * (Re-)applies whenever the configured dir is not the one THIS object

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable.ArrayBuffer
+import scala.reflect.ClassTag
 
 import graft.graph.GraphBridge
 import Ckpt._
@@ -164,8 +165,8 @@ object GraphAlgebra {
     if (rows <= maxRows) broadcast(df) else df
 
   /** [[hinted]] with the shared default ceiling, for iterative callers
-    * outside this object (e.g. the k-core peel) whose loop already pays
-    * for the row count.
+    * outside this object (e.g. the k-core peel) whose loop already holds
+    * the row count ([[Ckpt.cpCounted]]).
     */
   def hintedFrame(df: DataFrame, rows: Long): DataFrame =
     hinted(df, rows, BroadcastMaxRows)
@@ -217,8 +218,8 @@ object GraphAlgebra {
     // the adjacency-array attach is broadcast-gated on the round's
     // directed-edge count ([[hintedAdj]] — ungated both joins went
     // sort-merge over kilobyte-array rows), and the adjacency is
-    // checkpointed because the two broadcast builds both read it; the
-    // survivor count per round is already paid by the loop's cp()
+    // checkpointed because the two broadcast builds both read it; each
+    // round's survivor count comes back from its own checkpoint job
     def supports(e: DataFrame, nDir: Long): DataFrame = {
       val both = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
       val adj = both.groupBy(col("a").as("v"))
@@ -228,12 +229,9 @@ object GraphAlgebra {
         .select(col("a"), col("b"),
           size(array_intersect(col("na"), col("nb"))).cast("long").as("sup"))
     }
-    var e = pairs.select(col("a"), col("b")).cp()
-    var nE = e.count()
-    for (_ <- 1 to rounds) {
-      e = supports(e, 2L * nE).filter(col("sup") >= k - 2)
-        .select(col("a"), col("b")).cp()
-      nE = e.count()
+    val (e, nE) = (1 to rounds).foldLeft(Ckpt.cpCounted(pairs.select(col("a"), col("b")))) {
+      case ((e, nE), _) => Ckpt.cpCounted(
+        supports(e, 2L * nE).filter(col("sup") >= k - 2).select(col("a"), col("b")))
     }
     supports(e, 2L * nE).select(col("a"), col("b"), col("sup").as("support"))
   }
@@ -369,9 +367,9 @@ object GraphAlgebra {
       (0 until nP).map(k => ids(next(k)).zip(state(k)).toSeq.toDF("id", "x"))
     } else {
       val degF = degs.map(_.cp())
-      val eds = (0 until nP).map(k => Ckpt.cpByKey(
+      val eds = (0 until nP).map(k => Ckpt.cpCounted(
         es(k).join(degF(k), col("src") === col("id")).select(col("src"), col("dst"), col("deg")),
-        col("dst")))
+        col("dst"))._1)
       val send = udf((x: Long, d: Long) => op.send(x, d))
       val state = new Array[DataFrame](nP)
       val init = udf((v: Long) => op.init(v))
@@ -465,16 +463,16 @@ object GraphAlgebra {
         .repartition(flow.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
         .sortWithinPartitions(col("dst")).queryExecution.toRdd
 
-    /** The materialized blocks of [[byDst]] rows and each block's dst ids
-      * (ascending, and disjoint across blocks).
+    /** The materialized blocks of [[byDst]] rows and `f` of each block,
+      * returned by the job that builds them.
       */
-    def blocks(byDst: RDD[InternalRow]): (RDD[CsrBlock], Array[Array[Long]]) = {
+    def blocks[U: ClassTag](byDst: RDD[InternalRow])(f: CsrBlock => U): (RDD[CsrBlock], Array[U]) = {
       val rdd = byDst.mapPartitions(rows => Iterator.single(CsrBlock(rows)))
-      (rdd, Ckpt.materialize(rdd)(_.next().dst))
+      (rdd, Ckpt.materialize(rdd)(it => f(it.next())))
     }
 
     def apply(flow: DataFrame, srcIds: Array[Long], dstIds: Array[Long]): Csr = {
-      val (rdd, dsts) = blocks(byDst(flow))
+      val (rdd, dsts) = blocks(byDst(flow))(_.dst)
       new Csr(rdd, dsts, srcIds, dstIds)
     }
   }
@@ -486,6 +484,10 @@ object GraphAlgebra {
     */
   private final case class CsrBlock(dst: Array[Long], ptr: Array[Int], srcs: Array[Int],
                                     src: Array[Long]) {
+    /** The block's (src, dst) rows, grouped by dst. */
+    def edges: Iterator[InternalRow] = dst.indices.iterator.flatMap(r =>
+      (ptr(r) until ptr(r + 1)).map(j => InternalRow(src(srcs(j)), dst(r))))
+
     def fold(ids: Array[Long], x: Array[Long], zero: Long, f: (Long, Long) => Long): Array[Long] = {
       val xs = src.map { v =>
         val i = java.util.Arrays.binarySearch(ids, v)
@@ -548,7 +550,7 @@ object GraphAlgebra {
     // pre-partitioned on the GROUP key: HashPartitioning(edst) satisfies
     // the (s, edst) clustered distribution of the contribution
     // aggregation, so the broadcast-rank iterations add no |E| exchange
-    val ed = Ckpt.cpByKey(
+    val (ed, _) = Ckpt.cpCounted(
       both.join(hinted(deg, nV, broadcastMaxRows), col("a") === col("v"))
         .select(col("a").as("esrc"), col("b").as("edst"), col("deg")),
       col("edst"))
@@ -646,11 +648,11 @@ object GraphAlgebra {
     // clustered on the vote GROUP key `b` — HashPartitioning(b) satisfies
     // the (b, lbl) clustered distribution AND the row_number window's
     // partitionBy(v), so each round is exchange-free past the label join
-    val both = Ckpt.cpByKey(
+    val (both, _) = Ckpt.cpCounted(
       cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"))), col("b"))
-    var labels = vertices.select(col("part").as("id"), col("part").as("lbl"))
-      .cp()
-    val nV = labels.count() // label frame stays exactly |V| rows every round
+    // the label frame stays exactly |V| rows every round
+    val (init, nV) = Ckpt.cpCounted(vertices.select(col("part").as("id"), col("part").as("lbl")))
+    var labels = init
     var changed = 1L
     var round = 0
     while (changed > 0 && round < rounds) {
@@ -658,7 +660,7 @@ object GraphAlgebra {
       // tie-break (most frequent label, ties to the SMALLEST) as a hash
       // aggregation — max(struct(c, −lbl)) ≡ the row_number(c desc, lbl
       // asc) = 1 pick, but it stays in the HashPartitioning(b) chain the
-      // cpByKey hoisted (both groupBys cluster on v = b) instead of
+      // keyed checkpoint hoisted (both groupBys cluster on v = b) instead of
       // paying a per-round sort-window over the |E|-sized vote frame
       val top = both.join(hinted(labels, nV, broadcastMaxRows), col("a") === col("id"))
         .groupBy(col("b").as("v"), col("lbl")).agg(count(lit(1)).as("c"))
@@ -720,7 +722,7 @@ object GraphAlgebra {
                    selfLoops: Option[DataFrame] = None): DataFrame = {
     require(rounds >= 1, s"louvainMoves needs rounds >= 1 (got $rounds)")
     val cp = pairs.select(col("a"), col("b"), col("w"))
-    val both = Ckpt.cpByKey(
+    val (both, _) = Ckpt.cpCounted(
       cp.unionAll(cp.select(col("b").as("a"), col("a").as("b"), col("w"))),
       col("a"))
     // weighted degree k_i and 2m are round-invariant; self-loops add 2s
@@ -748,11 +750,11 @@ object GraphAlgebra {
           .crossJoin(sl.agg(coalesce(sum(col("s")), lit(0L)).as("sw")))
           .select((col("bw") + lit(2L) * col("sw")).as("m2"))
     }).cp()
-    var labels = vertices.select(col("part").as("id"), col("part").as("c"))
-      .join(deg, Seq("id"), "left")
-      .select(col("id"), col("c"), coalesce(col("k"), lit(0L)).as("k"))
-      .cp()
-    val nV = labels.count()
+    val (init, nV) = Ckpt.cpCounted(
+      vertices.select(col("part").as("id"), col("part").as("c"))
+        .join(deg, Seq("id"), "left")
+        .select(col("id"), col("c"), coalesce(col("k"), lit(0L)).as("k")))
+    var labels = init
     // left product operands widen to DECIMAL(38,0) EXPLICITLY: the product
     // precision is then Spark's hard 38-digit cap (see docstring — the cap
     // IS the ceiling; overflow past it ANSI-errors loudly, never wraps)
@@ -996,11 +998,8 @@ object GraphAlgebra {
     * back-fills executors freed by another): each thunk typically drives
     * its own iterative loop (actions inside). Results come back in input
     * order, so downstream unions stay deterministic. Spark's scheduler is
-    * designed for concurrent job submission; the only shared mutable
-    * session state on these paths is [[Ckpt.cpByKey]]'s AQE toggle, which
-    * is serialized on the Ckpt monitor (a sibling thread that plans during
-    * that window merely plans that one frame non-adaptively — a physical-
-    * plan nuance, never a result change). A thunk failure propagates.
+    * designed for concurrent job submission, and no thunk path writes
+    * session state. A thunk failure propagates.
     */
   private[graft] def inParallel[T](thunks: Seq[() => T]): Seq[T] = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(thunks.size)
@@ -1121,20 +1120,19 @@ object GraphAlgebra {
         .map { case (w, a, b, _, _) => (a, b, w) }
         .toSeq.toDF("a", "b", "w")
     }
-    val e = edges.select(col("a"), col("b"), col("w").cast("long").as("w"))
-      .cp()
+    val (e, nE) = Ckpt.cpCounted(edges.select(col("a"), col("b"), col("w").cast("long").as("w")))
     // round-0 fast path: labels start as the identity, so the label joins
     // and the pair collapse are no-ops — if the raw edge list already fits
     // the local-finish bound (2M rows ≈ 80 MB of longs, the same
     // bounded-driver posture as the ≤1M-edge coarse Louvain levels), one
     // local Kruskal IS the whole algorithm
-    if (e.count() <= localFinishMax)
+    if (nE <= localFinishMax)
       return kruskal(e.select(col("w"), col("a"), col("b"),
         col("a").as("ca"), col("b").as("cb")))
-    var lab = e.select(col("a").as("v")).unionAll(e.select(col("b").as("v")))
-      .distinct().select(col("v"), col("v").as("c")).cp()
+    // labels start 1:1 with vertices
+    var (lab, nComp) = Ckpt.cpCounted(e.select(col("a").as("v"))
+      .unionAll(e.select(col("b").as("v"))).distinct().select(col("v"), col("v").as("c")))
     var forest: DataFrame = e.filter(lit(false))
-    var nComp = lab.count() // labels start 1:1 with vertices
     var rounds = 0
     var outgoing = 1L
     while (rounds < maxRounds && outgoing > 0) {
@@ -1148,14 +1146,13 @@ object GraphAlgebra {
         .join(lab.select(col("v").as("b"), col("c").as("cb")), "b")
         .filter(col("ca") =!= col("cb"))
       val k = struct(col("w"), col("a"), col("b"), col("ca"), col("cb"))
-      val pairMin = el
+      val (pairMin, nPairs) = Ckpt.cpCounted(el
         .select(least(col("ca"), col("cb")).as("pa"),
           greatest(col("ca"), col("cb")).as("pb"), k.as("k"))
         .groupBy(col("pa"), col("pb")).agg(min(col("k")).as("k"))
         .select(col("k.w").as("w"), col("k.a").as("a"), col("k.b").as("b"),
-          col("k.ca").as("ca"), col("k.cb").as("cb"))
-        .cp()
-      outgoing = pairMin.count()
+          col("k.ca").as("ca"), col("k.cb").as("cb")))
+      outgoing = nPairs
       if (outgoing > 0 && outgoing <= localFinishMax) {
         // endgame: the whole component-level edge list fits the bounded-
         // driver posture — ONE local Kruskal under the global (w, a, b)
@@ -1247,7 +1244,7 @@ object GraphAlgebra {
         import sess.implicits._
         ids.zip(lbl).toSeq.toDF("id", "lbl")
       case Left(nV) =>
-        val fl = Ckpt.cpByKey(flow.select(col("from"), col("to")), col("to"))
+        val (fl, _) = Ckpt.cpCounted(flow.select(col("from"), col("to")), col("to"))
         var labels = init.select(col("id"), col("lbl")).cp()
         var frontier = labels
         var frontierRows = nV // the label frame stays exactly |V| rows
@@ -1374,8 +1371,10 @@ object GraphAlgebra {
             .select(col("f.id").as("id"), col("f.lbl").as("scc"))
             .cp()
           out = if (out == null) done else out.unionAll(done)
-          remV = remV.join(done.select(col("id")), Seq("id"), "left_anti").cp()
-          nRem = remV.count()
+          val (rest, nRest) =
+            Ckpt.cpCounted(remV.join(done.select(col("id")), Seq("id"), "left_anti"))
+          remV = rest
+          nRem = nRest
           if (nRem > 0) {
             remE = remE
               .join(remV.select(col("id").as("src")), Seq("src"), "left_semi")
@@ -1437,33 +1436,30 @@ object GraphAlgebra {
     * mask) rows of every first reach, the seed rows at dist 0 included.
     * A pass stops after `maxHops` hops or when its frontier empties.
     *
-    * Regimes: the flow is shuffled by dst once and its distinct dst ids
-    * counted. With those plus the seed rows ≤ `broadcastMaxRows`, that
-    * shuffle's blocks become one [[Csr]] over the dst and seed ids, the
-    * masks are driver `long[]`s, a hop is ONE job (a `bit_or` fold), and a
-    * pass's frame is built once at its end. Above the gate the shuffled
-    * flow is checkpointed once as the (a, b) adjacency and a hop is
+    * Regimes: the flow is shuffled by dst once, into the materialized
+    * blocks of a [[Csr]], whose build job also returns each block's
+    * distinct dst count. With those plus the seed rows ≤ `broadcastMaxRows`,
+    * the blocks' dst ids are collected and the blocks become one [[Csr]]
+    * over the dst and seed ids, the masks are driver `long[]`s, a hop is
+    * ONE job (a `bit_or` fold), and a pass's frame is built once at its
+    * end. Above the gate the blocks' rows are the (a, b) adjacency, so the
+    * shuffle is read once in both regimes, and a hop is
     * [[frontierHop]]: a join of the frontier into it, a bit_or of the
     * reaching lanes per neighbor (the mask aggregate folds map-side) and
-    * one checkpoint; the frontier and visited sides are broadcast-GATED on
-    * their row counts, which the loop pays anyway to detect termination, so
-    * a frontier that balloons toward |V| degrades to a shuffle join
-    * instead of OOMing on the hint.
+    * one counted checkpoint; the frontier and visited sides are
+    * broadcast-GATED on their row counts, which that checkpoint returns
+    * and which also detect termination, so a frontier that balloons
+    * toward |V| degrades to a shuffle join instead of OOMing on the hint.
     */
   private def frontierHops(flow: DataFrame, passes: Seq[(DataFrame, Long)], maxHops: Int,
                            broadcastMaxRows: Long): Seq[DataFrame] = {
     val sess = flow.sparkSession
     import sess.implicits._
-    val byDst = Csr.byDst(flow)
-    val nDst = sess.sparkContext.runJob(byDst, (it: Iterator[InternalRow]) => {
-      var (n, last) = (0L, 0L)
-      for (r <- it) { if (n == 0 || r.getLong(1) != last) n += 1; last = r.getLong(1) }
-      n
-    }).sum
-    if (nDst + passes.map(_._2).sum <= math.min(broadcastMaxRows, Int.MaxValue)) {
+    val (blocks, nDst) = Csr.blocks(Csr.byDst(flow))(_.dst.length.toLong)
+    if (nDst.sum + passes.map(_._2).sum <= math.min(broadcastMaxRows, Int.MaxValue)) {
       val seeds = passes.map(_._1.select(col("id").cast("long"), col("mask").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))))
-      val (blocks, dsts) = Csr.blocks(byDst)
+      val dsts = sess.sparkContext.runJob(blocks, (it: Iterator[CsrBlock]) => it.next().dst)
       val ids = sortedDistinct(dsts.flatten ++ seeds.flatten.map(_._1))
       val csr = new Csr(blocks, dsts, ids, ids)
       try seeds.map { seed =>
@@ -1485,9 +1481,9 @@ object GraphAlgebra {
         reached.toSeq.toDF("id", "dist", "mask")
       } finally csr.release()
     } else {
-      val adj = GraftSqlBridge.ofInternalRows(sess, byDst, StructType.fromDDL("src BIGINT, dst BIGINT"))
-        .select(col("src").as("a"), col("dst").as("b")).cp()
-      passes.map { case (p, seedRows) =>
+      val adj = GraftSqlBridge.ofInternalRows(sess, blocks.flatMap(_.edges),
+        StructType.fromDDL("a BIGINT, b BIGINT"))
+      try passes.map { case (p, seedRows) =>
         val seed = p.cp()
         var visited = seed
         var frontier = seed
@@ -1496,9 +1492,9 @@ object GraphAlgebra {
         var h = 1L
         var levels = Seq(seed.select(col("id"), lit(0L).as("dist"), col("mask")))
         while (h <= maxHops && frontierRows > 0) {
-          val fresh = frontierHop(adj, frontier, frontierRows, visited,
-            visitedRows, broadcastMaxRows).cp()
-          frontierRows = fresh.count()
+          val (fresh, freshRows) = Ckpt.cpCounted(frontierHop(adj, frontier, frontierRows,
+            visited, visitedRows, broadcastMaxRows))
+          frontierRows = freshRows
           if (frontierRows > 0) {
             levels = levels :+ fresh.select(col("id"), lit(h).as("dist"),
               col("mask"))
@@ -1510,7 +1506,7 @@ object GraphAlgebra {
           }
         }
         levels.reduce(_ unionAll _)
-      }
+      } finally blocks.unpersist(blocking = false)
     }
   }
 
@@ -1593,10 +1589,9 @@ object GraphAlgebra {
     */
   private def sigmaForward(adj: DataFrame, sources: DataFrame, maxHops: Int,
                            broadcastMaxRows: Long): (DataFrame, Long, Long) = {
-    var state = sources.select(col("src"), col("src").as("id"),
-      lit(0L).as("dist"), lit(1L).as("sigma")).cp()
+    var (state, frontierRows) = Ckpt.cpCounted(sources.select(col("src"), col("src").as("id"),
+      lit(0L).as("dist"), lit(1L).as("sigma")))
     var frontier = state.select(col("src"), col("id"), col("sigma"))
-    var frontierRows = frontier.count()
     var stateRows = frontierRows // gates the visited-side broadcast
     var h = 1L
     var done = frontierRows == 0
@@ -1605,16 +1600,15 @@ object GraphAlgebra {
       // groups are removed WHOLE either way, so the per-group sums are
       // untouched), broadcast-gated so it runs map-side and the fold's
       // exchange carries only new-frontier groups (r15, guide §2.3/§3.1)
-      val next = adj.join(hinted(frontier, frontierRows, broadcastMaxRows),
-          col("a") === col("id"))
+      val (next, nextRows) = Ckpt.cpCounted(adj
+        .join(hinted(frontier, frontierRows, broadcastMaxRows), col("a") === col("id"))
         .select(col("src"), col("b"), col("sigma"))
         .join(hinted(state.select(col("src"), col("id").as("b")), stateRows,
           broadcastMaxRows), Seq("src", "b"), "left_anti")
         .groupBy(col("src"), col("b"))
         .agg(sum(col("sigma")).as("sigma"))
-        .select(col("src"), col("b").as("id"), col("sigma"))
-        .cp()
-      frontierRows = next.count()
+        .select(col("src"), col("b").as("id"), col("sigma")))
+      frontierRows = nextRows
       if (frontierRows == 0) done = true
       else {
         state = state.unionAll(next.select(col("src"), col("id"),

@@ -141,15 +141,9 @@ object GraphOps {
     */
   val graphKhop2: Q = (s, dir) => {
     import s.implicits._
-    val adj = edges(s, dir).select($"src", $"dst")
     val cohort = Tables.customer(s, dir)
       .filter($"c_mktsegment" === "BUILDING").select($"c_custkey".as("src"))
-    val p1 = adj.join(cohort, "src").select($"dst").distinct()
-    val c2 = adj.join(p1, "dst").select($"src").distinct()
-    val p2 = adj.join(c2, "src").select($"dst").distinct()
-    p2.join(p1.withColumn("h1", lit(1L)), Seq("dst"), "left")
-      .select($"dst".as("part"), coalesce($"h1", lit(2L)).as("hop"))
-      .orderBy($"part")
+    graft.api.GraphAlgebra.khop2(edges(s, dir), cohort).orderBy($"part")
   }
 
   /** k-TRUSS of the co-purchase graph (k = 12, 3 peel rounds + final
@@ -203,8 +197,8 @@ object GraphOps {
 
   val graphTriangles: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp()
-    val tri = triangleSum(cp, cp.count())
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val tri = triangleSum(cp, nE)
       .select($"n_tri".as("n_triangles"))
     tri.crossJoin(cp.agg(count(lit(1)).as("n_edges")))
   }
@@ -995,8 +989,8 @@ object GraphOps {
     * with BOTH endpoints alive) plus one count agg — work ∝ |E_live|,
     * survivors shrink monotonically, and the survivor frame (one bigint
     * column, ≤|V| rows) broadcasts under the shared
-    * [[graft.api.GraphAlgebra.BroadcastMaxRows]] gate using the count the
-    * loop already pays for. The ROUND COUNT is fixed (not a convergence
+    * [[graft.api.GraphAlgebra.BroadcastMaxRows]] gate using the count each
+    * round's checkpoint returns. The ROUND COUNT is fixed (not a convergence
     * loop) so the op is deterministic and oracle-checkable via an unrolled
     * CTE regardless of data — GraphSpec pins that 6 rounds HAS converged on
     * the test data (survivors(5) == survivors(6)), so the fixed-round
@@ -1032,16 +1026,14 @@ object GraphOps {
     // for k' > k, and round-1 degrees restricted to the survivor set ARE
     // the induced-subgraph degrees, so the chained peel is set-identical
     // to the old per-level kcore() calls (kcorePeelRounds docstring;
-    // Round15Spec pins it). The old spelling paid a cpByKey rebuild + an
-    // unused induced-degree report per level.
-    val both = graft.api.Ckpt.cpByKey(
+    // Round15Spec pins it). The old spelling paid a keyed adjacency rebuild
+    // + an unused induced-degree report per level.
+    val (both, _) = graft.api.Ckpt.cpCounted(
       cp.unionAll(cp.select($"b".as("a"), $"a".as("b"))), $"a")
-    var surv = both.select($"a".as("id")).distinct().cp()
-    var nSurv = surv.count()
+    var surv = graft.api.Ckpt.cpCounted(both.select($"a".as("id")).distinct())
     val levels = Seq(16, 48, 64, 72).map { k =>
-      surv = kcorePeelRounds(both, surv, nSurv, k, rounds = 6)
-      nSurv = surv.count()
-      surv.withColumn("lvl", lit(k.toLong))
+      surv = kcorePeelRounds(both, surv, k, rounds = 6)
+      surv._1.withColumn("lvl", lit(k.toLong))
     }
     val lvl = levels.reduce(_ unionAll _)
       .groupBy($"id").agg(max($"lvl").as("core_level"))
@@ -1125,8 +1117,8 @@ object GraphOps {
     */
   val graphLocalCc: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp()
-    val nDir = 2L * cp.count() // directed edges = the adjacency payload
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val nDir = 2L * nE // directed edges = the adjacency payload
     val both = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
     val adj = both.groupBy($"a".as("v"))
       .agg(sort_array(collect_list($"b")).as("ns"), count(lit(1)).as("d"))
@@ -1163,8 +1155,8 @@ object GraphOps {
     */
   val graphEdgeEmbeddedness: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp()
-    val nDir = 2L * cp.count()
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val nDir = 2L * nE
     val both = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
     val adj = both.groupBy($"a".as("v"))
       .agg(sort_array(collect_list($"b")).as("ns"),
@@ -1194,10 +1186,11 @@ object GraphOps {
   /** The peel ROUNDS of [[kcorePeel]], factored out so callers holding a
     * shared keyed adjacency can chain levels without rebuilding it (r15 —
     * graph_core_number's 4 nested peels shared nothing): starting from
-    * `surv0` (whose row count the caller already paid for), run up to
-    * `rounds` keep-degree-≥-k rounds over `both` restricted to survivors,
-    * with the monotone early exit. Returns the final survivor id frame
-    * (checkpointed) — membership only, no degree report.
+    * `surv0` (a checkpointed survivor id frame and its row count, as
+    * [[graft.api.Ckpt.cpCounted]] returns them), run up to `rounds`
+    * keep-degree-≥-k rounds over `both` restricted to survivors, with the
+    * monotone early exit. Returns the final survivor id frame
+    * (checkpointed) and its row count — membership only, no degree report.
     *
     * Chaining identity (why a caller may pass the PREVIOUS level's
     * survivors instead of re-inducing the edge frame): round 1 computes
@@ -1208,19 +1201,18 @@ object GraphOps {
     * either way. Round15Spec pins the chained spelling against fresh
     * per-level kcore() calls.
     */
-  private[graft] def kcorePeelRounds(both: DataFrame, surv0: DataFrame,
-                                     nSurv0: Long, k: Int,
-                                     rounds: Int): DataFrame = {
+  private[graft] def kcorePeelRounds(both: DataFrame, surv0: (DataFrame, Long), k: Int,
+                                     rounds: Int): (DataFrame, Long) = {
     val s = both.sparkSession
     import s.implicits._
-    var surv = surv0
-    var nSurv = nSurv0
+    var (surv, nSurv) = surv0
     // result-identical early exit: peeling is MONOTONE (survivors only
     // shrink), so an unchanged survivor COUNT means an unchanged set and
     // every later round is a no-op — stopping early returns exactly the
-    // fixed-round answer. The count is already paid for the broadcast
-    // gate; the nested core-number peels (24 budgeted rounds) converge in
-    // a handful, so this trims the action count without touching results.
+    // fixed-round answer. The count comes back from each round's own
+    // checkpoint job and also gates the broadcast; the nested core-number
+    // peels (24 budgeted rounds) converge in a handful, so this trims the
+    // action count without touching results.
     var prev = -1L
     var r = 0
     while (r < rounds && nSurv != prev) {
@@ -1234,10 +1226,11 @@ object GraphOps {
         .join(alive.select($"id".as("a")), Seq("a"), "left_semi")
         .join(alive.select($"id".as("b")), Seq("b"), "left_semi")
         .groupBy($"a".as("id")).agg(count(lit(1)).as("deg"))
-      surv = deg.filter($"deg" >= k).select($"id").cp()
-      nSurv = surv.count()
+      val (next, nNext) = graft.api.Ckpt.cpCounted(deg.filter($"deg" >= k).select($"id"))
+      surv = next
+      nSurv = nNext
     }
-    surv
+    (surv, nSurv)
   }
 
   private[graft] def kcorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
@@ -1247,12 +1240,10 @@ object GraphOps {
     // pre-partitioned on the degree-count GROUP key `a`: the broadcast
     // semi-joins preserve the clustering, so each round's degree agg runs
     // exchange-free (r6 VERDICT item #6)
-    val both = graft.api.Ckpt.cpByKey(
+    val (both, _) = graft.api.Ckpt.cpCounted(
       cp.unionAll(cp.select($"b".as("a"), $"a".as("b"))), $"a")
-    val surv0 = both.select($"a".as("id")).distinct().cp()
-    val nSurv0 = surv0.count()
-    val surv = kcorePeelRounds(both, surv0, nSurv0, k, rounds)
-    val nSurv = surv.count()
+    val (surv, nSurv) = kcorePeelRounds(both,
+      graft.api.Ckpt.cpCounted(both.select($"a".as("id")).distinct()), k, rounds)
     // one extra degree pass over the FINAL survivor set: the loop's last
     // deg frame measures degrees in the previous round's survivors, which
     // overcounts edges to just-peeled vertices when the caller's rounds
@@ -1857,8 +1848,8 @@ object GraphOps {
     */
   val graphTransitivity: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp()
-    val tri = triangleSum(cp, cp.count())
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val tri = triangleSum(cp, nE)
       .select($"n_tri".as("n_triangles"))
     val wed = cp.select($"a".as("v")).unionAll(cp.select($"b".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
@@ -2458,7 +2449,7 @@ object GraphOps {
       .groupBy($"x.p".as("a"), $"y.p".as("b"))
       .agg(count(lit(1)).as("w")).filter($"w" >= 2)
       .select($"a", $"b")
-    val e = graft.api.Ckpt.cpByKey(
+    val (e, _) = graft.api.Ckpt.cpCounted(
       und.select($"a".as("src"), $"b".as("dst"))
         .unionAll(und.select($"b".as("src"), $"a".as("dst"))), col("dst"))
     val deg = e.groupBy($"src".as("v")).agg(count(lit(1)).as("n")).cp()

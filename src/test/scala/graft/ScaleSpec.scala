@@ -281,14 +281,14 @@ class ScaleSpec extends SparkSpec {
 
   test("iterative-family mechanism: pre-partitioned checkpointed edges make the per-step agg exchange-free") {
     import spark.implicits._
-    // the shape of the remaining cpByKey users (pageRankBatch's edge
-    // frame, the k-core peel, and above the broadcast gate
-    // minLabelFixpoint's flow and powerIterate's edges): the edge frame is
-    // hash-partitioned on the GROUP key and lineage-truncated; the state
-    // side broadcasts; the aggregation must then inherit the clustering —
-    // zero hash exchanges in the whole step (per-iteration |E| shuffles
-    // become one upfront one)
-    val e = api.Ckpt.cpByKey(
+    // the shape of the keyed counted-checkpoint users (pageRankBatch's
+    // edge frame, the k-core peels, label propagation, Louvain, SimRank,
+    // and above the broadcast gate minLabelFixpoint's flow and
+    // powerIterate's edges): the edge frame is hash-partitioned on the
+    // GROUP key and lineage-truncated; the state side broadcasts; the
+    // aggregation must then inherit the clustering — zero hash exchanges
+    // in the whole step (per-iteration |E| shuffles become one upfront one)
+    val (e, _) = api.Ckpt.cpCounted(
       (1 to 1000).map(i => (i.toLong % 50, i.toLong % 97)).toDF("src", "dst"),
       $"dst")
     val scores = (0 to 49).map(i => (i.toLong, 1L)).toDF("src", "x")
@@ -298,6 +298,66 @@ class ScaleSpec extends SparkSpec {
     val plan = step.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
     assert(!plan.contains("Exchange hashpartitioning"),
       s"per-step agg re-shuffled the pre-partitioned edge frame:\n$plan")
+  }
+
+  /** A keyed counted checkpoint's declared partitioning is the true one:
+    * every row sits in partition pmod(hash(key), n), the returned count is
+    * the frame's, and a groupBy on the key plans no exchange.
+    */
+  private def checkDeclaredPartitioning(): Unit = {
+    import spark.implicits._
+    val n = spark.conf.get("spark.sql.shuffle.partitions").toInt
+    val raw = (1 to 5000).map(i => (i.toLong % 37, i.toLong)).toDF("k", "v")
+    val (df, rows) = api.Ckpt.cpCounted(raw.filter($"v" > 10), $"k")
+    assert(rows === 4990L && df.count() === rows)
+    val placed = df.select(spark_partition_id().as("p"), pmod(hash($"k"), lit(n)).as("h"))
+      .collect().map(r => (r.getInt(0), r.getInt(1)))
+    assert(placed.length === rows && placed.forall { case (p, h) => p == h },
+      placed.filter { case (p, h) => p != h }.take(5).mkString(", "))
+    assert(placed.map(_._1).distinct.length > 1, "every row in one partition proves nothing")
+    val agg = df.groupBy($"k").agg(sum($"v").as("s"))
+    assert(agg.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap ===
+      (11 to 5000).groupBy(_ % 37).map { case (k, vs) => k.toLong -> vs.map(_.toLong).sum })
+    val plan = agg.queryExecution.executedPlan.toString.split("== Initial Plan ==")(0)
+    assert(!plan.contains("Exchange hashpartitioning"),
+      s"groupBy(key) re-shuffled the keyed counted checkpoint:\n$plan")
+  }
+
+  test("a keyed counted checkpoint declares its true partitioning (localCheckpoint path)") {
+    checkDeclaredPartitioning()
+  }
+
+  test("a keyed counted checkpoint declares its true partitioning (graft.checkpoint.dir path)") {
+    val dir = Files.createTempDirectory("graft_ckpt_").toString
+    System.setProperty("graft.checkpoint.dir", dir)
+    try {
+      checkDeclaredPartitioning()
+      val wrote = Files.walk(java.nio.file.Paths.get(dir)).filter(Files.isRegularFile(_)).count()
+      assert(wrote > 0, s"no reliable checkpoint files under $dir")
+    } finally {
+      System.clearProperty("graft.checkpoint.dir")
+      Files.walk(java.nio.file.Paths.get(dir))
+        .sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.delete(p))
+    }
+  }
+
+  test("a keyed counted checkpoint never changes the session's adaptive setting while it runs") {
+    import spark.implicits._
+    val own = spark.conf.get("spark.sql.adaptive.enabled")
+    // 4 tasks of 4 rows at 50 ms a row: the materialization takes >= 200 ms
+    val slow = udf((x: Long) => { Thread.sleep(50); x })
+    val frame = spark.range(0, 16, 1, 4).select(slow($"id").as("k"))
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() =>
+      while (!stop.get()) seen.add(spark.conf.get("spark.sql.adaptive.enabled")))
+    poller.start()
+    val rows = try api.Ckpt.cpCounted(frame, $"k")._2
+      finally { stop.set(true); poller.join() }
+    assert(rows === 16L)
+    import scala.jdk.CollectionConverters._
+    assert(seen.asScala.toSet === Set(own))
   }
 
   test("shuffle partition count follows the session config (no hardcoded 200)") {

@@ -7,8 +7,8 @@ Usage: python3 tools/trace_calls.py <out-dir> [<out-dir> ...]
 by `python3 perfbench/run.py --trace 1`. For every traced call in its
 `trace.jsonl` this prints the call's wall time, the wall time of its
 registry call (`ops.build`), the driver gap (call time with none of the
-call's jobs running), and its jobs grouped by call site: the job count and
-the summed job wall time per site. A job's call site is the name of its
+call's jobs running), the shuffle bytes its stages read, and its jobs
+grouped by call site: the job count and the summed job wall time per site. A job's call site is the name of its
 last stage ("runJob at GraphAlgebra.scala:402"), which is where the program
 submitted it. Jobs that Spark submitted from a pool thread (adaptive query
 stages, broadcasts) or whose last stage was skipped show the file-level
@@ -64,13 +64,18 @@ def report(out_dir):
     with open(os.path.join(out_dir, "trace.jsonl")) as f:
         trace = [json.loads(line) for line in f if line.strip()]
     print(f"== {out_dir}")
+    shuffle_read = collections.Counter()
+    for e in trace:
+        if e["type"] == "stage" and e["start_ms"] >= 0:
+            shuffle_read[e["job_id"]] += e["shuffle_read_bytes"]
     for key, q, build, jobs in calls(trace):
         wall = q["end_ms"] - q["start_ms"]
         build_ms = build["end_ms"] - build["start_ms"] if build else float("nan")
         busy = union_ms([(j["start_ms"], j["end_ms"]) for _, j in jobs],
                         q["start_ms"], q["end_ms"])
         print(f"{key}: call {wall:.0f} ms, build {build_ms:.0f} ms, "
-              f"{len(jobs)} jobs, driver gap {wall - busy:.0f} ms"
+              f"{len(jobs)} jobs, driver gap {wall - busy:.0f} ms, shuffle read "
+              f"{sum(shuffle_read[j['job_id']] for _, j in jobs) / 1e6:.1f} MB"
               f"{'' if q.get('ok', True) else ' (FAILED)'}")
         by_site = collections.defaultdict(lambda: [0, 0.0])
         for site, j in jobs:
