@@ -1,14 +1,13 @@
 package graft.api
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import scala.collection.mutable.ArrayBuffer
-import scala.reflect.ClassTag
 
 import graft.graph.GraphBridge
 import Ckpt._
@@ -244,13 +243,16 @@ object GraphAlgebra {
     * `graph_ppr`).
     *
     * `vertices`: one column `part` (bigint ids). `edgesBoth`: (a, b) with
-    * BOTH directions present for undirected semantics.
-    * `personalized = Some(src)` teleports all reset mass to the source.
+    * BOTH directions present for undirected semantics, in any order; a
+    * repeated row is one edge, so per-context pairs can be passed
+    * unaggregated. `personalized = Some(src)` teleports all reset mass to
+    * the source.
     *
     * [[powerIterate]] with [[PowerStep.PageRank]] runs over the ACTIVE
     * (deg ≥ 1) vertices, each of which the symmetric graph feeds every
     * step; isolated vertices rejoin with the rank of a vertex fed nothing,
-    * the reset term. |V| is counted only for the uniform reset.
+    * the reset term. The edges are read once, by the kernel's block build;
+    * |V| is counted only for the uniform reset.
     */
   def pageRankExact(vertices: DataFrame, edgesBoth: DataFrame, iters: Int,
                     personalized: Option[Long],
@@ -259,7 +261,7 @@ object GraphAlgebra {
     val op = PowerStep.PageRank(
       if (personalized.isEmpty) parts.count() else 0L, personalized)
     val Seq(ranks) = powerIterate(
-      Seq(edgesBoth.select(col("a").as("src"), col("b").as("dst")).cp()),
+      Seq(edgesBoth.select(col("a").as("src"), col("b").as("dst"))),
       iters, op, broadcastMaxRows)
     val reset = udf((v: Long) => op.update(iters, v, 0L, 0L))
     ranks.select(col("id").as("part"), col("x").as("r")).unionAll(
@@ -319,56 +321,58 @@ object GraphAlgebra {
   /** Exact sparse power iteration, the one loop behind PageRank, HITS,
     * eigenvector centrality and Katz: each step, every dst vertex sums what
     * its src in-neighbours send and applies `op`'s update. `phases` are
-    * (src, dst) frames run in turn — one for a symmetric graph, two for
+    * (src, dst) flows run in turn — one for a symmetric graph, two for
     * HITS's orientations; phase k's dst vertices must be the next phase's
-    * src vertices, and the state starts as `op.init` over phase 0's. Each
-    * phase is read twice, so pass it checkpointed. Returns, per phase, the
-    * last (id, x) state over its dst vertices (the initial state for the
-    * last phase until it runs).
+    * src vertices, and the state starts as `op.init` over phase 0's. A
+    * phase's rows may repeat and arrive in any order: its graph is its
+    * distinct (src, dst) set. Returns, per phase, the last (id, x) state
+    * over its dst vertices (the initial state for the last phase until it
+    * runs).
     *
+    * Each phase is read ONCE, shuffled by dst into the blocks of a [[Csr]];
+    * the src ids and out-degrees come from one aggregate over the blocks'
+    * per-block (src, out-count) rows, so a repeated row is counted once.
     * Regimes: with every phase's src count ≤ `broadcastMaxRows`, the sorted
-    * ids and degrees are collected once and each phase becomes one [[Csr]]
-    * (the shared superstep kernel): a step is ONE job, an exact
+    * ids and degrees are collected once and each phase's blocks become a
+    * [[Csr]] (the shared superstep kernel): a step is ONE job, an exact
     * `Math.addExact` sum per dst row over the broadcast `long[]` state,
     * with the update on the driver. Above the gate a step is a plain
-    * join + sum (ANSI) over the edge frame clustered by dst, with the same
-    * update as a UDF.
+    * join + sum (ANSI) over the blocks' edges clustered by dst, with the
+    * same update as a UDF.
     */
   def powerIterate(phases: Seq[DataFrame], steps: Int, op: PowerStep,
                    broadcastMaxRows: Long = BroadcastMaxRows): Seq[DataFrame] = {
     val nP = phases.size
     require(nP >= 1 && steps >= nP - 1, s"powerIterate: $nP phases, $steps steps")
     val sess = phases.head.sparkSession
-    val es = phases.map(_.select(col("src"), col("dst")))
-    val degs = es.map(_.groupBy(col("src").as("id")).agg(count(lit(1)).as("deg")))
+    val blocks = phases.map(p => Csr.blocks(Csr.byDst(p))._1)
+    val degs = blocks.map(b => GraftSqlBridge.ofInternalRows(sess, b.flatMap(_.outDegrees),
+        StructType.fromDDL("id BIGINT, n BIGINT"))
+      .groupBy(col("id")).agg(sum(col("n")).as("deg")))
     // state(k): the latest values over phase k's dst = phase k + 1's src
     def next(k: Int) = (k + 1) % nP
     def prev(k: Int) = (k + nP - 1) % nP
     val arrays = degs.map(driverArrays(_, broadcastMaxRows))
     if (arrays.forall(_.isRight)) {
       val (ids, deg) = arrays.map(_.toOption.get).unzip
-      val csrs = (0 until nP).map { k =>
-        val csr = Csr(es(k), ids(k), ids(next(k)))
-        for (v <- csr.dsts.iterator.flatten) require(
-          java.util.Arrays.binarySearch(ids(next(k)), v) >= 0,
-          s"powerIterate: dst $v is not a src vertex of the next phase")
-        csr
-      }
+      val csrs = (0 until nP).map(k => new Csr(blocks(k), ids(k), ids(next(k))))
       val state = new Array[Array[Long]](nP)
       state(nP - 1) = ids(0).map(op.init)
       try for (step <- 1 to steps; k = (step - 1) % nP) {
         val (x, d) = (state(prev(k)), deg(k))
         val sum = csrs(k).fold(Array.tabulate(x.length)(i => op.send(x(i), d(i))), 0L,
           (a, b) => Math.addExact(a, b))
+        if (step <= nP) require(csrs(k).unmatched == 0,
+          s"powerIterate: phase $k has a dst that is not a src vertex of the next phase")
         val mx = if (sum.isEmpty) 0L else sum.max
         state(k) = Array.tabulate(sum.length)(i => op.update(step, ids(next(k))(i), sum(i), mx))
       } finally csrs.foreach(_.release())
       import sess.implicits._
       (0 until nP).map(k => ids(next(k)).zip(state(k)).toSeq.toDF("id", "x"))
-    } else {
+    } else try {
       val degF = degs.map(_.cp())
-      val eds = (0 until nP).map(k => Ckpt.cpCounted(
-        es(k).join(degF(k), col("src") === col("id")).select(col("src"), col("dst"), col("deg")),
+      val eds = (0 until nP).map(k => Ckpt.cpCounted(Csr.edges(sess, blocks(k))
+          .join(degF(k), col("src") === col("id")).select(col("src"), col("dst"), col("deg")),
         col("dst"))._1)
       val send = udf((x: Long, d: Long) => op.send(x, d))
       val state = new Array[DataFrame](nP)
@@ -385,7 +389,7 @@ object GraphAlgebra {
         state(k) = s.select(col("id"), update(col("id"), col("s")).as("x")).cp()
       }
       state.toSeq
-    }
+    } finally blocks.foreach(_.unpersist(blocking = false))
   }
 
   /** The kernel's driver arrays of the (id, x) `rows` — ids ascending and
@@ -411,42 +415,55 @@ object GraphAlgebra {
     Right((ids, x))
   }
 
-  /** `xs` ascending without duplicates. */
-  private def sortedDistinct(xs: Array[Long]): Array[Long] = {
-    val a = xs.clone()
+  /** `xs` ascending without duplicates (its first `n` values). */
+  private def sortedDistinct(xs: Array[Long], n: Int): Array[Long] = {
+    val a = java.util.Arrays.copyOf(xs, n)
     java.util.Arrays.sort(a)
-    Array.range(0, a.length).filter(i => i == 0 || a(i) != a(i - 1)).map(i => a(i))
+    var w = 0
+    for (i <- 0 until n if w == 0 || a(i) != a(w - 1)) { a(w) = a(i); w += 1 }
+    java.util.Arrays.copyOf(a, w)
   }
+
+  private def sortedDistinct(xs: Array[Long]): Array[Long] = sortedDistinct(xs, xs.length)
 
   /** The one CSR superstep kernel behind [[powerIterate]],
     * [[minLabelFixpoint]] and [[frontierHops]] (Pregelix's superstep as
     * one dataflow): a (src, dst) flow shuffled by dst ONCE into
-    * per-partition [[CsrBlock]]s and materialized ([[Ckpt.materialize]]),
-    * whose dst rows are indexed into the driver's sorted `dstIds`. A round
-    * is [[fold]]: ONE job that folds every dst row's in-neighbour values
-    * out of a broadcast `long[]` state indexed like `srcIds`. Rows of dst
-    * ids outside `dstIds` are dropped, and a src outside `srcIds` sends
-    * the fold's zero — the flow rows the DataFrame loops' joins drop.
-    * [[release]] unpersists the blocks and destroys the id broadcast.
+    * per-partition [[CsrBlock]]s and materialized ([[Ckpt.materialize]]).
+    * The flow's rows may arrive in any order and repeat; the kernel's
+    * graph is their distinct (src, dst) set. A round is [[fold]]: ONE job
+    * that folds every dst row's in-neighbour values out of a broadcast
+    * `long[]` state indexed like `srcIds`, into the driver's sorted
+    * `dstIds`. Rows of dst ids outside `dstIds` are dropped ([[unmatched]]
+    * counts them), and a src outside `srcIds` sends the fold's zero — the
+    * flow rows the DataFrame loops' joins drop. [[release]] unpersists the
+    * blocks and destroys the id broadcast.
     */
-  private final class Csr(blocks: RDD[CsrBlock], val dsts: Array[Array[Long]],
-                          srcIds: Array[Long], dstIds: Array[Long]) {
+  private final class Csr(blocks: RDD[CsrBlock], srcIds: Array[Long], dstIds: Array[Long]) {
     private val bSrc = blocks.sparkContext.broadcast(srcIds)
-    private val rows = dsts.map(_.map(java.util.Arrays.binarySearch(dstIds, _)))
+    // per block, each dst row's index in `dstIds` (< 0 outside it): the
+    // first fold's job returns the blocks' dst ids beside its sums
+    private var rows: Array[Array[Int]] = _
 
     /** Per index of `dstIds`, `f` folded from `zero` over the `x` values
       * of its in-neighbours (`zero` for a vertex with none).
       */
     def fold(x: Array[Long], zero: Long, f: (Long, Long) => Long): Array[Long] = {
       val sc = blocks.sparkContext
-      val (ids, bx) = (bSrc, sc.broadcast(x))
-      val part = sc.runJob(blocks, (it: Iterator[CsrBlock]) =>
-        it.next().fold(ids.value, bx.value, zero, f))
+      val (ids, bx, first) = (bSrc, sc.broadcast(x), rows == null)
+      val part = sc.runJob(blocks, (it: Iterator[CsrBlock]) => {
+        val b = it.next()
+        (if (first) b.dst else null, b.fold(ids.value, bx.value, zero, f))
+      })
       bx.destroy()
+      if (first) rows = part.map(_._1.map(java.util.Arrays.binarySearch(dstIds, _)))
       val out = Array.fill(dstIds.length)(zero)
-      for (p <- part.indices; r <- part(p).indices if rows(p)(r) >= 0) out(rows(p)(r)) = part(p)(r)
+      for (p <- part.indices; r <- rows(p).indices if rows(p)(r) >= 0) out(rows(p)(r)) = part(p)._2(r)
       out
     }
+
+    /** The dst rows outside `dstIds`, once a [[fold]] has run. */
+    def unmatched: Int = rows.iterator.map(_.count(_ < 0)).sum
 
     def release(): Unit = {
       blocks.unpersist(blocking = false)
@@ -455,38 +472,49 @@ object GraphAlgebra {
   }
 
   private object Csr {
-    /** `flow`'s (src, dst) rows hash-partitioned on dst and sorted by it
-      * within each partition: the kernel's one read of the flow.
+    /** `flow`'s (src, dst) rows hash-partitioned on dst: the kernel's one
+      * read of the flow. Rows reach their block in any order.
       */
     def byDst(flow: DataFrame): RDD[InternalRow] =
       flow.select(col("src").cast("long").as("src"), col("dst").cast("long").as("dst"))
         .repartition(flow.sparkSession.sessionState.conf.numShufflePartitions, col("dst"))
-        .sortWithinPartitions(col("dst")).queryExecution.toRdd
+        .queryExecution.toRdd
 
-    /** The materialized blocks of [[byDst]] rows and `f` of each block,
-      * returned by the job that builds them.
+    /** The materialized blocks of [[byDst]] rows and each block's dst row
+      * count, returned by the job that builds them.
       */
-    def blocks[U: ClassTag](byDst: RDD[InternalRow])(f: CsrBlock => U): (RDD[CsrBlock], Array[U]) = {
+    def blocks(byDst: RDD[InternalRow]): (RDD[CsrBlock], Array[Long]) = {
       val rdd = byDst.mapPartitions(rows => Iterator.single(CsrBlock(rows)))
-      (rdd, Ckpt.materialize(rdd)(it => f(it.next())))
+      (rdd, Ckpt.materialize(rdd)(_.next().dst.length.toLong))
     }
 
-    def apply(flow: DataFrame, srcIds: Array[Long], dstIds: Array[Long]): Csr = {
-      val (rdd, dsts) = blocks(byDst(flow))(_.dst)
-      new Csr(rdd, dsts, srcIds, dstIds)
-    }
+    /** The blocks' distinct (src, dst) rows as a frame. */
+    def edges(sess: SparkSession, blocks: RDD[CsrBlock]): DataFrame =
+      GraftSqlBridge.ofInternalRows(sess, blocks.flatMap(_.edges),
+        StructType.fromDDL("src BIGINT, dst BIGINT"))
+
+    def apply(flow: DataFrame, srcIds: Array[Long], dstIds: Array[Long]): Csr =
+      new Csr(blocks(byDst(flow))._1, srcIds, dstIds)
   }
 
   /** One partition of a [[Csr]]: its dst ids `dst` (ascending), and row
-    * r's in-neighbours `src(srcs(j))` for j in `ptr(r) until ptr(r + 1)`,
-    * where `src` is the block's own ascending src table — so a round looks
-    * each distinct src up in the id space once, not once per edge.
+    * r's distinct in-neighbours `src(srcs(j))` for j in `ptr(r) until
+    * ptr(r + 1)`, where `src` is the block's own ascending src table — so
+    * a round looks each distinct src up in the id space once, not once per
+    * edge.
     */
   private final case class CsrBlock(dst: Array[Long], ptr: Array[Int], srcs: Array[Int],
                                     src: Array[Long]) {
     /** The block's (src, dst) rows, grouped by dst. */
     def edges: Iterator[InternalRow] = dst.indices.iterator.flatMap(r =>
       (ptr(r) until ptr(r + 1)).map(j => InternalRow(src(srcs(j)), dst(r))))
+
+    /** Per src of the block, its dst row count: its out-degree here. */
+    def outDegrees: Iterator[InternalRow] = {
+      val n = new Array[Long](src.length)
+      srcs.foreach(j => n(j) += 1)
+      src.indices.iterator.map(j => InternalRow(src(j), n(j)))
+    }
 
     def fold(ids: Array[Long], x: Array[Long], zero: Long, f: (Long, Long) => Long): Array[Long] = {
       val xs = src.map { v =>
@@ -502,15 +530,39 @@ object GraphAlgebra {
   }
 
   private object CsrBlock {
-    /** Group (src, dst) rows that arrive sorted by dst. */
+    /** Group (src, dst) rows in any order, in primitive arrays: a counting
+      * sort on the block's dst index, then each dst row's srcs sorted in
+      * place with repeats dropped.
+      */
     def apply(rows: Iterator[InternalRow]): CsrBlock = {
-      val (s, d) = (Array.newBuilder[Long], Array.newBuilder[Long])
-      rows.foreach { r => s += r.getLong(0); d += r.getLong(1) }
-      val (sv, dv) = (s.result(), d.result())
-      val src = sortedDistinct(sv)
-      val starts = Array.range(0, dv.length).filter(i => i == 0 || dv(i) != dv(i - 1))
-      CsrBlock(starts.map(i => dv(i)), starts :+ dv.length,
-        sv.map(java.util.Arrays.binarySearch(src, _)), src)
+      var (sv, dv, n) = (new Array[Long](1024), new Array[Long](1024), 0)
+      rows.foreach { r =>
+        if (n == sv.length) {
+          sv = java.util.Arrays.copyOf(sv, 2 * n)
+          dv = java.util.Arrays.copyOf(dv, 2 * n)
+        }
+        sv(n) = r.getLong(0)
+        dv(n) = r.getLong(1)
+        n += 1
+      }
+      val dst = sortedDistinct(dv, n)
+      val row = Array.tabulate(n)(i => java.util.Arrays.binarySearch(dst, dv(i)))
+      val ptr = new Array[Int](dst.length + 1)
+      row.foreach(r => ptr(r + 1) += 1)
+      for (r <- dst.indices) ptr(r + 1) += ptr(r)
+      val at = java.util.Arrays.copyOf(ptr, dst.length)
+      val s = new Array[Long](n)
+      for (i <- 0 until n) { s(at(row(i))) = sv(i); at(row(i)) += 1 }
+      var w = 0
+      for (r <- dst.indices) {
+        val (from, to) = (ptr(r), ptr(r + 1))
+        java.util.Arrays.sort(s, from, to)
+        ptr(r) = w
+        for (j <- from until to if j == from || s(j) != s(j - 1)) { s(w) = s(j); w += 1 }
+      }
+      ptr(dst.length) = w
+      val src = sortedDistinct(s, w)
+      CsrBlock(dst, ptr, Array.tabulate(w)(j => java.util.Arrays.binarySearch(src, s(j))), src)
     }
   }
 
@@ -1434,7 +1486,9 @@ object GraphAlgebra {
     * `passes` are hop-0 (id, mask) seed frames with their row counts, run
     * in turn over one read of the flow. Returns per pass the (id, dist,
     * mask) rows of every first reach, the seed rows at dist 0 included.
-    * A pass stops after `maxHops` hops or when its frontier empties.
+    * A pass stops after `maxHops` hops or when its frontier empties. The
+    * flow's rows may repeat and arrive in any order: a repeated row is one
+    * edge.
     *
     * Regimes: the flow is shuffled by dst once, into the materialized
     * blocks of a [[Csr]], whose build job also returns each block's
@@ -1442,8 +1496,8 @@ object GraphAlgebra {
     * the blocks' dst ids are collected and the blocks become one [[Csr]]
     * over the dst and seed ids, the masks are driver `long[]`s, a hop is
     * ONE job (a `bit_or` fold), and a pass's frame is built once at its
-    * end. Above the gate the blocks' rows are the (a, b) adjacency, so the
-    * shuffle is read once in both regimes, and a hop is
+    * end. Above the gate the blocks' distinct rows are the (a, b)
+    * adjacency, so the shuffle is read once in both regimes, and a hop is
     * [[frontierHop]]: a join of the frontier into it, a bit_or of the
     * reaching lanes per neighbor (the mask aggregate folds map-side) and
     * one counted checkpoint; the frontier and visited sides are
@@ -1455,13 +1509,13 @@ object GraphAlgebra {
                            broadcastMaxRows: Long): Seq[DataFrame] = {
     val sess = flow.sparkSession
     import sess.implicits._
-    val (blocks, nDst) = Csr.blocks(Csr.byDst(flow))(_.dst.length.toLong)
+    val (blocks, nDst) = Csr.blocks(Csr.byDst(flow))
     if (nDst.sum + passes.map(_._2).sum <= math.min(broadcastMaxRows, Int.MaxValue)) {
       val seeds = passes.map(_._1.select(col("id").cast("long"), col("mask").cast("long"))
         .collect().map(r => (r.getLong(0), r.getLong(1))))
       val dsts = sess.sparkContext.runJob(blocks, (it: Iterator[CsrBlock]) => it.next().dst)
       val ids = sortedDistinct(dsts.flatten ++ seeds.flatten.map(_._1))
-      val csr = new Csr(blocks, dsts, ids, ids)
+      val csr = new Csr(blocks, ids, ids)
       try seeds.map { seed =>
         val visited = new Array[Long](ids.length)
         for ((v, m) <- seed) visited(java.util.Arrays.binarySearch(ids, v)) |= m
@@ -1481,8 +1535,7 @@ object GraphAlgebra {
         reached.toSeq.toDF("id", "dist", "mask")
       } finally csr.release()
     } else {
-      val adj = GraftSqlBridge.ofInternalRows(sess, blocks.flatMap(_.edges),
-        StructType.fromDDL("a BIGINT, b BIGINT"))
+      val adj = Csr.edges(sess, blocks).toDF("a", "b")
       try passes.map { case (p, seedRows) =>
         val seed = p.cp()
         var visited = seed
@@ -1545,7 +1598,7 @@ object GraphAlgebra {
     * pass's first-reach masks are exploded back to (src, id, dist) once at
     * the END, never inside the hop loop. The hop-0 self rows come from the
     * raw source list, so a duplicated source row yields a duplicated dist-0
-    * row and nothing else.
+    * row and nothing else. A duplicated `edgesBoth` row is one edge.
     */
   def multiBfsHops(edgesBoth: DataFrame, sources: DataFrame, maxHops: Int,
                    broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {
@@ -1709,7 +1762,8 @@ object GraphAlgebra {
     * [[frontierHops]] (one [[Csr]] job per hop below the broadcast gate,
     * a checkpointed DataFrame round above it). Output (id, dist) for
     * reachable vertices, dist = minimum hop count (identical to GraphX
-    * ShortestPaths and the recursive BFS oracle).
+    * ShortestPaths and the recursive BFS oracle). A duplicated `edgesBoth`
+    * row is one edge.
     */
   def bfsHops(edgesBoth: DataFrame, src: Long, maxHops: Int,
               broadcastMaxRows: Long = BroadcastMaxRows): DataFrame = {

@@ -37,42 +37,57 @@ object GraphOps {
   }
 
   /** Part–part co-purchase projection: canonical (a < b) pairs appearing in
-    * the same order, w = number of shared orders. Pairs come from each
-    * order's sorted part-set array (collect_set + posexplode/slice a < b
-    * expansion — one l_orderkey exchange, no self-join); the per-order
-    * fan-out is bounded by lines-per-order (~k² for k lines), NOT the
-    * quadratic customer–part adjacency — the scalable shape.
+    * the same order, w = number of shared orders: [[orderPairs]] counted
+    * per (a, b).
     */
   def copurchase(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
-    // collect_set + sorted-array pair generation instead of the old
-    // distinct + self-join (r15 round-2, guide §2.2 — shuffle less): ONE
-    // exchange on l_orderkey replaces the distinct's (ok, p) exchange
-    // plus the self-join, and the per-order a < b expansion runs
-    // map-side after the agg. The array is set-deduped and sorted, so
-    // the generated pairs are IDENTICAL to the join's; per-order arrays
-    // are bounded by lines-per-order at any corpus scale.
+    orderPairs(s, dir).groupBy($"a", $"b").agg(count(lit(1)).as("w"))
+  }
+
+  /** The one per-order pair generator: each order's canonical (a < b)
+    * part pairs, one row per (order, pair), from the order's sorted part-set
+    * array (collect_set + posexplode/slice a < b expansion — one
+    * l_orderkey exchange, no self-join). The array is set-deduped and
+    * sorted, so the pairs equal a distinct + self-join's; the per-order
+    * fan-out is bounded by lines-per-order (~k² for k lines), NOT the
+    * quadratic customer–part adjacency — the scalable shape.
+    */
+  private def orderPairs(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
     Tables.lineitem(s, dir)
       .groupBy($"l_orderkey")
       .agg(sort_array(collect_set($"l_partkey")).as("ps"))
       .select($"ps", posexplode($"ps"))
       .select($"col".as("a"),
         explode(expr("slice(ps, pos + 2, size(ps))")).as("b"))
-      .groupBy($"a", $"b")
-      .agg(count(lit(1)).as("w"))
   }
 
-  /** Undirected view of the co-purchase graph (both directions), for the
-    * direction-sensitive algorithms. One `explode` mirrors each pair, so
-    * the pair build and its final aggregate run once (a self-union would
-    * run both twice).
+  /** (a, b) pairs with each row also mirrored as (b, a): one `explode`, so
+    * the plan below runs once (a self-union would run it twice).
     */
-  private def copurchaseBoth(s: SparkSession, dir: String): DataFrame = {
-    import s.implicits._
-    copurchase(s, dir)
-      .select(explode(array(struct($"a", $"b"), struct($"b".as("a"), $"a".as("b")))).as("e"))
-      .select($"e.a", $"e.b")
-  }
+  private def mirrored(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(struct(col("a"), col("b")),
+        struct(col("b").as("a"), col("a").as("b")))).as("e"))
+      .select(col("e.a"), col("e.b"))
+
+  /** Undirected view of the co-purchase graph (both directions, one row
+    * per distinct directed pair), for the consumers that need distinct
+    * pairs: the Brandes/σ loops, GraphX and the degree ops.
+    */
+  private[graft] def copurchaseBoth(s: SparkSession, dir: String): DataFrame =
+    mirrored(copurchase(s, dir))
+
+  /** The co-purchase graph as the CSR kernel reads it: [[orderPairs]]
+    * mirrored with no (a, b) aggregate, so a pair shared by k orders is k
+    * rows each way. The kernel's consumers
+    * ([[graft.api.GraphAlgebra.powerIterate]], `bfsHops`, `multiBfsHops`)
+    * take a repeated row as one edge, so their graph is
+    * [[copurchaseBoth]]'s, built with one shuffle from the order groups to
+    * the kernel's dst blocks.
+    */
+  private[graft] def copurchaseFlow(s: SparkSession, dir: String): DataFrame =
+    mirrored(orderPairs(s, dir))
 
   private def partVertices(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -407,7 +422,7 @@ object GraphOps {
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
     graft.api.GraphAlgebra
-      .multiBfsHops(copurchaseBoth(s, dir), lm, maxHops = 6)
+      .multiBfsHops(copurchaseFlow(s, dir), lm, maxHops = 6)
       .filter($"dist" > 0)
       .agg(count(lit(1)).as("n_pairs"), sum($"dist").as("sum_hops"),
         max($"dist").as("diameter_lb"))
@@ -450,7 +465,7 @@ object GraphOps {
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
     graft.api.GraphAlgebra
-      .multiBfsHops(copurchaseBoth(s, dir), lm, maxHops = 6)
+      .multiBfsHops(copurchaseFlow(s, dir), lm, maxHops = 6)
       .filter($"dist" > 0)
       .groupBy($"id".as("part"))
       .agg(count(lit(1)).as("n_sources"),
@@ -578,7 +593,7 @@ object GraphOps {
   private def pagerankRanks(s: SparkSession, dir: String, iters: Int,
                             personalized: Option[Long]): DataFrame =
     graft.api.GraphAlgebra.pageRankExact(
-      partVertices(s, dir).toDF("part"), copurchaseBoth(s, dir), iters, personalized)
+      partVertices(s, dir).toDF("part"), copurchaseFlow(s, dir), iters, personalized)
 
   /** WEIGHTED shortest distance (min-plus semiring) from part 1: 6 rounds
     * of Bellman-Ford relaxation over the co-purchase graph with edge cost =
@@ -629,7 +644,7 @@ object GraphOps {
     */
   val graphSsspDf: Q = (s, dir) => {
     import s.implicits._
-    graft.api.GraphAlgebra.bfsHops(copurchaseBoth(s, dir), src = 1L, maxHops = 6)
+    graft.api.GraphAlgebra.bfsHops(copurchaseFlow(s, dir), src = 1L, maxHops = 6)
       .select($"id".as("part"), $"dist")
       .orderBy($"part")
   }
@@ -782,8 +797,9 @@ object GraphOps {
     */
   val graphClusteringCoeff: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp() // tri + deg
-    val tri = triangleSum(cp, cp.count())
+    // tri + deg
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val tri = triangleSum(cp, nE)
       .select($"n_tri".as("n_triangles"))
     val wedges = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
       .groupBy($"a").agg(count(lit(1)).as("d"))
@@ -1301,7 +1317,7 @@ object GraphOps {
     */
   val graphEigencentrality: Q = (s, dir) => {
     import s.implicits._
-    val both = copurchaseBoth(s, dir).select($"b".as("src"), $"a".as("dst")).cp()
+    val both = copurchaseFlow(s, dir).select($"b".as("src"), $"a".as("dst"))
     val Seq(x) = graft.api.GraphAlgebra.powerIterate(Seq(both), steps = 6,
       graft.api.GraphAlgebra.PowerStep.MaxNormalized(1000000000000L))
     x.orderBy($"x".desc, $"id").limit(20)
@@ -1395,7 +1411,7 @@ object GraphOps {
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
     graft.api.GraphAlgebra
-      .multiBfsHops(copurchaseBoth(s, dir), lm, maxHops = 6)
+      .multiBfsHops(copurchaseFlow(s, dir), lm, maxHops = 6)
       .filter($"dist" > 0)
       .groupBy($"id")
       .agg(count(lit(1)).as("n_reached"),
@@ -1470,7 +1486,7 @@ object GraphOps {
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
     graft.api.GraphAlgebra
-      .multiBfsHops(copurchaseBoth(s, dir), lm, maxHops = 6)
+      .multiBfsHops(copurchaseFlow(s, dir), lm, maxHops = 6)
       .groupBy($"id")
       .agg(count(lit(1)).as("n_sources"), max($"dist").as("ecc_lb"))
       .select($"id".as("part"), $"n_sources", $"ecc_lb")
@@ -1674,7 +1690,7 @@ object GraphOps {
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
     graft.api.GraphAlgebra
-      .multiBfsHops(copurchaseBoth(s, dir), lm, maxHops = 6)
+      .multiBfsHops(copurchaseFlow(s, dir), lm, maxHops = 6)
       .filter($"dist" > 0)
       .select(expr("(2000000000 + dist) div (2 * dist)").as("qinv"))
       .agg(count(lit(1)).as("n_pairs"), sum($"qinv").as("s"))
@@ -1873,13 +1889,12 @@ object GraphOps {
     */
   val graphTriangleSample: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp()
-    val sampled = cp.filter(expr(
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val (sampled, nS) = graft.api.Ckpt.cpCounted(cp.filter(expr(
       "cast(conv(substring(md5(concat(cast(a as string), '_'," +
-        " cast(b as string))), 1, 4), 16, 10) as bigint) % 4 = 0"))
-      .cp()
-    val exact = triangleSum(cp, cp.count()).select($"n_tri".as("n_exact"))
-    val est = triangleSum(sampled, sampled.count())
+        " cast(b as string))), 1, 4), 16, 10) as bigint) % 4 = 0")))
+    val exact = triangleSum(cp, nE).select($"n_tri".as("n_exact"))
+    val est = triangleSum(sampled, nS)
       .select($"n_tri".as("n_tri_sampled"))
     cp.agg(count(lit(1)).as("n_edges"))
       .crossJoin(sampled.agg(count(lit(1)).as("n_edges_sampled")))
@@ -1934,7 +1949,7 @@ object GraphOps {
     val lm = partVertices(s, dir)
       .orderBy($"p_partkey").limit(8).select($"p_partkey".as("src"))
     graft.api.GraphAlgebra
-      .multiBfsHops(copurchaseBoth(s, dir), lm, maxHops = 6)
+      .multiBfsHops(copurchaseFlow(s, dir), lm, maxHops = 6)
       .filter($"dist" > 0)
       .groupBy($"dist".as("hop")).agg(count(lit(1)).as("n_pairs"))
       .withColumn("cum", sum($"n_pairs").over(Window.orderBy($"hop")
@@ -2112,8 +2127,9 @@ object GraphOps {
     */
   val graphLocalBridges: Q = (s, dir) => {
     import s.implicits._
-    val cp = copurchase(s, dir).select($"a", $"b").cp() // adj + edge scan
-    val nDir = 2L * cp.count()
+    // adj + edge scan
+    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
+    val nDir = 2L * nE
     val both = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
     val adj = both.groupBy($"a".as("v"))
       .agg(sort_array(collect_list($"b")).as("nbrs"))
@@ -2606,7 +2622,7 @@ object GraphOps {
     */
   val graphKatz: Q = (s, dir) => {
     import s.implicits._
-    val both = copurchaseBoth(s, dir).select($"b".as("src"), $"a".as("dst")).cp()
+    val both = copurchaseFlow(s, dir).select($"b".as("src"), $"a".as("dst"))
     val Seq(y) = graft.api.GraphAlgebra.powerIterate(Seq(both), steps = 4,
       graft.api.GraphAlgebra.PowerStep.Katz(4L))
     y.orderBy($"x".desc, $"id").limit(20)

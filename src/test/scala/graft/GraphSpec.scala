@@ -873,6 +873,32 @@ class GraphSpec extends SparkSpec {
     assert(got.count(_ == ((lm(2), lm(2), 0L))) === 2)
   }
 
+  test("copurchaseFlow: its distinct (a, b) rows are copurchaseBoth's, and it repeats pairs") {
+    val flow = GraphOps.copurchaseFlow(spark, sf)
+    val both = GraphOps.copurchaseBoth(spark, sf)
+    val rows = both.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+    assert(rows.distinct.size === rows.size)
+    assert(flow.distinct().collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted ===
+      rows.sorted)
+    assert(flow.count() > rows.size, "no pair is shared by two orders at this scale")
+  }
+
+  test("multiBfsHops and bfsHops over a flow with repeated rows equal a JVM BFS replay in both regimes") {
+    val flow = GraphOps.copurchaseFlow(spark, sf)
+    val lm = landmarks(8)
+    val raw = lm.collect().map(_.getLong(0)).toSeq
+    val want = jvmMultiBfs(raw, 6)
+    for (gate <- gates) {
+      val got = api.GraphAlgebra.multiBfsHops(flow, lm, 6, gate).collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+      assert(got === want, s"gate=$gate")
+      val one = api.GraphAlgebra.bfsHops(flow, raw.head, 6, gate).collect()
+        .map(r => (raw.head, r.getLong(0), r.getLong(1))).toSeq.sorted
+      assert(one === jvmMultiBfs(raw.take(1), 6), s"gate=$gate")
+      assert(one.size > 1, s"gate=$gate: the source reached nothing")
+    }
+  }
+
   test("reachClosure equals a JVM closure on random digraphs with cycles and isolated seeds") {
     import spark.implicits._
     for (seed <- 1 to 5; gate <- gates) {
@@ -1292,14 +1318,24 @@ class GraphSpec extends SparkSpec {
   private def xs(df: DataFrame): Map[Long, Long] =
     df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
 
+  /** `rows` with about half of them (and the first three) repeated, in a
+    * seeded random order: a flow the kernel must read as `rows.distinct`.
+    */
+  private def withRepeats[T](rows: Seq[T], seed: Long): Seq[T] = {
+    val rnd = new scala.util.Random(seed)
+    rnd.shuffle(rows ++ rows.filter(_ => rnd.nextBoolean()) ++ rows.take(3))
+  }
+
   test("powerIterate: PageRank, PPR, HITS and Katz equal plain-Scala replays in both regimes") {
+    // every flow repeats rows in shuffled order; the replays run on the
+    // distinct edge set
     import spark.implicits._
     import graft.api.GraphAlgebra.{PowerStep, powerIterate}
     val S = 1000000000000L
     for (seed <- 1L to 3L; gate <- Seq(graft.api.GraphAlgebra.BroadcastMaxRows, 0L)) {
       val (vs, e) = randomUndirected(seed)
       val msg = s"seed=$seed gate=$gate"
-      val both = e.toDF("a", "b")
+      val both = withRepeats(e, seed).toDF("a", "b")
       for (src <- Seq(None, Some(32L), Some(1L + seed)))
         assert(xs(graft.api.GraphAlgebra.pageRankExact(vs.toDF("part"), both, 10, src,
           broadcastMaxRows = gate)) === refPageRank(vs, e, 10, src), s"$msg src=$src")
@@ -1310,11 +1346,13 @@ class GraphSpec extends SparkSpec {
         p = e.groupBy(_._2).map { case (v, in) => v -> in.map(x => p(x._1)).sum }
         katz = katz.map { case (v, k) => v -> (k + w * p(v)) }
       }
-      val Seq(y) = powerIterate(Seq(e.toDF("src", "dst")), 4, PowerStep.Katz(4L), gate)
+      val Seq(y) = powerIterate(Seq(withRepeats(e, seed + 10).toDF("src", "dst")), 4,
+        PowerStep.Katz(4L), gate)
       assert(xs(y) === katz, msg)
       // HITS on a directed bipartite graph whose two id spaces overlap
       val rnd = new scala.util.Random(seed)
-      val bi = Seq.fill(60)((1L + rnd.nextInt(15), 1L + rnd.nextInt(20))).distinct
+      val flow = Seq.fill(60)((1L + rnd.nextInt(15), 1L + rnd.nextInt(20)))
+      val bi = flow.distinct
       def norm(m: Map[Long, Long]) = {
         val q = math.max(1L, m.values.max / S)
         m.map { case (k, v) => k -> v / q }
@@ -1325,7 +1363,7 @@ class GraphSpec extends SparkSpec {
         a = norm(bi.groupBy(_._2).map { case (v, in) => v -> in.map(x => h(x._1)).sum })
         h = norm(bi.groupBy(_._1).map { case (v, out) => v -> out.map(x => a(x._2)).sum })
       }
-      val fwd = bi.toDF("src", "dst")
+      val fwd = withRepeats(flow, seed).toDF("src", "dst")
       val Seq(ga, gh) = powerIterate(Seq(fwd, fwd.select($"dst".as("src"), $"src".as("dst"))),
         12, PowerStep.MaxNormalized(S), gate)
       assert(xs(ga) === a, msg)
@@ -1344,6 +1382,26 @@ class GraphSpec extends SparkSpec {
       assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
         .exists(_.isInstanceOf[ArithmeticException]), s"gate=$gate: $err")
     }
+  }
+
+  test("graph_pagerank runs no localCheckpoint job and scans lineitem once per call") {
+    // the per-order pairs flow straight into the kernel's blocks: no pair
+    // aggregate, no edge checkpoint, and the degrees come from the blocks
+    val nLineitem = Tables.lineitem(spark, sf).count()
+    val read = new java.util.concurrent.ConcurrentHashMap[Int, java.lang.Long]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onTaskEnd(e: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit =
+        if (e.taskMetrics != null)
+          read.merge(e.stageId, e.taskMetrics.inputMetrics.recordsRead, (a, b) => a + b)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val (_, stages) = try sparkEventsDuring(q("graph_pagerank").collect())
+      finally spark.sparkContext.removeSparkListener(listener)
+    val ckpt = stages.map(_.name).filter(_.startsWith("localCheckpoint"))
+    assert(ckpt.isEmpty, ckpt.mkString(", "))
+    val scans = stages.filter(_.rddInfos.exists(_.name == "FileScanRDD"))
+      .count(st => read.getOrDefault(st.stageId, 0L) == nLineitem)
+    assert(scans === 1, s"$scans lineitem scan stages")
   }
 
   test("graph_scc scans the transition backbone's lineitem once per call") {

@@ -7,9 +7,10 @@ Usage: python3 tools/trace_calls.py <out-dir> [<out-dir> ...]
 by `python3 perfbench/run.py --trace 1`. For every traced call in its
 `trace.jsonl` this prints the call's wall time, the wall time of its
 registry call (`ops.build`), the driver gap (call time with none of the
-call's jobs running), the shuffle bytes its stages read, and its jobs
-grouped by call site: the job count and the summed job wall time per site. A job's call site is the name of its
-last stage ("runJob at GraphAlgebra.scala:402"), which is where the program
+call's jobs running), the shuffle bytes its stages read and its executor
+GC time, and its jobs grouped by call site: per site the job count, the
+summed job wall time, the summed executor GC time and the shuffle bytes
+the sites' stages wrote. A job's call site is the name of its last stage ("runJob at GraphAlgebra.scala:402"), which is where the program
 submitted it. Jobs that Spark submitted from a pool thread (adaptive query
 stages, broadcasts) or whose last stage was skipped show the file-level
 site perfbench attributed them to, marked "(pool thread)". The script only
@@ -64,10 +65,12 @@ def report(out_dir):
     with open(os.path.join(out_dir, "trace.jsonl")) as f:
         trace = [json.loads(line) for line in f if line.strip()]
     print(f"== {out_dir}")
-    shuffle_read = collections.Counter()
+    shuffle_read, shuffle_write, gc_ms = (collections.Counter() for _ in range(3))
     for e in trace:
         if e["type"] == "stage" and e["start_ms"] >= 0:
             shuffle_read[e["job_id"]] += e["shuffle_read_bytes"]
+            shuffle_write[e["job_id"]] += e["shuffle_write_bytes"]
+            gc_ms[e["job_id"]] += e["gc_ms"]
     for key, q, build, jobs in calls(trace):
         wall = q["end_ms"] - q["start_ms"]
         build_ms = build["end_ms"] - build["start_ms"] if build else float("nan")
@@ -75,14 +78,19 @@ def report(out_dir):
                         q["start_ms"], q["end_ms"])
         print(f"{key}: call {wall:.0f} ms, build {build_ms:.0f} ms, "
               f"{len(jobs)} jobs, driver gap {wall - busy:.0f} ms, shuffle read "
-              f"{sum(shuffle_read[j['job_id']] for _, j in jobs) / 1e6:.1f} MB"
+              f"{sum(shuffle_read[j['job_id']] for _, j in jobs) / 1e6:.1f} MB, "
+              f"gc {sum(gc_ms[j['job_id']] for _, j in jobs):.0f} ms"
               f"{'' if q.get('ok', True) else ' (FAILED)'}")
-        by_site = collections.defaultdict(lambda: [0, 0.0])
+        by_site = collections.defaultdict(lambda: [0, 0.0, 0, 0])
         for site, j in jobs:
-            by_site[site][0] += 1
-            by_site[site][1] += j["end_ms"] - j["start_ms"]
-        for site, (n, ms) in sorted(by_site.items(), key=lambda kv: -kv[1][1]):
-            print(f"    {n:4d} jobs {ms:8.0f} ms  {site}")
+            acc = by_site[site]
+            acc[0] += 1
+            acc[1] += j["end_ms"] - j["start_ms"]
+            acc[2] += gc_ms[j["job_id"]]
+            acc[3] += shuffle_write[j["job_id"]]
+        for site, (n, ms, gc, sw) in sorted(by_site.items(), key=lambda kv: -kv[1][1]):
+            print(f"    {n:4d} jobs {ms:8.0f} ms  gc {gc:6.0f} ms  "
+                  f"shuffle write {sw / 1e6:6.1f} MB  {site}")
 
 
 def main(argv):
