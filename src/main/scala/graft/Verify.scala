@@ -12,9 +12,8 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
   *    diagnosable key-by-key instead of all-or-nothing.
   *  - Dumps run on a small THREAD POOL (default 8, SPARK_GRAFT_VERIFY_THREADS
   *    to override). Each worker gets its own `spark.newSession()` — shared
-  *    SparkContext, isolated SQLConf — because a few ops toggle session conf
-  *    (Ckpt's AQE gate, streaming shuffle-partition scoping) and must not
-  *    clobber a sibling's planning. Results are unaffected by concurrency:
+  *    SparkContext, isolated SQLConf — so no worker's session state can
+  *    reach a sibling's planning. Results are unaffected by concurrency:
   *    every declared op is deterministic under the hash-match discipline
   *    (order-independent accumulation + total-order final sort).
   */

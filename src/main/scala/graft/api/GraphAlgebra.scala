@@ -99,20 +99,14 @@ object GraphAlgebra {
     seen.select(col("dst").as("part"), col("hop"))
   }
 
-  /** Triangle count of a canonical pair graph, node-iterator formulation
-    * (sum of |N⁺(a) ∩ N⁺(b)| over edges, sorted adjacency lists +
-    * codegen'd array_intersect — no Σdeg² wedge shuffle).
+  /** Triangle count of a canonical (a < b) pair graph, with its edge
+    * count: (n_triangles, n_edges). Node-iterator formulation — the sum of
+    * |N⁺(a) ∩ N⁺(b)| over edges ([[orientedTriangles]]), never the Σdeg²
+    * wedge shuffle. The pairs are checkpointed and counted first.
     */
   def triangles(pairs: DataFrame): DataFrame = {
-    val cp = pairs.select(col("a"), col("b"))
-    val adj = cp.groupBy(col("a").as("v"))
-      .agg(sort_array(collect_list(col("b"))).as("nbrs"))
-    val tri = cp
-      .join(adj.select(col("v"), col("nbrs").as("na")), col("a") === col("v"))
-      .join(adj.select(col("v").as("v2"), col("nbrs").as("nb")), col("b") === col("v2"))
-      .select(size(array_intersect(col("na"), col("nb"))).cast("long").as("t"))
-      .agg(coalesce(sum(col("t")), lit(0L)).as("n_triangles"))
-    tri.crossJoin(cp.agg(count(lit(1)).as("n_edges")))
+    val (e, nE) = cpCounted(pairs.select(col("a"), col("b")))
+    orientedTriangles(e, nE).select(col("n_triangles"), lit(nE).as("n_edges"))
   }
 
   /** Top-k item pairs by shared contexts (related-items query). */
@@ -170,22 +164,66 @@ object GraphAlgebra {
   def hintedFrame(df: DataFrame, rows: Long): DataFrame =
     hinted(df, rows, BroadcastMaxRows)
 
-  /** Broadcast gate for ADJACENCY-ARRAY frames (one row per vertex, a
-    * sorted neighbor array per row — the triangle/support family's shape).
-    * The payload is Σdeg = the DIRECTED edge count, not the row count, so
-    * the thin-frame `BroadcastMaxRows` gate is the wrong measure: 1e7
-    * directed edges ≈ 160 MB of longs — comfortably a broadcast — while
-    * the same frame at a 100 TB corpus is terabytes and must stay on the
-    * shuffle path. Joining the edge list against a BROADCAST adjacency
-    * keeps the per-edge array attach map-side; the ungated alternative is
-    * a sort-merge join that shuffles and SORTS kilobyte-array rows per
-    * edge (measured 2-3× the whole query at sf0.1). Callers pass the
-    * directed-edge count their pair frame already materialized.
+  /** (a, b) pairs with each row also mirrored as (b, a): one `explode`, so
+    * the plan below runs once (a self-union would run it twice).
     */
-  val AdjacencyBroadcastMaxEdges: Long = 10000000L
+  private[graft] def mirrored(pairs: DataFrame): DataFrame =
+    pairs.select(explode(array(struct(col("a"), col("b")),
+        struct(col("b").as("a"), col("a").as("b")))).as("e"))
+      .select(col("e.a"), col("e.b"))
 
-  def hintedAdj(adj: DataFrame, directedEdges: Long): DataFrame =
-    if (directedEdges <= AdjacencyBroadcastMaxEdges) broadcast(adj) else adj
+  /** Broadcast gate of [[sharedNeighbors]]' adjacency-array frame (one row
+    * per vertex, a sorted neighbour array per row). The payload is Σdeg =
+    * the `nbrs` row count, not the vertex count, so the thin-frame
+    * `BroadcastMaxRows` gate is the wrong measure: 1e7 neighbour rows ≈
+    * 160 MB of longs — comfortably a broadcast — while the same frame at a
+    * 100 TB corpus is terabytes and must stay on the shuffle path. A
+    * BROADCAST adjacency keeps the per-pair array attach map-side; the
+    * ungated alternative is a sort-merge join that shuffles and SORTS
+    * kilobyte-array rows per pair (measured 2-3× the whole query at sf0.1).
+    */
+  private val AdjacencyBroadcastMaxEdges: Long = 10000000L
+
+  /** The one shared-neighbour count behind the triangle and edge-support
+    * family: for every (a, b) row of `pairs`, `common` = |N(a) ∩ N(b)|,
+    * `da` = |N(a)| and `db` = |N(b)|, where N(v) is the b's of the
+    * (a = v, b) rows of `nbrs` (`nbrRows` of them — a count the caller's
+    * checkpoint already took). Each vertex's sorted neighbour array is
+    * built once and checkpointed (both endpoint joins read it), then
+    * attached to both endpoints broadcast-gated on `nbrRows`, and a
+    * codegen'd `array_intersect` counts the overlap — work ∝ Σdeg per
+    * pair, never the Σdeg² wedge shuffle. A pair with an endpoint that has
+    * no `nbrs` row is dropped. `nbrs = pairs` over oriented (a < b) edges
+    * gives the triangles through each edge ([[orientedTriangles]]);
+    * `nbrs = mirrored(pairs)` gives full-neighbourhood supports
+    * ([[edgeSupports]]).
+    */
+  private[graft] def sharedNeighbors(pairs: DataFrame, nbrs: DataFrame,
+                                     nbrRows: Long): DataFrame = {
+    val adj = nbrs.groupBy(col("a").as("v"))
+      .agg(sort_array(collect_list(col("b"))).as("ns")).cp()
+    def attach(end: String) = hinted(adj.select(col("v").as(end), col("ns").as(s"n$end")),
+      nbrRows, AdjacencyBroadcastMaxEdges)
+    pairs.select(col("a"), col("b")).join(attach("a"), "a").join(attach("b"), "b")
+      .select(col("a"), col("b"),
+        size(array_intersect(col("na"), col("nb"))).cast("long").as("common"),
+        size(col("na")).cast("long").as("da"), size(col("nb")).cast("long").as("db"))
+  }
+
+  /** Triangle count (one row, `n_triangles`) of a checkpointed oriented
+    * (a < b) pair frame of `nE` rows: each triangle a < b < c is counted
+    * once, at its edge (a, b), as c ∈ N⁺(a) ∩ N⁺(b).
+    */
+  private[graft] def orientedTriangles(e: DataFrame, nE: Long): DataFrame =
+    sharedNeighbors(e, e, nE)
+      .agg(coalesce(sum(col("common")), lit(0L)).as("n_triangles"))
+
+  /** [[sharedNeighbors]] over full neighbourhoods: every edge of a
+    * checkpointed canonical pair frame of `nE` rows with its triangle
+    * support (`common`) and endpoint degrees (`da`, `db`).
+    */
+  private[graft] def edgeSupports(e: DataFrame, nE: Long): DataFrame =
+    sharedNeighbors(e, mirrored(e), 2L * nE)
 
   /** Public k-core over a caller-supplied canonical (a < b) pair list:
     * fixed-round peel (see `graph_kcore`'s docstring for why fixed rounds
@@ -205,34 +243,22 @@ object GraphAlgebra {
   /** k-TRUSS peel over a caller (a, b) pair list (canonical a < b, one row
     * per undirected edge): `rounds` rounds of "keep edges with triangle
     * support ≥ k−2 over the current survivor set", then a final support
-    * report (support-0 survivors kept). Support is adjacency arrays +
-    * `array_intersect` — work ∝ Σdeg per edge, never the Σdeg² wedge
-    * shuffle. Output (a, b, support). Registry op `graph_ktruss` is this
+    * report (support-0 survivors kept). Support is [[edgeSupports]] —
+    * work ∝ Σdeg per edge, never the Σdeg² wedge shuffle. Output
+    * (a, b, support). Registry op `graph_ktruss` is this
     * at (k = 12, rounds = 3) on the co-purchase graph, oracle-checked
     * against unrolled wedge-join CTE rounds.
     */
   def ktruss(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 3, s"ktruss needs k >= 3 (got $k)")
     require(rounds >= 1, s"ktruss needs rounds >= 1 (got $rounds)")
-    // the adjacency-array attach is broadcast-gated on the round's
-    // directed-edge count ([[hintedAdj]] — ungated both joins went
-    // sort-merge over kilobyte-array rows), and the adjacency is
-    // checkpointed because the two broadcast builds both read it; each
-    // round's survivor count comes back from its own checkpoint job
-    def supports(e: DataFrame, nDir: Long): DataFrame = {
-      val both = e.unionAll(e.select(col("b").as("a"), col("a").as("b")))
-      val adj = both.groupBy(col("a").as("v"))
-        .agg(sort_array(collect_list(col("b"))).as("ns")).cp()
-      e.join(hintedAdj(adj.select(col("v").as("a"), col("ns").as("na")), nDir), "a")
-        .join(hintedAdj(adj.select(col("v").as("b"), col("ns").as("nb")), nDir), "b")
-        .select(col("a"), col("b"),
-          size(array_intersect(col("na"), col("nb"))).cast("long").as("sup"))
+    // each round's survivor count comes back from its own checkpoint job
+    // and gates the next round's adjacency broadcast
+    val (e, nE) = (1 to rounds).foldLeft(cpCounted(pairs.select(col("a"), col("b")))) {
+      case ((e, nE), _) => cpCounted(
+        edgeSupports(e, nE).filter(col("common") >= k - 2).select(col("a"), col("b")))
     }
-    val (e, nE) = (1 to rounds).foldLeft(Ckpt.cpCounted(pairs.select(col("a"), col("b")))) {
-      case ((e, nE), _) => Ckpt.cpCounted(
-        supports(e, 2L * nE).filter(col("sup") >= k - 2).select(col("a"), col("b")))
-    }
-    supports(e, 2L * nE).select(col("a"), col("b"), col("sup").as("support"))
+    edgeSupports(e, nE).select(col("a"), col("b"), col("common").as("support"))
   }
 
   /** EXACT PageRank / personalized PageRank by integer power iteration —

@@ -236,11 +236,10 @@ object TextPipeline {
         .join(sig.select(col("doc_id")), Seq("doc_id"), "left_anti")
         .unionByName(sig)
     } else sig).cp()
-    val conf = s.conf
-    val prev = conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try merged.write.mode("overwrite").partitionBy("bucket").parquet(path)
-    finally conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+    // dynamic overwrite as a writer option: the caller's session conf is
+    // never touched, so a concurrent query in that session is unaffected
+    merged.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("bucket").parquet(path)
   }
 
   /** ONLINE half: serve near-dup pairs FROM the signature artifact.

@@ -15,9 +15,11 @@ import graft.graph.GraphBridge
   * part–part co-purchase projection (parts sharing an order).
   *
   * Everything hop-bounded is DataFrame joins (shuffles on the join key,
-  * broadcast for dims — survives 100 TB); only the iterative fixpoint
-  * algorithms (CC, SSSP, PageRank) cross into GraphX via
-  * [[graft.graph.GraphBridge]].
+  * broadcast for dims — survives 100 TB). The iterative fixpoints run on
+  * [[graft.api.GraphAlgebra]]'s CSR kernels (power iteration, min-label
+  * and frontier supersteps); only `graph_cc` and `graph_sssp` cross into
+  * GraphX via [[graft.graph.GraphBridge]], as the reference twins the
+  * DataFrame ops are checked against.
   */
 object GraphOps {
 
@@ -63,20 +65,12 @@ object GraphOps {
         explode(expr("slice(ps, pos + 2, size(ps))")).as("b"))
   }
 
-  /** (a, b) pairs with each row also mirrored as (b, a): one `explode`, so
-    * the plan below runs once (a self-union would run it twice).
-    */
-  private def mirrored(pairs: DataFrame): DataFrame =
-    pairs.select(explode(array(struct(col("a"), col("b")),
-        struct(col("b").as("a"), col("a").as("b")))).as("e"))
-      .select(col("e.a"), col("e.b"))
-
   /** Undirected view of the co-purchase graph (both directions, one row
     * per distinct directed pair), for the consumers that need distinct
     * pairs: the Brandes/σ loops, GraphX and the degree ops.
     */
   private[graft] def copurchaseBoth(s: SparkSession, dir: String): DataFrame =
-    mirrored(copurchase(s, dir))
+    graft.api.GraphAlgebra.mirrored(copurchase(s, dir))
 
   /** The co-purchase graph as the CSR kernel reads it: [[orderPairs]]
     * mirrored with no (a, b) aggregate, so a pair shared by k orders is k
@@ -87,7 +81,7 @@ object GraphOps {
     * the kernel's dst blocks.
     */
   private[graft] def copurchaseFlow(s: SparkSession, dir: String): DataFrame =
-    mirrored(orderPairs(s, dir))
+    graft.api.GraphAlgebra.mirrored(orderPairs(s, dir))
 
   private def partVertices(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
@@ -166,11 +160,10 @@ object GraphOps {
     * ≥ k−2 = 10, where support = |common neighbors| over the CURRENT
     * survivor set — the cohesive-subgraph mining primitive one notch
     * stronger than k-core (every surviving edge sits in ≥ 10 surviving
-    * triangles). Support is computed the [[graphTriangles]] way — adjacency
-    * arrays + `array_intersect`, work ∝ Σdeg per edge — never the Σdeg²
-    * wedge shuffle (the oracle's wedge join is the semantic spec, not the
-    * plan). The round count is fixed so the whole computation is a finite
-    * dataflow, oracle-checked as unrolled CTE rounds (the
+    * triangles). Support is [[graft.api.GraphAlgebra.edgeSupports]] —
+    * work ∝ Σdeg per edge, never the Σdeg² wedge shuffle (the oracle's
+    * wedge join is the semantic spec, not the plan). The round count is
+    * fixed so the whole computation is a finite dataflow, oracle-checked as unrolled CTE rounds (the
     * [[graft.oracle.GraphOracle]] kcore pattern); each round's survivor
     * frame is lineage-truncated.
     */
@@ -183,40 +176,15 @@ object GraphOps {
 
   /** Triangle count on the co-purchase graph, node-iterator formulation:
     * with edges oriented a<b, each triangle a<b<c is |N⁺(a) ∩ N⁺(b)| summed
-    * over edges (a,b). Two equi-joins attach the sorted out-adjacency lists
-    * and a codegen'd array_intersect does the per-edge intersection — no
-    * wedge materialization (the naive 3-way self-join shuffles Σdeg² rows:
-    * 36M at sf0.1, 60s; this runs in ~2s and scales as Σ|N⁺| per edge).
-    * Cross-checked against GraphX TriangleCount in GraphSpec.
+    * over edges (a,b) — [[graft.api.GraphAlgebra.triangles]], whose
+    * shared-neighbour kernel attaches the sorted out-adjacency arrays and
+    * intersects them per edge. No wedge materialization (the naive 3-way
+    * self-join shuffles Σdeg² rows: 36M at sf0.1, 60s; this runs in ~2s
+    * and scales as Σ|N⁺| per edge). Cross-checked against GraphX
+    * TriangleCount in GraphSpec.
     */
-  /** Shared triangle-count core: Σ_e |N⁺(a)∩N⁺(b)| over an (a < b)
-    * oriented pair frame via the sorted-adjacency + array_intersect shape
-    * — with the array attach BROADCAST-gated on the adjacency payload
-    * (`nDirEdges` = Σ|N⁺| — [[graft.api.GraphAlgebra.hintedAdj]]): ungated
-    * the two joins went sort-merge and shuffled+sorted the kilobyte
-    * neighbor arrays once per edge. `e` must be checkpointed (three
-    * consumers); the adjacency is checkpointed here because BOTH broadcast
-    * builds read it.
-    */
-  private def triangleSum(e: DataFrame, nDirEdges: Long): DataFrame = {
-    val s = e.sparkSession
-    import s.implicits._
-    val adj = e.groupBy($"a".as("v"))
-      .agg(sort_array(collect_list($"b")).as("nbrs")).cp()
-    def hA(df: DataFrame) = graft.api.GraphAlgebra.hintedAdj(df, nDirEdges)
-    e.join(hA(adj.select($"v", $"nbrs".as("na"))), $"a" === $"v")
-      .join(hA(adj.select($"v".as("v2"), $"nbrs".as("nb"))), $"b" === $"v2")
-      .select(size(array_intersect($"na", $"nb")).cast("long").as("t"))
-      .agg(coalesce(sum($"t"), lit(0L)).as("n_tri"))
-  }
-
-  val graphTriangles: Q = (s, dir) => {
-    import s.implicits._
-    val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
-    val tri = triangleSum(cp, nE)
-      .select($"n_tri".as("n_triangles"))
-    tri.crossJoin(cp.agg(count(lit(1)).as("n_edges")))
-  }
+  val graphTriangles: Q = (s, dir) =>
+    graft.api.GraphAlgebra.triangles(copurchase(s, dir))
 
   /** Related-nodes query: top-20 part pairs by number of common customers.
     * Self-join on the shared customer then pair-agg; top-k via
@@ -729,7 +697,9 @@ object GraphOps {
       .agg(count(lit(1)).as("sc")).filter($"sc" >= 2)
       .select($"p1", $"p2")
     // exact verification on candidates only: intersect the two parts'
-    // sorted customer arrays in place (work ∝ |cands|·avg-degree, not deg²)
+    // sorted customer arrays in place (work ∝ |cands|·avg-degree, not deg²).
+    // Not graft.api.GraphAlgebra.sharedNeighbors: the kernel's checkpoint of
+    // the part arrays costs this plan one more job than its ungated joins
     val parts = adj.groupBy($"dst".as("p"))
       .agg(sort_array(collect_list($"src")).as("cs"))
     cands
@@ -790,8 +760,9 @@ object GraphOps {
 
   /** Global clustering coefficient: 3·triangles / wedges, with wedges =
     * Σ d(d−1)/2 over distinct-partner degrees — the closure metric that
-    * pairs with [[graphTriangles]]' node-iterator count (same
-    * array-intersect shape, no wedge materialization). pround4 on the
+    * pairs with [[graphTriangles]]' node-iterator count
+    * ([[graft.api.GraphAlgebra.orientedTriangles]], no wedge
+    * materialization). pround4 on the
     * coefficient: a small-integer ratio can land on a round(…,4) half
     * boundary.
     */
@@ -799,8 +770,7 @@ object GraphOps {
     import s.implicits._
     // tri + deg
     val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
-    val tri = triangleSum(cp, nE)
-      .select($"n_tri".as("n_triangles"))
+    val tri = graft.api.GraphAlgebra.orientedTriangles(cp, nE)
     val wedges = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
       .groupBy($"a").agg(count(lit(1)).as("d"))
       // integral div, not double `/`: exact past 2^53 where the double
@@ -1125,32 +1095,19 @@ object GraphOps {
   /** Per-vertex LOCAL clustering coefficient, top-20 — the node-level
     * refinement of [[graphClusteringCoeff]]'s one global number ("whose
     * neighborhood is a clique"). Triangles at v come from the edge
-    * supports ([[graphTriangles]] adjacency-array machinery — work ∝ Σdeg
-    * per edge): each triangle at v contributes 2 to the support sum of
-    * v's incident edges, so cc(v) = Σ_{e∋v} sup(e) / (deg(v)·(deg(v)−1))
+    * supports ([[graft.api.GraphAlgebra.edgeSupports]] — work ∝ Σdeg per
+    * edge): each triangle at v contributes 2 to the support sum of v's
+    * incident edges, so cc(v) = Σ_{e∋v} sup(e) / (deg(v)·(deg(v)−1))
     * exactly. The ratio is integer-ppm division, so the top-20 ordering
     * cannot drift.
     */
   val graphLocalCc: Q = (s, dir) => {
     import s.implicits._
     val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
-    val nDir = 2L * nE // directed edges = the adjacency payload
-    val both = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
-    val adj = both.groupBy($"a".as("v"))
-      .agg(sort_array(collect_list($"b")).as("ns"), count(lit(1)).as("d"))
-      .cp() // support join (twice) + degree attach share it
-    // broadcast-gated array attach (hintedAdj): ungated, both joins went
-    // sort-merge and shuffled+sorted a kilobyte neighbor array per edge
-    def hA(df: DataFrame) = graft.api.GraphAlgebra.hintedAdj(df, nDir)
-    val sup = cp
-      .join(hA(adj.select($"v".as("a"), $"ns".as("na"))), "a")
-      .join(hA(adj.select($"v".as("b"), $"ns".as("nb"))), "b")
-      .select($"a", $"b",
-        size(array_intersect($"na", $"nb")).cast("long").as("sup"))
-    val perV = sup.select($"a".as("v"), $"sup")
-      .unionAll(sup.select($"b".as("v"), $"sup"))
-      .groupBy($"v").agg(sum($"sup").as("s2")) // = 2 × triangles at v
-    perV.join(adj.select($"v", $"d"), "v")
+    val sup = graft.api.GraphAlgebra.edgeSupports(cp, nE)
+    sup.select($"a".as("v"), $"da".as("d"), $"common")
+      .unionAll(sup.select($"b".as("v"), $"db".as("d"), $"common"))
+      .groupBy($"v", $"d").agg(sum($"common").as("s2")) // = 2 × triangles at v
       .filter($"d" >= 2)
       .withColumn("cc_ppm", expr("s2 * 1000000L div (d * (d - 1))"))
       .select($"v".as("part"), $"d".as("degree"),
@@ -1163,27 +1120,16 @@ object GraphOps {
   /** Edge embeddedness — top-20 co-purchase edges by neighborhood
     * Jaccard (|N(a)∩N(b)| / |N(a)∪N(b)\{a,b}|): the tie-strength metric
     * (Granovetter — embedded edges are strong ties, embeddedness-0 edges
-    * are the local bridges [[graphLocalBridges]] reports). Support rides
-    * the [[graphTriangles]] adjacency-array + `array_intersect` shape
-    * (work ∝ Σdeg per edge, never the Σdeg² wedge shuffle); the Jaccard
-    * is quantized by exact integer division (ppm) so ordering can't
-    * drift; top-20 via TakeOrderedAndProject.
+    * are the local bridges [[graphLocalBridges]] reports). Support and
+    * degrees come from [[graft.api.GraphAlgebra.edgeSupports]] (work ∝
+    * Σdeg per edge, never the Σdeg² wedge shuffle); the Jaccard is
+    * quantized by exact integer division (ppm) so ordering can't drift;
+    * top-20 via TakeOrderedAndProject.
     */
   val graphEdgeEmbeddedness: Q = (s, dir) => {
     import s.implicits._
     val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
-    val nDir = 2L * nE
-    val both = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
-    val adj = both.groupBy($"a".as("v"))
-      .agg(sort_array(collect_list($"b")).as("ns"),
-        count(lit(1)).as("d"))
-      .cp() // both broadcast builds read it
-    def hA(df: DataFrame) = graft.api.GraphAlgebra.hintedAdj(df, nDir)
-    cp.join(hA(adj.select($"v".as("a"), $"ns".as("na"), $"d".as("da"))), "a")
-      .join(hA(adj.select($"v".as("b"), $"ns".as("nb"), $"d".as("db"))), "b")
-      .select($"a", $"b",
-        size(array_intersect($"na", $"nb")).cast("long").as("common"),
-        $"da", $"db")
+    graft.api.GraphAlgebra.edgeSupports(cp, nE)
       .withColumn("denom", $"da" + $"db" - lit(2L) - $"common")
       .withColumn("jac_ppm",
         when($"denom" > 0, expr("common * 1000000L div denom"))
@@ -1196,9 +1142,6 @@ object GraphOps {
   private[graft] def kcoreFixed(s: SparkSession, dir: String, k: Int, rounds: Int): DataFrame =
     kcorePeel(copurchase(s, dir).select(col("a"), col("b")), k, rounds)
 
-  /** The peel core over any canonical (a < b) pair list — shared by the
-    * registry op and the randomized-fixture cross-check in GraphSpec.
-    */
   /** The peel ROUNDS of [[kcorePeel]], factored out so callers holding a
     * shared keyed adjacency can chain levels without rebuilding it (r15 —
     * graph_core_number's 4 nested peels shared nothing): starting from
@@ -1249,6 +1192,9 @@ object GraphOps {
     (surv, nSurv)
   }
 
+  /** The peel core over any canonical (a < b) pair list — shared by the
+    * registry op and the randomized-fixture cross-check in GraphSpec.
+    */
   private[graft] def kcorePeel(pairs: DataFrame, k: Int, rounds: Int): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
@@ -1857,7 +1803,7 @@ object GraphOps {
 
   /** Global transitivity (closed-wedge ratio) = 3·triangles / wedges —
     * the one-number cousin of the per-node clustering coefficient.
-    * Triangles via the graph_triangles adjacency-intersect shape; wedges
+    * Triangles via [[graft.api.GraphAlgebra.orientedTriangles]]; wedges
     * = Σ deg(deg−1)/2 in exact integers (the sum of deg(deg−1) is always
     * even, so the halving is exact); the ratio is the only double,
     * floor-quantized.
@@ -1865,8 +1811,7 @@ object GraphOps {
   val graphTransitivity: Q = (s, dir) => {
     import s.implicits._
     val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
-    val tri = triangleSum(cp, nE)
-      .select($"n_tri".as("n_triangles"))
+    val tri = graft.api.GraphAlgebra.orientedTriangles(cp, nE)
     val wed = cp.select($"a".as("v")).unionAll(cp.select($"b".as("v")))
       .groupBy($"v").agg(count(lit(1)).as("deg"))
       .agg((sum($"deg" * ($"deg" - 1)) / 2).cast("long").as("n_wedges"))
@@ -1893,13 +1838,12 @@ object GraphOps {
     val (sampled, nS) = graft.api.Ckpt.cpCounted(cp.filter(expr(
       "cast(conv(substring(md5(concat(cast(a as string), '_'," +
         " cast(b as string))), 1, 4), 16, 10) as bigint) % 4 = 0")))
-    val exact = triangleSum(cp, nE).select($"n_tri".as("n_exact"))
-    val est = triangleSum(sampled, nS)
-      .select($"n_tri".as("n_tri_sampled"))
-    cp.agg(count(lit(1)).as("n_edges"))
-      .crossJoin(sampled.agg(count(lit(1)).as("n_edges_sampled")))
-      .crossJoin(est).crossJoin(exact)
-      .select($"n_edges", $"n_edges_sampled", $"n_tri_sampled",
+    val exact = graft.api.GraphAlgebra.orientedTriangles(cp, nE)
+      .select($"n_triangles".as("n_exact"))
+    val est = graft.api.GraphAlgebra.orientedTriangles(sampled, nS)
+      .select($"n_triangles".as("n_tri_sampled"))
+    est.crossJoin(exact)
+      .select(lit(nE).as("n_edges"), lit(nS).as("n_edges_sampled"), $"n_tri_sampled",
         ($"n_tri_sampled" * 64).as("estimate"), $"n_exact",
         // triangle-free graph → NULL rel_err, matching the oracle's CASE
         // (ANSI Spark would otherwise raise DIVIDE_BY_ZERO)
@@ -2119,27 +2063,18 @@ object GraphOps {
   /** Local bridges (Granovetter's weak-tie structure): co-purchase edges
     * whose endpoints share NO common neighbor — removing one lengthens
     * the a↔b path to > 2, so these are the graph's information
-    * bottlenecks. Support per edge comes from the same sorted-adjacency
-    * `array_intersect` shape as [[graphClusteringCoeff]] (adjacency
-    * arrays bounded by max degree, no Σdeg² wedge materialization) but
-    * over FULL neighborhoods (both directions — canonical-orientation
-    * adjacency would undercount common neighbors).
+    * bottlenecks. Support per edge comes from
+    * [[graft.api.GraphAlgebra.edgeSupports]] (adjacency arrays bounded by
+    * max degree, no Σdeg² wedge materialization) over FULL neighborhoods
+    * (both directions — canonical-orientation adjacency would undercount
+    * common neighbors).
     */
   val graphLocalBridges: Q = (s, dir) => {
     import s.implicits._
-    // adj + edge scan
     val (cp, nE) = graft.api.Ckpt.cpCounted(copurchase(s, dir).select($"a", $"b"))
-    val nDir = 2L * nE
-    val both = cp.unionAll(cp.select($"b".as("a"), $"a".as("b")))
-    val adj = both.groupBy($"a".as("v"))
-      .agg(sort_array(collect_list($"b")).as("nbrs"))
-      .cp() // both broadcast builds read it
-    def hA(df: DataFrame) = graft.api.GraphAlgebra.hintedAdj(df, nDir)
-    cp.join(hA(adj.select($"v", $"nbrs".as("na"))), $"a" === $"v")
-      .join(hA(adj.select($"v".as("v2"), $"nbrs".as("nb"))), $"b" === $"v2")
-      .select(size(array_intersect($"na", $"nb")).cast("long").as("sup"))
+    graft.api.GraphAlgebra.edgeSupports(cp, nE)
       .agg(count(lit(1)).as("n_edges"),
-        sum(when($"sup" === 0, 1L).otherwise(0L)).as("n_local_bridges"))
+        sum(when($"common" === 0, 1L).otherwise(0L)).as("n_local_bridges"))
       .select($"n_edges", $"n_local_bridges",
         LlmOps.pround4($"n_local_bridges".cast("double") /
           $"n_edges".cast("double")).as("bridge_share"))
@@ -2421,7 +2356,7 @@ object GraphOps {
     // ≤512-cell transition sketch, so the full edge set is ≤ 512² ≈ 262k
     // possible rows (≤ ~4 MB framed) at ANY data scale — the bound is the
     // sketch's cell cap, not a data-volume estimate (ADVICE r15; every
-    // data-sized adjacency goes through hinted()/hintedAdj instead)
+    // data-sized adjacency goes through a broadcast gate instead)
     val fflE = e.select($"src".as("za"), $"dst".as("zc"))
     val cycE = e.select($"src".as("cs"), $"dst".as("cd"))
     val closes = e.as("x").join(e.as("y"),

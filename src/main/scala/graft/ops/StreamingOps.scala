@@ -730,29 +730,28 @@ object StreamingOps {
     // batch are pure task/file overhead at any scale
     e.filter(unix_millis($"ts") >= cut).coalesce(4).write.parquet(inDir)
 
-    val stream = s.readStream.schema(e.schema).parquet(inDir)
+    // the windowed agg's STATE STORE count = shuffle partitions at query
+    // start; at the bench's 32 that is 32 state stores for a handful of
+    // window groups — so the stream runs on its own session (shared
+    // SparkContext, own SQLConf) with 4, and the caller's conf is never
+    // written; its memory table is that session's temp view
+    val ss = s.newSession()
+    ss.conf.set("spark.sql.shuffle.partitions", "4")
+    val stream = ss.readStream.schema(e.schema).parquet(inDir)
       .withWatermark("ts", "10 minutes")
       .groupBy(window($"ts", "5 minutes").as("w"))
       .agg(count(lit(1)).as("n"), Relational.msum($"value").as("sum_value"))
       .select(unix_millis($"w.start").as("ws_ms"), $"n", $"sum_value")
     val name = s"late_${System.nanoTime()}"
-    // the windowed agg's STATE STORE count = shuffle partitions at query
-    // start; at the bench's 32 that is 32 state stores for a handful of
-    // window groups — scope it down for this query, restore after (the
-    // streaming runtime pins the value from its first micro-batch)
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    val query =
-      try stream.writeStream.format("memory").queryName(name)
-        .outputMode(OutputMode.Update).start()
-      finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val query = stream.writeStream.format("memory").queryName(name)
+      .outputMode(OutputMode.Update).start()
     try {
       query.processAllAvailable() // batch 1: watermark -> maxTs - 10 min
       e.filter(unix_millis($"ts") < cut - 3600000L).coalesce(4)
         .write.mode("append").parquet(inDir)
       query.processAllAvailable() // batch 2: everything late, dropped
     } finally query.stop()
-    s.table(name).orderBy($"ws_ms")
+    ss.table(name).orderBy($"ws_ms")
   }
 
   // ===== readStream builders (library surface; driven by StreamingSpec) =====
@@ -783,8 +782,8 @@ object StreamingOps {
     val q = tumblingStream(s, dir).writeStream
       .outputMode(OutputMode.Update)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], _: Long) =>
-        batch.sparkSession.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        batch.write.mode("overwrite").partitionBy("ws_ms").parquet(out)
+        batch.write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+          .partitionBy("ws_ms").parquet(out)
       }
       .start()
     try q.processAllAvailable() finally q.stop()

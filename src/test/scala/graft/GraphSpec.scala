@@ -297,6 +297,145 @@ class GraphSpec extends SparkSpec {
     }
   }
 
+  /** A random canonical (a < b) edge list over vertices 0 until n, and the
+    * vertex count: the 4 graphs of the shared-neighbour and k-truss tests.
+    */
+  private def randomPairs(seed: Long): (Seq[(Long, Long)], Int) = {
+    val rnd = new scala.util.Random(seed)
+    val n = 12 + rnd.nextInt(5)
+    val pairs = for {
+      a <- 0 until n; b <- (a + 1) until n if rnd.nextDouble() < 0.45
+    } yield (a.toLong, b.toLong)
+    (pairs, n)
+  }
+
+  private val kernelSeeds = Seq(3L, 17L, 99L, 2024L)
+
+  test("sharedNeighbors equals a plain-Scala set intersection on random graphs (4 seeds)") {
+    import spark.implicits._
+    import api.GraphAlgebra.{mirrored, sharedNeighbors}
+    for (seed <- kernelSeeds) {
+      val (pairs, n) = randomPairs(seed)
+      val rnd = new scala.util.Random(seed + 1)
+      // queried pairs: every edge, plus random pairs over n + 3 ids, so
+      // some endpoints are isolated (absent from every nbrs frame) and
+      // some pairs are not edges
+      val queried = (pairs ++ Seq.fill(40)(
+        (rnd.nextInt(n + 3).toLong, rnd.nextInt(n + 3).toLong))).distinct
+      val oriented = pairs.groupBy(_._1).map { case (v, xs) => v -> xs.map(_._2).toSet }
+      val full = (pairs ++ pairs.map(_.swap)).groupBy(_._1)
+        .map { case (v, xs) => v -> xs.map(_._2).toSet }
+      val e = pairs.toDF("a", "b")
+      for ((name, nbrs, nbrMap) <- Seq(
+          ("oriented", e, oriented), ("full", mirrored(e), full))) {
+        val expect = queried.collect {
+          case (a, b) if nbrMap.contains(a) && nbrMap.contains(b) =>
+            (a, b, (nbrMap(a) & nbrMap(b)).size.toLong,
+              nbrMap(a).size.toLong, nbrMap(b).size.toLong)
+        }.toSet
+        assert(expect.exists(_._3 > 0), s"seed=$seed $name: no shared neighbour at all")
+        assert(expect.size < queried.size, s"seed=$seed $name: no pair was dropped")
+        val nbrRows = nbrMap.values.map(_.size.toLong).sum
+        // the true row count broadcasts the arrays; a count above the
+        // gate keeps both attaches on the shuffle path
+        for (rows <- Seq(nbrRows, Long.MaxValue)) {
+          val got = sharedNeighbors(queried.toDF("a", "b"), nbrs, rows).collect()
+            .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+          assert(got.length === expect.size, s"seed=$seed $name rows=$rows")
+          assert(got.toSet === expect, s"seed=$seed $name rows=$rows")
+        }
+      }
+    }
+  }
+
+  test("ktruss equals a plain-Scala peel to the fixpoint on random graphs (k = 3, 4)") {
+    import spark.implicits._
+    val shapes = for (seed <- kernelSeeds; k <- Seq(3, 4)) yield {
+      val (pairs, _) = randomPairs(seed)
+      def supports(es: Set[(Long, Long)]): Map[(Long, Long), Long] = {
+        val nb = es.toSeq.flatMap(e => Seq(e, e.swap)).groupBy(_._1)
+          .map { case (v, xs) => v -> xs.map(_._2).toSet }
+        es.map(e => e -> (nb(e._1) & nb(e._2)).size.toLong).toMap
+      }
+      var alive = pairs.toSet
+      var rounds = 0
+      var changed = true
+      while (changed) {
+        val next = supports(alive).filter(_._2 >= k - 2).keySet
+        changed = next != alive
+        if (changed) rounds += 1
+        alive = next
+      }
+      val expect = supports(alive).map { case ((a, b), s) => (a, b, s) }.toSet
+      // the peel is at its fixpoint after `rounds` rounds, so one more
+      // round changes nothing
+      for (r <- Seq(rounds, rounds + 1).filter(_ >= 1)) {
+        val got = api.GraphAlgebra.ktruss(pairs.toDF("a", "b"), k, r).collect()
+          .map(row => (row.getLong(0), row.getLong(1), row.getLong(2))).toSet
+        assert(got === expect, s"seed=$seed k=$k rounds=$r")
+      }
+      (rounds, expect.size)
+    }
+    assert(shapes.exists { case (r, n) => r >= 1 && n > 0 },
+      s"vacuous: no graph both peels and keeps edges ($shapes)")
+  }
+
+  /** The co-purchase graph's full neighbour sets, from its raw pairs. */
+  private def copurchaseNbrs(): (Seq[(Long, Long)], Map[Long, Set[Long]]) = {
+    val cp = GraphOps.copurchase(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSeq
+    (cp, (cp ++ cp.map(_.swap)).groupBy(_._1)
+      .map { case (v, xs) => v -> xs.map(_._2).toSet })
+  }
+
+  test("graph_local_cc: degree, triangles and ppm coefficient recompute from the raw adjacency") {
+    val (_, nbrs) = copurchaseNbrs()
+    val all = nbrs.toSeq.collect { case (v, ns) if ns.size >= 2 =>
+      val d = ns.size.toLong
+      val tri = ns.toSeq.map(u => (ns & nbrs(u)).size.toLong).sum / 2
+      (v, d, tri, 2 * tri * 1000000L / (d * (d - 1)))
+    }
+    val expect = all.sortBy(t => (-t._4, t._1)).take(20)
+    val got = q("graph_local_cc").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSeq
+    assert(got.nonEmpty)
+    assert(got.exists(_._3 > 0), "vacuous: no triangle at any reported vertex")
+    assert(got === expect)
+  }
+
+  test("graph_local_bridges: edge count, bridge count and share recompute from the raw adjacency") {
+    val (cp, nbrs) = copurchaseNbrs()
+    val bridges = cp.count { case (a, b) => (nbrs(a) & nbrs(b)).isEmpty }.toLong
+    val r = q("graph_local_bridges").collect()
+    assert(r.length === 1)
+    assert(r.head.getLong(0) === cp.length.toLong)
+    // every co-purchase edge at the suite's scale closes a triangle, so
+    // the bridge count is 0 here; the kernel test covers 0-support pairs
+    assert(r.head.getLong(1) === bridges)
+    assert(r.head.getDouble(2) ===
+      math.floor(bridges.toDouble / cp.length * 10000.0 + 0.5) / 10000.0)
+  }
+
+  test("graph_edge_embeddedness: ppm jaccard recomputes from the raw adjacency") {
+    import spark.implicits._
+    val cp = graft.ops.GraphOps.copurchase(spark, sf).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    val nbrs = (cp ++ cp.map(_.swap)).groupBy(_._1)
+      .map { case (v, xs) => v -> xs.map(_._2).toSet }
+    val got = q("graph_edge_embeddedness").collect()
+    assert(got.length > 0)
+    got.foreach { r =>
+      val (a, b) = (r.getLong(0), r.getLong(1))
+      val common = (nbrs(a) intersect nbrs(b)).size.toLong
+      val (da, db) = (nbrs(a).size.toLong, nbrs(b).size.toLong)
+      assert(r.getLong(2) === common, s"common of $a-$b")
+      assert(r.getLong(3) === da && r.getLong(4) === db, s"deg of $a-$b")
+      val denom = da + db - 2 - common
+      val ppm = if (denom > 0) common * 1000000L / denom else 1000000L
+      assert(r.getLong(5) === ppm, s"ppm of $a-$b")
+    }
+  }
+
   test("graph_hits: fixture scores recompute exactly via JVM integer arithmetic") {
     val S = 1000000000000L
     val rows = q("graph_hits").collect()

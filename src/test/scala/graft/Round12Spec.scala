@@ -100,26 +100,6 @@ class Round12Spec extends SparkSpec {
     assert(trs.count(_._2 > 0) > 0, "vacuous ATR series")
   }
 
-  test("graph_edge_embeddedness: ppm jaccard recomputes from the raw adjacency") {
-    import spark.implicits._
-    val cp = graft.ops.GraphOps.copurchase(spark, sf).collect()
-      .map(r => (r.getLong(0), r.getLong(1)))
-    val nbrs = (cp ++ cp.map(_.swap)).groupBy(_._1)
-      .map { case (v, xs) => v -> xs.map(_._2).toSet }
-    val got = q("graph_edge_embeddedness").collect()
-    assert(got.length > 0)
-    got.foreach { r =>
-      val (a, b) = (r.getLong(0), r.getLong(1))
-      val common = (nbrs(a) intersect nbrs(b)).size.toLong
-      val (da, db) = (nbrs(a).size.toLong, nbrs(b).size.toLong)
-      assert(r.getLong(2) === common, s"common of $a-$b")
-      assert(r.getLong(3) === da && r.getLong(4) === db, s"deg of $a-$b")
-      val denom = da + db - 2 - common
-      val ppm = if (denom > 0) common * 1000000L / denom else 1000000L
-      assert(r.getLong(5) === ppm, s"ppm of $a-$b")
-    }
-  }
-
   test("llm_entropy_outliers: quantized entropy recomputes per document") {
     import spark.implicits._
     val docs = Tables.documents(spark, sf)

@@ -312,6 +312,44 @@ class StreamingSpec extends SparkSpec {
     assert(gotN === onTime, s"windows should count only on-time rows ($onTime), got $gotN")
   }
 
+  test("stream_late_data and upsertSignatures never change the caller session's conf while they run") {
+    import graft.api.TextPipeline
+    // a caller session of its own, its shuffle partition count unlike the
+    // 4 the late-data stream runs with
+    val caller = spark.newSession()
+    caller.conf.set("spark.sql.shuffle.partitions", "3")
+    import caller.implicits._
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.sources.partitionOverwriteMode")
+    val own = keys.map(k => k -> caller.conf.get(k)).toSet
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, String)]()
+    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val poller = new Thread(() =>
+      while (!stop.get()) keys.foreach(k => seen.add(k -> caller.conf.get(k))))
+    val dir = java.nio.file.Files.createTempDirectory("graft_sig_")
+    val idx = s"$dir/idx"
+    val docs = Tables.documents(caller, sf)
+    val (d0, d1) = (docs.filter($"doc_id" % 16 === 0), docs.filter($"doc_id" % 16 === 1))
+    poller.start()
+    val late = try {
+      val rows = SparkEntry.queries("stream_late_data")(caller, sf).collect()
+      TextPipeline.upsertSignatures(d0, $"doc_id", $"text", idx)
+      TextPipeline.upsertSignatures(d1, $"doc_id", $"text", idx)
+      rows
+    } finally { stop.set(true); poller.join() }
+    try {
+      assert(late.nonEmpty)
+      import scala.jdk.CollectionConverters._
+      assert(seen.asScala.toSet === own)
+      // the overwrite is still dynamic: the second upsert replaced only
+      // its own bucket, so the first batch's rows are all still there
+      def sigs(d: DataFrame) = TextPipeline.minhashSignatures(d, $"doc_id", $"text").count()
+      assert(TextPipeline.loadSignatures(caller, idx).count() === sigs(d0) + sigs(d1))
+    } finally {
+      java.nio.file.Files.walk(dir).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => java.nio.file.Files.delete(p))
+    }
+  }
+
   test("session windows respect the 30-minute gap invariant") {
     val rows = SparkEntry.queries("stream_session")(spark, sf).collect()
     rows.groupBy(_.getLong(0)).foreach { case (_, sess) =>

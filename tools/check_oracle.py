@@ -2,6 +2,7 @@
 """Local pre-flight of the driver's DuckDB correctness gate.
 
 Usage: python3 tools/check_oracle.py <sfDir> <verifyOutDir> [--json out.json] [--procs N]
+                                     [--timeout SECS]
 
 Replicates the driver's compare as documented: for each key in
 oracle_sql.json, register {sfDir}/{table}.parquet as DuckDB views, run the
@@ -16,12 +17,19 @@ Round-14 hardening (the driver's CORRECTNESS_r13.json came back `{}`):
  - per-key results stream to stdout as they land AND (with --json) to an
    incrementally-rewritten JSON artifact, so a truncated run still leaves a
    per-key grade for every key that finished.
+
+With `--timeout SECS`, a key's DuckDB query still running after SECS is
+interrupted (`con.interrupt()` from a timer): it prints `TIMEOUT <key>
+(<secs>s)`, is graded `"status": "timeout"` in the --json artifact and is
+counted apart in the summary line. A timeout is never a pass: the exit code
+is 1 if any key failed or timed out.
 """
 import json
 import math
 import multiprocessing
 import os
 import sys
+import threading
 
 TABLES = "region nation customer supplier part orders lineitem events documents embeddings".split()
 
@@ -38,14 +46,16 @@ _CON = None
 _SF = None
 _OUT = None
 _THREADS = 4
+_TIMEOUT = None
 
 
-def _init(sf_dir, out_dir, duck_threads):
-    global _CON, _SF, _OUT, _THREADS
+def _init(sf_dir, out_dir, duck_threads, timeout):
+    global _CON, _SF, _OUT, _THREADS, _TIMEOUT
     import duckdb
 
     _SF, _OUT = sf_dir, out_dir
     _THREADS = duck_threads
+    _TIMEOUT = timeout
     _CON = duckdb.connect()
     # cap per-connection DuckDB threads: N worker processes each defaulting
     # to all cores oversubscribes the box N-fold and slows the whole sweep
@@ -63,7 +73,8 @@ HEAVY = {"graph_edge_betweenness", "graph_betweenness", "llm_mmr_select",
 
 
 def check_key(item):
-    """Returns (key, status, detail, rows, secs). status in pass|warn|fail."""
+    """Returns (key, status, detail, rows, secs, grade). status in
+    pass|warn|fail|timeout."""
     import time
 
     t0 = time.time()
@@ -85,11 +96,25 @@ def check_key(item):
         grade["err"] = detail or None
         return key, status, detail, rows, round(time.time() - t0, 2), dict(grade)
 
+    fired = threading.Event()
+
+    def interrupt():
+        fired.set()
+        _CON.interrupt()
+
+    timer = threading.Timer(_TIMEOUT, interrupt) if _TIMEOUT else None
     try:
         got = pq.read_table(f"{_OUT}/{key}")
+        if timer:
+            timer.start()
         exp = _CON.execute(sql).fetch_arrow_table()
     except Exception as e:
+        if fired.is_set():
+            return done("timeout", f"timeout after {_TIMEOUT}s", 0)
         return done("fail", f"exec error: {e}", 0)
+    finally:
+        if timer:
+            timer.cancel()
     gcols, ecols = sorted(got.column_names), sorted(exp.column_names)
     if gcols != ecols:
         return done("fail", f"columns spark={gcols} duckdb={ecols}", got.num_rows)
@@ -135,6 +160,7 @@ def main(argv):
     sf_dir, out_dir = argv[0], argv[1]
     json_out = None
     procs = min(8, os.cpu_count() or 4)
+    timeout = None
     i = 2
     while i < len(argv):
         if argv[i] == "--json":
@@ -142,6 +168,9 @@ def main(argv):
             i += 2
         elif argv[i] == "--procs":
             procs = int(argv[i + 1])
+            i += 2
+        elif argv[i] == "--timeout":
+            timeout = float(argv[i + 1])
             i += 2
         else:
             raise SystemExit(f"unknown arg {argv[i]}")
@@ -152,10 +181,13 @@ def main(argv):
                    key=lambda kv: (kv[0] not in HEAVY, -len(kv[1])))
     duck_threads = max(1, (os.cpu_count() or 8) // procs)
     results = {}
-    n_pass = n_fail = 0
-    with multiprocessing.Pool(procs, _init, (sf_dir, out_dir, duck_threads)) as pool:
+    n_pass = n_fail = n_timeout = 0
+    with multiprocessing.Pool(procs, _init, (sf_dir, out_dir, duck_threads, timeout)) as pool:
         for key, status, detail, rows, secs, grade in pool.imap_unordered(check_key, items):
-            if status == "fail":
+            if status == "timeout":
+                n_timeout += 1
+                print(f"TIMEOUT {key} ({secs}s)", flush=True)
+            elif status == "fail":
                 n_fail += 1
                 print(f"FAIL {key}: {detail}", flush=True)
             elif status == "warn":
@@ -172,8 +204,8 @@ def main(argv):
                 with open(json_out + ".tmp", "w") as f:
                     json.dump(dict(sorted(results.items())), f, indent=0)
                 os.replace(json_out + ".tmp", json_out)
-    print(f"== {n_pass} pass, {n_fail} fail, {len(oracles)} total")
-    return 1 if n_fail else 0
+    print(f"== {n_pass} pass, {n_fail} fail, {n_timeout} timeout, {len(oracles)} total")
+    return 1 if n_fail or n_timeout else 0
 
 
 if __name__ == "__main__":
