@@ -30,7 +30,7 @@ object Bench {
     spark.range(1000).count()
     try {
       import spark.implicits._
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
+      val li = Tables.lineitem(spark, sfDir)
       li.groupBy($"l_returnflag").count()
         .join(li.limit(1), Seq("l_returnflag"), "left").count()
       val vs = spark.sparkContext.parallelize(Seq((1L, 1), (2L, 1)))

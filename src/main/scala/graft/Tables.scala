@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions.{col, expr, lit}
 import org.apache.spark.sql.types.StructType
 
 /** Canonical loaders for the driver-generated parquet tables
-  * (schemas documented in FIXTURES.md; verified from parquet footers).
+  * (schemas documented in FIXTURES.md and declared here).
   *
   * All loaders take the scale-factor directory so every operator stays a pure
   * `(SparkSession, String) => DataFrame` (SURVEY.md §7). Reads go through
@@ -19,8 +19,40 @@ import org.apache.spark.sql.types.StructType
   * its own pruned scan).
   */
 object Tables {
-  def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** The row shape of every fixture [[t]] reads, exactly as schema inference
+    * over the parquet footers gives it (FIXTURES.md): the driver writes the
+    * TPC-H dates unadjusted-to-UTC, so they are TIMESTAMP_NTZ, and every
+    * column is nullable. Declaring it takes inference's schema job off
+    * every resolution; SourceSpec checks each declaration against the
+    * footers of every scale dir.
+    */
+  private val declared: Map[String, StructType] = Map(
+    "region" -> "r_regionkey INT, r_name STRING",
+    "nation" -> "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer" -> ("c_custkey BIGINT, c_name STRING, c_nationkey INT, " +
+      "c_acctbal DOUBLE, c_mktsegment STRING"),
+    "supplier" -> "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE",
+    "part" -> ("p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING, " +
+      "p_size INT, p_retailprice DOUBLE"),
+    "orders" -> ("o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING, " +
+      "o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ, o_orderpriority STRING"),
+    "lineitem" -> ("l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT, " +
+      "l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE, l_discount DOUBLE, " +
+      "l_tax DOUBLE, l_returnflag STRING, l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"),
+    "documents" -> "doc_id BIGINT, text STRING, lang STRING, source STRING, n_chars BIGINT",
+    "embeddings" -> "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT"
+  ).map { case (name, ddl) => name -> StructType.fromDDL(ddl) }
+
+  /** The fixture `name` under the scale-factor dir `dir`, read with its
+    * declared schema: resolving it runs no Spark job. A name without a
+    * declaration throws; `events` has its own loader ([[events]]).
+    */
+  def t(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val schema = declared.getOrElse(name, throw new IllegalArgumentException(
+      s"Tables.t: no declared schema for table '$name' (declared: " +
+        s"${declared.keys.toSeq.sorted.mkString(", ")})"))
+    spark.read.schema(schema).parquet(s"$dir/$name.parquet")
+  }
 
   def region(s: SparkSession, d: String): DataFrame     = t(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame     = t(s, d, "nation")

@@ -420,24 +420,43 @@ object GraphAlgebra {
 
   /** The kernel's driver arrays of the (id, x) `rows` — ids ascending and
     * their values — when there are at most `maxRows` rows (capped at the
-    * Int index range) with unique ids; otherwise the row count. The count
-    * and the collect are two jobs over ONE RDD, so a shuffle below `rows`
-    * runs once.
+    * Int index range) with unique ids; otherwise the row count. ONE job
+    * returns each partition's row count, and its rows too while that count
+    * is within the partition's share ⌈gate ÷ partitions⌉, so the driver
+    * never holds more than the gate; only a total within the gate that one
+    * partition held over its share runs a second, collecting job.
     */
-  private def driverArrays(rows: DataFrame, maxRows: Long)
+  private[graft] def driverArrays(rows: DataFrame, maxRows: Long)
       : Either[Long, (Array[Long], Array[Long])] = {
     val sc = rows.sparkSession.sparkContext
     val rdd = rows.select(rows.columns.toSeq.map(c => col(c).cast("long")): _*)
       .queryExecution.toRdd
-    val n = sc.runJob(rdd, (it: Iterator[InternalRow]) => it.size.toLong).sum
-    if (n > math.min(maxRows, Int.MaxValue)) return Left(n)
-    val parts = sc.runJob(rdd, (it: Iterator[InternalRow]) =>
-      it.map(r => (r.getLong(0), r.getLong(1))).toArray)
-    val ids = parts.flatMap(_.map(_._1))
+    val gate = math.min(maxRows, Int.MaxValue.toLong)
+    val share = (gate + rdd.getNumPartitions - 1) / math.max(rdd.getNumPartitions, 1)
+    // a partition's row count, and its rows as (id, x) pairs laid out flat
+    // when that count is within `cap` (else null)
+    def take(cap: Long) = (it: Iterator[InternalRow]) => {
+      var n = 0L
+      var kept = new scala.collection.mutable.ArrayBuilder.ofLong
+      for (r <- it) {
+        n += 1
+        if (n > cap) kept = null
+        else kept.addOne(r.getLong(0)).addOne(r.getLong(1))
+      }
+      (n, if (kept == null) null else kept.result())
+    }
+    val counted = sc.runJob(rdd, take(share))
+    val n = counted.map(_._1).sum
+    if (n > gate) return Left(n)
+    val parts =
+      if (counted.forall(_._2 != null)) counted.map(_._2)
+      else sc.runJob(rdd, take(gate)).map(_._2)
+    val ids = parts.flatMap(p => Array.tabulate(p.length / 2)(i => p(2 * i)))
     java.util.Arrays.sort(ids)
     if (ids.indices.exists(i => i > 0 && ids(i) == ids(i - 1))) return Left(n)
     val x = new Array[Long](ids.length)
-    for (p <- parts; (v, d) <- p) x(java.util.Arrays.binarySearch(ids, v)) = d
+    for (p <- parts; i <- 0 until p.length by 2)
+      x(java.util.Arrays.binarySearch(ids, p(i))) = p(i + 1)
     Right((ids, x))
   }
 

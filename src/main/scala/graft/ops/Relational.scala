@@ -3167,8 +3167,8 @@ object Relational {
   val srcPkAudit: Q = (s, dir) => {
     import s.implicits._
     def audit(name: String, keys: Seq[String]): DataFrame =
-      Tables.t(s, dir, name).agg(count(lit(1)).as("n_rows"),
-          countDistinct(keys.head, keys.tail: _*).as("n_keys"))
+      (if (name == "events") Tables.events(s, dir) else Tables.t(s, dir, name))
+        .agg(count(lit(1)).as("n_rows"), countDistinct(keys.head, keys.tail: _*).as("n_keys"))
         .select(lit(name).as("table_name"), $"n_rows", $"n_keys",
           ($"n_rows" - $"n_keys").as("dup_rows"))
     Seq(

@@ -1336,6 +1336,29 @@ class GraphSpec extends SparkSpec {
     assert(jobs.size <= n + 6, s"${jobs.size} jobs for $n rounds")
   }
 
+  test("driverArrays: one job while every partition is within its share of the gate") {
+    import spark.implicits._
+    // two partitions of 9 and 1 rows: at gate 20 each is within its share
+    // of 10; at gate 10 the first is over its share of 5, so a second job
+    // collects; at gate 9 the total is over the gate
+    def frame(parts: Seq[(Long, Long)]*) =
+      spark.sparkContext.parallelize(parts, parts.size).flatMap(identity).toDF("id", "x")
+    val rows = frame((0L until 9L).map(i => (9L - i, 10 * i)), Seq((100L, -1L)))
+    val want = (Array(1L, 2L, 3L, 4L, 5L, 6L, 7L, 8L, 9L, 100L),
+      Array(80L, 70L, 60L, 50L, 40L, 30L, 20L, 10L, 0L, -1L))
+    def run(gate: Long) = {
+      var got: Either[Long, (Array[Long], Array[Long])] = null
+      val (jobs, _) = sparkEventsDuring { got = api.GraphAlgebra.driverArrays(rows, gate) }
+      (got.map { case (ids, x) => (ids.toSeq, x.toSeq) }, jobs.size)
+    }
+    val ok = Right((want._1.toSeq, want._2.toSeq))
+    assert(run(20L) === (ok, 1))
+    assert(run(10L) === (ok, 2))
+    assert(run(9L) === (Left(10L), 1))
+    val dup = frame((0L until 9L).map(i => (9L - i, 10 * i)), Seq((100L, -1L)), Seq((5L, 0L)))
+    assert(api.GraphAlgebra.driverArrays(dup, 20L) === Left(11L))
+  }
+
   /** Seeded random directed edges over ids 0 until n with duplicate rows,
     * self-loops and edges from and to ids the vertex set lacks; the ids n
     * and n + 1 are vertices that no edge touches.

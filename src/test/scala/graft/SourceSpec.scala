@@ -107,9 +107,9 @@ class SourceSpec extends SparkSpec {
     // happened; this one catches the rest of the space — a regen that
     // renames, retypes, reorders or adds columns on ANY table fails here
     // naming the exact diff, instead of failing oracle rows downstream.
-    // Timestamp flavors (TIMESTAMP vs TIMESTAMP_NTZ — the driver writes
-    // unadjusted-to-UTC, inference may pick either) normalize to one token:
-    // operators only ever see them through the UTC-pinned session.
+    // Timestamp flavors (TIMESTAMP vs TIMESTAMP_NTZ) normalize to one token:
+    // operators only ever see them through the UTC-pinned session. The exact
+    // types of the declared fixtures are checked against their footers below.
     def norm(dt: DataType): String = dt match {
       case TimestampType | TimestampNTZType => "timestamp"
       case ArrayType(e, _)                  => s"array<${norm(e)}>"
@@ -141,6 +141,38 @@ class SourceSpec extends SparkSpec {
         s"table '$name' schema drifted under a testdata regen:\n  found    $got\n" +
           s"  expected $want\nupdate FIXTURES.md + the affected loaders/ops together")
     }
+  }
+
+  /** The fixtures `Tables.t` reads with a declared schema. */
+  private val declaredFixtures = Seq("region", "nation", "customer", "supplier", "part",
+    "orders", "lineitem", "documents", "embeddings")
+
+  test("schema drift guard: every declared fixture schema equals its parquet footers' at every scale") {
+    // Tables.t reads with a declared schema, so the guard above only sees
+    // the declaration; here each file's own footers are inferred and must
+    // equal it exactly, timestamp flavour and nullability included — a
+    // regen that changes any column type fails here instead of being read
+    // with the declared one
+    val scales = new java.io.File(sf).getParentFile.listFiles()
+      .filter(f => f.isDirectory && f.getName.startsWith("sf")).map(_.getPath).sorted.toSeq
+    assert(scales.size >= 3, s"expected the sf0.001/sf0.01/sf0.1 fixtures, found $scales")
+    for (dir <- scales; name <- declaredFixtures) {
+      val inferred = spark.read.parquet(s"$dir/$name.parquet").schema
+      val declared = Tables.t(spark, dir, name).schema
+      assert(inferred == declared,
+        s"$dir/$name.parquet footers no longer match the declaration in Tables:\n" +
+          s"  footers  ${inferred.toDDL}\n  declared ${declared.toDDL}")
+    }
+    val e = intercept[IllegalArgumentException](Tables.t(spark, sf, "events"))
+    assert(e.getMessage.contains("'events'"), e.getMessage)
+  }
+
+  test("fixture resolution runs no Spark job: every declared table and the sql_q3/sql_q5 frames") {
+    val (jobs, _) = sparkEventsDuring {
+      declaredFixtures.foreach(name => Tables.t(spark, sf, name))
+      Seq("sql_q3", "sql_q5").foreach(k => SparkEntry.queries(k)(spark, sf))
+    }
+    assert(jobs.isEmpty, s"${jobs.size} Spark jobs while resolving fixtures")
   }
 
   test("json round-trip: nested struct survives with explicit schema") {

@@ -11,7 +11,9 @@ call's jobs running), the shuffle bytes its stages read and its executor
 GC time, and its jobs grouped by call site: per site the job count, the
 summed job wall time, the summed executor GC time and the shuffle bytes
 the sites' stages wrote. A job's call site is the name of its last stage ("runJob at GraphAlgebra.scala:402"), which is where the program
-submitted it. Jobs that Spark submitted from a pool thread (adaptive query
+submitted it. A closing line per run sums the jobs of all its calls by call
+site, with the fixture-resolution jobs (`Tables.scala`) always named, zero
+included. Jobs that Spark submitted from a pool thread (adaptive query
 stages, broadcasts) or whose last stage was skipped show the file-level
 site perfbench attributed them to, marked "(pool thread)". The script only
 reads perfbench's output.
@@ -71,7 +73,10 @@ def report(out_dir):
             shuffle_read[e["job_id"]] += e["shuffle_read_bytes"]
             shuffle_write[e["job_id"]] += e["shuffle_write_bytes"]
             gc_ms[e["job_id"]] += e["gc_ms"]
+    total_by_site, n_calls = collections.Counter(), 0
     for key, q, build, jobs in calls(trace):
+        n_calls += 1
+        total_by_site.update(site for site, _ in jobs)
         wall = q["end_ms"] - q["start_ms"]
         build_ms = build["end_ms"] - build["start_ms"] if build else float("nan")
         busy = union_ms([(j["start_ms"], j["end_ms"]) for _, j in jobs],
@@ -91,6 +96,10 @@ def report(out_dir):
         for site, (n, ms, gc, sw) in sorted(by_site.items(), key=lambda kv: -kv[1][1]):
             print(f"    {n:4d} jobs {ms:8.0f} ms  gc {gc:6.0f} ms  "
                   f"shuffle write {sw / 1e6:6.1f} MB  {site}")
+    tables = sum(n for site, n in total_by_site.items() if "Tables.scala" in site)
+    print(f"total over {n_calls} calls: {sum(total_by_site.values())} jobs, "
+          f"Tables.scala: {tables}; by site: "
+          + ", ".join(f"{site}: {n}" for site, n in total_by_site.most_common()))
 
 
 def main(argv):
